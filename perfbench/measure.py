@@ -17,10 +17,6 @@ from contextlib import contextmanager
 
 _CLK_TCK = os.sysconf("SC_CLK_TCK")
 
-# Percentiles the tail rule may pick from, highest last.
-_TAIL_LADDER = (50.0, 90.0, 95.0, 99.0, 99.9)
-
-
 def _rank(n: int, p: float) -> int:
     # the 1e-9 keeps 90% of 100 at rank 90 despite binary rounding
     return max(1, math.ceil(p * n / 100.0 - 1e-9))
@@ -34,20 +30,11 @@ def percentile(values, p: float) -> float:
     return sorted(values)[_rank(len(values), p) - 1]
 
 
-def tail_percentile(n: int) -> float | None:
-    """The highest percentile on the ladder that leaves at least ten of
-    ``n`` samples beyond it, or None when not even the median does."""
-    best = None
-    for p in _TAIL_LADDER:
-        if n - _rank(n, p) >= 10:
-            best = p
-    return best
-
-
 def p90_or_zero(values) -> float:
-    """p90 when at least ten samples lie beyond it, else 0 (not enough
-    samples for that tail; see README)."""
-    if (tail_percentile(len(values)) or 0.0) < 90.0:
+    """p90 when at least ten samples lie beyond it, else 0 (too few
+    samples for that tail)."""
+    n = len(values)
+    if n - _rank(n, 90.0) < 10:
         return 0.0
     return percentile(values, 90.0)
 

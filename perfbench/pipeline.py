@@ -4,13 +4,12 @@ Inputs are small (the sf0.001 sizes of the ``documents`` and ``embeddings``
 fixtures, generated from the seed), so each query's fixed cost dominates:
 ``load_table`` schema inference, DataFrame construction on the driver and
 the number of Spark jobs an action launches. Each op builds one query from
-``QUERIES`` and forces it with ``toPandas()``; the chain repeats in a
-closed loop with one client.
+``QUERIES`` and forces it with ``toPandas()``; a pass is the chain of nine
+ops, and passes repeat in a closed loop with one client.
 
-A pass is reported as a whole: its cost is the sum over the nine queries
-of each query's median time across the passes of the run, never a
-percentile taken across different queries (a p90 over nine different
-queries is just the slowest query).
+A pass is reported as a whole (``pass_s``), never as a percentile taken
+across different queries: a p90 over nine different queries is just the
+slowest query.
 """
 
 from __future__ import annotations
@@ -49,14 +48,12 @@ def run(ctx) -> dict:
     sf_dir = os.path.join(ctx.work, "sf")
     gen.write_fixtures(ctx.seed, sf_dir, N_DOCS, N_EMB)
 
-    harvests: list = []
-
-    def one_pass(tag: str, trace: bool):
-        """Run the chain once; per query (ms, pandas result)."""
+    def one_pass(tag: str):
+        """Run the chain once; per query (df ms, action ms, pandas result)."""
         out = {}
         for q in CHAIN:
             oid = f"{tag}.{q}"
-            if trace and ctx.status:
+            if ctx.status:
                 ctx.status.set_group(oid)
             t0 = time.perf_counter()
             with tr.span("op", oid):
@@ -65,55 +62,54 @@ def run(ctx) -> dict:
                 t1 = time.perf_counter()
                 with tr.span(f"pipeline.{q}.action", oid):
                     pdf = df.toPandas()
-            t2 = time.perf_counter()
-            out[q] = ((t2 - t0) * 1e3, (t1 - t0) * 1e3, (t2 - t1) * 1e3, pdf)
-            if trace and ctx.status:
-                ctx.status.set_group("pipeline-between")
-                t = time.perf_counter()
-                harvests.append((ctx.status.harvest(oid), (t2 - t1)))
-                tr.overhead_s += time.perf_counter() - t
+            out[q] = ((t1 - t0) * 1e3, (time.perf_counter() - t1) * 1e3, pdf)
         return out
 
-    # the warm-up pass is also the oracle gate: every query against its DuckDB twin
-    con = duckdb_connection(sf_dir)
-    first = one_pass("warm0", False)
-    expected = {}
-    for q in CHAIN:
-        ctx.attempted += 1
-        res = compare(q, _Collected(first[q][3]), con, ORACLE_SQL[q])
-        if not res.ok:
-            ctx.fail(str(res))
-        expected[q] = canonicalize(first[q][3])
-    con.close()
+    # warm-up: the first pass pays code generation and python worker start
+    first = one_pass("warm0")
     ctx.mark_setup_done()
 
-    # ---------------------------------------------------------- timed pass
-    passes = []
+    # ---------------------------------------------------------- timed window
+    passes, walls = [], []
     with PassMeter() as pm:
         deadline = pm.t0 + ctx.seconds
         while time.perf_counter() < deadline:
-            passes.append(one_pass(f"p{len(passes)}", True))
-    ctx.pass_meter = pm
+            t = time.perf_counter()
+            passes.append(one_pass(f"p{len(passes)}"))
+            walls.append(time.perf_counter() - t)
+    ctx.record_window(pm, walls)
+    if ctx.status:
+        ctx.status.set_group("pipeline-after")
 
+    # ---------------------------------------------------------- checks
+    # every query of the warm-up pass against its DuckDB twin, then every
+    # timed result against the oracle-checked one
+    con = duckdb_connection(sf_dir)
+    expected = {}
+    for q in CHAIN:
+        ctx.attempted += 1
+        res = compare(q, _Collected(first[q][2]), con, ORACLE_SQL[q])
+        if not res.ok:
+            ctx.fail(str(res))
+        expected[q] = canonicalize(first[q][2])
+    con.close()
     for p in passes:
         for q in CHAIN:
             ctx.attempted += 1
-            if not canonicalize(p[q][3]).equals(expected[q]):
+            if not canonicalize(p[q][2]).equals(expected[q]):
                 ctx.fail(f"{q}: result differs from the oracle-checked one")
-    per_query = {q: median([p[q][0] for p in passes]) for q in CHAIN}
+    if not ctx.status:
+        return m
+
+    # ---------------------------------------------------------- layers
     for q in CHAIN:
-        m[f"pipeline.{q}.df_ms"] = median([p[q][1] for p in passes])
-        m[f"pipeline.{q}.action_ms"] = median([p[q][2] for p in passes])
-    n_ops = len(passes) * len(CHAIN)
-    ctx.end_to_end.update(
-        op_p50_ms=sum(per_query.values()),
-        qps=n_ops / pm.wall_s,
-        cpu_ms_per_op=pm.cpu_s * 1e3 / n_ops,
-    )
-    if harvests:
-        tot = {k: sum(h[k] for h, _ in harvests) for k in harvests[0][0]}
-        for key, v in ctx.spark_per_op(tot, len(harvests), sum(w for _, w in harvests)).items():
-            m[key] = v
+        m[f"pipeline.{q}.df_ms"] = median([p[q][0] for p in passes])
+        m[f"pipeline.{q}.action_ms"] = median([p[q][1] for p in passes])
+    # Spark costs of the timed ops, read after the window closed
+    harvests = [ctx.status.harvest(f"p{i}.{q}") for i in range(len(passes)) for q in CHAIN]
+    tot = {k: sum(h[k] for h in harvests) for k in harvests[0]}
+    action_s = sum(p[q][1] for p in passes for q in CHAIN) / 1e3
+    m.update(ctx.spark_per_op(tot, len(harvests), action_s))
 
     # fixtures layer: the schema-inferring table load every query starts with
     load_ms = []

@@ -21,7 +21,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 sys.path.insert(0, ROOT)
 
 from perfbench import gen, measure  # noqa: E402
-from perfbench.serve import pool_filters  # noqa: E402
+from perfbench.serve import BATCH, FILTER_KINDS, N_CORPUS, N_FILTERED, POOL, filtered_queries  # noqa: E402
 
 NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
 UNIT = re.compile(r"^[A-Za-z0-9_/%.-]{1,16}$")
@@ -64,7 +64,7 @@ def test_a_different_seed_gives_different_inputs_of_the_same_shape():
     assert a.vectors(ids).shape == b.vectors(ids).shape
     assert not np.array_equal(a.vectors(ids), b.vectors(ids))
     assert gen.documents(1, 50)["text"] != gen.documents(2, 50)["text"]
-    assert pool_filters(1) != pool_filters(2)
+    assert filtered_queries(1, "disp", 20)[1] != filtered_queries(2, "disp", 20)[1]
     assert not np.array_equal(gen.embeddings(1, 10)["embedding"], gen.embeddings(2, 10)["embedding"])
 
 
@@ -73,30 +73,32 @@ def test_the_same_seed_gives_the_same_inputs():
     assert all(np.array_equal(np.asarray(a[k]), np.asarray(b[k])) for k in a)
     np.testing.assert_array_equal(gen.VectorSet(4, 9).vectors(np.arange(20)),
                                   gen.VectorSet(4, 9).vectors(np.arange(20)))
-    assert pool_filters(4) == pool_filters(4)
+    assert filtered_queries(4, "corr", 20)[1] == filtered_queries(4, "corr", 20)[1]
 
 
-def test_pool_filter_shares():
-    kinds = [k for k, _, _ in pool_filters(9)]
-    assert kinds.count("none") / len(kinds) == pytest.approx(0.8, abs=0.01)
-    assert kinds.count("corr") / len(kinds) == pytest.approx(0.1, abs=0.01)
+def test_filtered_queries_are_held_out_and_of_one_kind():
+    seen = set()
+    for kind, (col, n_values) in FILTER_KINDS.items():
+        ids, flts = filtered_queries(9, kind, max(N_FILTERED))
+        assert ids.min() >= N_CORPUS + POOL + BATCH  # beyond the corpus, pool and batch
+        assert {(k, c) for k, c, _ in flts} == {(kind, col)}
+        assert all(0 <= v < n_values for _, _, v in flts)
+        # a prefix of the traced set is the untraced set
+        assert filtered_queries(9, kind, min(N_FILTERED))[1] == flts[:min(N_FILTERED)]
+        seen.update(ids.tolist())
+    assert len(seen) == len(FILTER_KINDS) * max(N_FILTERED)
 
 
 # ---------------------------------------------------------------- percentile rule
 
 
-def test_tail_percentile_leaves_ten_samples_beyond():
-    assert measure.tail_percentile(19) is None
-    assert measure.tail_percentile(20) == 50.0
-    assert measure.tail_percentile(99) == 50.0
-    assert measure.tail_percentile(100) == 90.0
-    assert measure.tail_percentile(199) == 90.0
-    assert measure.tail_percentile(200) == 95.0
-    assert measure.tail_percentile(1000) == 99.0
-    for n in (20, 57, 100, 250, 1000, 12345):
-        p = measure.tail_percentile(n)
+def test_p90_needs_ten_samples_beyond_it():
+    assert measure.p90_or_zero(list(range(99))) == 0.0
+    for n in (100, 137, 1000):
         values = list(range(n))
-        assert sum(v > measure.percentile(values, p) for v in values) >= 10
+        p90 = measure.p90_or_zero(values)
+        assert p90 == measure.percentile(values, 90.0)
+        assert sum(v > p90 for v in values) >= 10
 
 
 def test_percentiles():
@@ -105,7 +107,6 @@ def test_percentiles():
     assert measure.percentile(vals, 50) == 50
     assert measure.median([3, 1, 2]) == 2
     assert measure.median([4, 1, 2, 3]) == 2.5
-    assert measure.p90_or_zero(list(range(99))) == 0.0
     assert measure.p90_or_zero(list(range(1, 101))) == 90
 
 

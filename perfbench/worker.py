@@ -41,13 +41,20 @@ class Context:
         self.attempted = 0
         self.failed = 0
         self.errors: list[str] = []
-        self.end_to_end: dict = {}  # the timed pass's figures
+        self.window: dict = {}  # pass_s and cpu_s of the timed window
         self.setup_s = None
         self.pass_meter = None
 
     def mark_setup_done(self) -> None:
         self.setup_s = time.perf_counter() - _T_START
         self.log("set-up done")
+
+    def record_window(self, pm, pass_walls: list[float]) -> None:
+        """The timed window's figures: the median wall time of one pass (a
+        fixed amount of work) and the process tree's CPU per pass."""
+        self.pass_meter = pm
+        self.window["pass_s"] = measure.median(pass_walls)
+        self.window["cpu_s"] = pm.cpu_s / len(pass_walls)
 
     def log(self, what: str) -> None:
         print(f"[perfbench {time.perf_counter() - _T_START:7.2f}s] {what}", file=sys.stderr, flush=True)
@@ -78,17 +85,13 @@ class Context:
 def start_spark(work: str):
     from webscale_vector_search_spark.session import get_spark
 
-    # Deployment settings, not engine knobs. A 3 GB heap instead of the
-    # package's 16 GB default: the inputs are small and the box is shared.
-    # C1-only JIT: every run is a fresh JVM measured within its first
-    # minute, where background C2 compilation competed with the work for the
-    # 4 cores and made pass times vary by 17% between runs (4% with C1).
+    # The package's own session settings; only scratch locations are set
+    # here, so that a run writes inside its work directory.
     return get_spark(
         app_name="perfbench",
         extra_conf={
-            "spark.driver.memory": "3g",
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-            "spark.driver.extraJavaOptions": f"-XX:TieredStopAtLevel=1 -Djava.io.tmpdir={work} -Dderby.system.home={work}",
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work} -Dderby.system.home={work}",
         },
     )
 
@@ -119,16 +122,18 @@ def main(argv=None) -> int:
         spark.stop()
 
     pm = ctx.pass_meter
-    ctx.log(f"pass {pm.wall_s:.2f} s, tree cpu {pm.cpu_s:.2f} s, steal {pm.steal_ratio:.3f}")
-    ctx.end_to_end.update(setup_s=ctx.setup_s, peak_rss_mb=pm.peak_rss_mb)
+    ctx.log(f"timed window {pm.wall_s:.2f} s, tree cpu {pm.cpu_s:.2f} s, steal {pm.steal_ratio:.3f}; "
+            f"pass_s {ctx.window['pass_s']:.4f}, cpu_s {ctx.window['cpu_s']:.4f}")
+    end_to_end = {"setup_s": ctx.setup_s}
+    layers.update(ctx.window)
     layers.update(measure.box_shape(args.work))
+    layers["peak_rss_mb"] = pm.peak_rss_mb
     layers["session.get_spark_s"] = get_spark_s
     layers["box.steal_ratio"] = pm.steal_ratio
     if args.trace:
         ops = ctx.tracer.self_times_ms().get("op", [])
         layers["trace.op_self_ms"] = measure.median(ops) if ops else 0.0
         layers["trace.overhead_ratio"] = ctx.tracer.overhead_s / pm.wall_s
-        layers.update(ctx.end_to_end)
         ctx.tracer.dump(os.path.join(ROOT, "perfbench", ".out",
                                      f"spans-{args.workload}-{args.seed}.jsonl"))
 
@@ -136,7 +141,7 @@ def main(argv=None) -> int:
     metrics, missing = {}, []
     for decl in spec[kind]:
         name = decl["name"]
-        src = layers if args.trace else ctx.end_to_end
+        src = layers if args.trace else end_to_end
         if name in src:
             value = float(src[name])
         elif args.trace:
