@@ -124,50 +124,6 @@ def _quick_probe(io_dir: str) -> dict:
     return {"gemm_sec": round(gemm, 4), "io_sec": round(io, 4)}
 
 
-def _curve_vs_fresh(spark, handle, corpus, q_ids, Q, k: int) -> dict | None:
-    """Receipt for the held-out profiling protocol (VERDICT r12 ask #1):
-    the stored ef curve's reading at each measured rung vs the recall of
-    GENUINELY FRESH queries (same generator, ids beyond the corpus) served
-    at that rung against exact ground truth. `gap` > 0 means the curve
-    still over-promises; the held-out protocol should hold every gap
-    within sample noise (the in-corpus protocol measured +0.02 at the
-    clustered 512-d arm — the r12 finding this receipt tracks)."""
-    from webscale_vector_search_spark.operators.ivf import recall_at_k
-    from webscale_vector_search_spark.operators.knn import knn_pandas
-    from webscale_vector_search_spark.plans.build import search_index
-    from webscale_vector_search_spark.sources.recall_curve import load_curve_pdf
-
-    pdf = load_curve_pdf(handle)
-    if pdf is None or "ef" not in pdf.columns:
-        return None
-    queries = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in zip(q_ids, Q)],
-        "query_id BIGINT, qvec ARRAY<FLOAT>",
-    ).cache()
-    queries.count()
-    exact = knn_pandas(corpus.select("vec_id", "embedding"), queries, k=k).cache()
-    exact.count()
-    rows = []
-    for ef, cr in zip(pdf["ef"].tolist(), pdf["recall"].tolist()):
-        res = search_index(spark, handle, queries, k=k, ef_search=int(ef))
-        fr = recall_at_k(res, exact, k=k)
-        rows.append(
-            {
-                "ef": int(ef),
-                "curve": round(float(cr), 4),
-                "fresh": round(fr, 4),
-                "gap": round(float(cr) - fr, 4),
-            }
-        )
-    exact.unpersist()
-    queries.unpersist()
-    return {
-        "n_fresh_queries": int(len(q_ids)),
-        "rows": rows,
-        "max_curve_overshoot": max(r["gap"] for r in rows),
-    }
-
-
 def _timed(fn, warmups: int = 1, runs: int = 3):
     """min-of-N wall clock for a DataFrame-producing thunk (the ONE timing
     policy every tier shares). Warm-ups pay JIT/scan caches (HNSW arms use
@@ -328,11 +284,8 @@ def _ann_tier(spark, n: int, cache_dir: str) -> tuple[dict, dict]:
             json.dump(build_secs, f)
 
     # backfill any curve-less cached artifact + remediate profile_stale
-    # flags. r14: protocol UPGRADES (in-corpus -> held-out re-profiles) no
-    # longer run implicitly here — the r13 sweep re-measured every cached
-    # index inside the driver's timed window and broke the JSON contract
-    # (VERDICT r13 #1/#5); opt in with SPARK_GRAFT_PROFILE_UPGRADE=1 or
-    # tools/upgrade_profiles.py out-of-band.
+    # flags (an in-corpus curve with current knobs is kept, not re-measured
+    # inside the timed window).
     from webscale_vector_search_spark.sources.recall_curve import (
         ensure_recall_curve as _ensure_curve,
     )
@@ -359,52 +312,12 @@ def _ann_tier(spark, n: int, cache_dir: str) -> tuple[dict, dict]:
 
     timed = _timed
 
-    # runs=4 on the FLAT arm: r7's q_ann1m_flat moved +64% against a ~38%
-    # calibration-drift envelope on min-of-3 — one extra repetition costs
-    # ~5 s and resolves whether that was sampling noise (VERDICT r7 #4).
-    # r9 then measured 5.11→12.47 s on unchanged kernel code — probes
-    # IMMEDIATELY adjacent to this arm attribute any such swing to the box
-    # (or finally convict the plan) per VERDICT r9 #4.
+    # runs=4 on the FLAT arm, the run's most position-sensitive number:
+    # min-of-4 damps sampling noise, and the probes IMMEDIATELY adjacent
+    # to it attribute any remaining swing to the box or to the plan.
     probe_pre_flat = _quick_probe(cache_dir)
-    flat_inrun_sec, exact = timed(lambda: knn_pandas(corpus, queries, k=k), runs=4)
+    flat_sec, exact = timed(lambda: knn_pandas(corpus, queries, k=k), runs=4)
     probe_post_flat = _quick_probe(cache_dir)
-    # The fresh-process ISOLATED flat protocol (VERDICT r12 #1; a fresh
-    # python + fresh JVM subprocess, tools/isolated_flat.py, min-of-3 with
-    # bracketing probes) is OPT-IN via SPARK_GRAFT_FLAT_ISOLATED=1: its up-
-    # to-900 s subprocess ran before the JSON line printed and contributed
-    # to the r13 driver timeout (VERDICT r13 #1 — both runs rc=124, zero
-    # numbers recorded). Default flat_sec is the in-run min-of-4 with
-    # adjacent probes (the r1-r12 methodology); when the env flag is set
-    # the isolated number takes over and both are recorded.
-    flat_isolated = None
-    if (
-        n == 1_000_000
-        and os.environ.get("SPARK_GRAFT_FLAT_ISOLATED", "0") == "1"
-    ):  # SCALE.md: the run's most position-sensitive arm
-        import subprocess
-
-        try:
-            out_txt = subprocess.run(
-                [
-                    sys.executable,
-                    os.path.join(
-                        os.path.dirname(os.path.abspath(__file__)),
-                        "tools", "isolated_flat.py",
-                    ),
-                    corpus_path, str(n), str(ncl), str(seed),
-                    str(n_queries), str(k),
-                ],
-                capture_output=True, text=True, timeout=900,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            ).stdout.strip().splitlines()
-            flat_isolated = json.loads(out_txt[-1]) if out_txt else None
-        except Exception as exc:  # the in-run number still stands
-            flat_isolated = {"error": str(exc)[:200]}
-    flat_sec = (
-        flat_isolated["flat_sec"]
-        if flat_isolated and "flat_sec" in flat_isolated
-        else flat_inrun_sec
-    )
     ivf_sec, ivf = timed(
         lambda: search_index(spark, ivf_handle, queries, k=k, nprobe=nprobe)
     )
@@ -579,8 +492,6 @@ def _ann_tier(spark, n: int, cache_dir: str) -> tuple[dict, dict]:
         "pq_m": pq_cfg.resolved_pq_m(),
         "pq_bits": pq_cfg.pq_bits,
         "flat_sec": flat_sec,
-        "flat_sec_inrun": flat_inrun_sec,
-        "flat_isolated": flat_isolated,
         "ivf_sec": ivf_sec,
         "ivf_recall": round(recall_at_k(ivf, exact, k=k), 4),
         "ivfpq_sec": pq_sec,
@@ -735,7 +646,7 @@ def _ann_filtered_maint(spark, cache_dir: str) -> tuple[dict, dict]:
     from webscale_vector_search_spark.config import default_nprobe
 
     auto_np = plan_nprobe(
-        handle, default_nprobe(nlist, "IVF"), k, where=WHERE, spark=spark,
+        handle, default_nprobe(nlist), k, where=WHERE, spark=spark,
         Q=qvecs.astype("float64"),
     )
     # filtered exact oracle (one pass, not timed as an arm)
@@ -1299,8 +1210,7 @@ def _ann_10m(spark, cache_dir: str) -> tuple[dict, dict]:
         with open(builds_file, "w") as f:
             json.dump(build_secs, f)
 
-    # backfill curve-less cached artifacts / remediate stale flags only —
-    # protocol upgrades are opt-in since r14 (VERDICT r13 #1/#5)
+    # backfill curve-less cached artifacts / remediate stale flags only
     from webscale_vector_search_spark.sources.recall_curve import (
         ensure_recall_curve as _ensure_curve,
     )
@@ -1413,22 +1323,6 @@ def _ann_10m(spark, cache_dir: str) -> tuple[dict, dict]:
         ),
         "hnsw_1q_default_ef": hnsw_default_ef,
     }
-    # held-out calibration receipt at 10M (VERDICT r12 ask #1 "Done"): the
-    # stored ef curve vs 64 genuinely fresh queries (ids beyond the corpus,
-    # same generator) — one extra exact pass + one serve per rung. OPT-IN
-    # (SPARK_GRAFT_CURVE_RECEIPTS=1): the extra 10M exact pass + 6-rung
-    # serve ladder ran before the JSON line printed and contributed to the
-    # r13 driver timeout (VERDICT r13 #1); the receipt was captured at the
-    # r13 builder run and is protocol validation, not a per-round number.
-    if os.environ.get("SPARK_GRAFT_CURVE_RECEIPTS", "0") == "1":
-        fresh_ids = n + np.arange(64, dtype=np.int64)
-        curve_vs_fresh = _curve_vs_fresh(
-            spark, hnsw_handle, corpus, fresh_ids,
-            _ann_vectors(fresh_ids, centers, seed), k,
-        )
-    else:
-        curve_vs_fresh = {"skipped": "SPARK_GRAFT_CURVE_RECEIPTS=1 to measure"}
-
     # reap the pinned per-shard graph workers: they survive the serve block
     # otherwise and compete with every later arm in the run (the r8 capped
     # mis-measurement's environment)
@@ -1466,7 +1360,6 @@ def _ann_10m(spark, cache_dir: str) -> tuple[dict, dict]:
         "hnsw_ef128_sec": hnsw128_sec,
         "hnsw_ef128_recall": round(recall_at_k(hnsw128, exact, k=k), 4),
         "hnsw_shards": 16,
-        "hnsw_curve_vs_fresh": curve_vs_fresh,
         "serve_local": serve,
         "skew": skew,
         "ivf_capped": {
@@ -1591,7 +1484,7 @@ def _ann_10m_maint(spark, cache_dir: str) -> tuple[dict, dict]:
     )
     s_est = selectivity(handle, where=WHERE, spark=spark)
     auto_np = plan_nprobe(
-        handle, default_nprobe(nlist, "IVF"), k, where=WHERE, spark=spark,
+        handle, default_nprobe(nlist), k, where=WHERE, spark=spark,
         Q=qvecs.astype("float64"),
     )
     # filtered exact truth: one untimed pass over the 10% slice
@@ -1905,7 +1798,7 @@ def _ann_100m(spark, cache_dir: str) -> tuple[dict, dict | None]:
             hand_f_np = p
             break
     auto_np = plan_nprobe(
-        handle, default_nprobe(nlist, "IVF"), k, where=F_WHERE, spark=spark,
+        handle, default_nprobe(nlist), k, where=F_WHERE, spark=spark,
         Q=qvecs.astype("float64"),
     )
     rtf_sec, rtf_res = timed(
@@ -1913,45 +1806,11 @@ def _ann_100m(spark, cache_dir: str) -> tuple[dict, dict | None]:
                              recall_target=0.99),
         runs=2,
     )
-    # held-out validation of the nprobe curve at the stretch tier (VERDICT
-    # r12 ask #7): 50 genuinely FRESH queries (ids beyond the corpus, same
-    # generator) served at the curve-picked budget vs their own exact
-    # truth — the fresh-query gap the held-out profile claims to close.
-    # OPT-IN (SPARK_GRAFT_CURVE_RECEIPTS=1): the extra exact pass is a
-    # full 100M scan that ran before the JSON line printed (VERDICT r13
-    # #1); protocol validation, not a per-round number.
-    fresh_at_pick = None
-    if os.environ.get("SPARK_GRAFT_CURVE_RECEIPTS", "0") == "1":
-        fresh_qids = n + np.arange(n_queries, dtype=np.int64)
-        fresh_qvecs = _ann_vectors(fresh_qids, centers, seed)
-        fresh_queries = spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in zip(fresh_qids, fresh_qvecs)],
-            "query_id BIGINT, qvec ARRAY<FLOAT>",
-        ).cache()
-        fresh_queries.count()
-        exact_fresh = knn_pandas(
-            handle.vectors.select("vec_id", "embedding"), fresh_queries, k=k
-        ).cache()
-        exact_fresh.count()
-        fresh_at_pick = recall_at_k(
-            search_index(spark, handle, fresh_queries, k=k, recall_target=0.99),
-            exact_fresh, k=k,
-        )
-        exact_fresh.unpersist()
-        fresh_queries.unpersist()
-
     recall_target_meta = {
         "target": 0.99,
         "curve_nprobe": curve_np,
         "rt_sec": rt_sec,
         "rt_recall": round(recall_at_k(rt_res, exact, k=k), 4),
-        "fresh_recall_at_pick": (
-            round(fresh_at_pick, 4) if fresh_at_pick is not None else None
-        ),
-        "fresh_gap": (
-            round(0.99 - fresh_at_pick, 4) if fresh_at_pick is not None else None
-        ),
-        "n_fresh_queries": n_queries,
         "filtered_hand_tuned_nprobe": hand_f_np,
         "filtered_hand_sweep": hand_f_sweep,
         "filtered_auto_nprobe": auto_np,

@@ -82,9 +82,9 @@ def test_hnsw_capability_high_recall(spark, tmp_path_factory):
     assert recall_at_k(approx, exact, k=10) >= 0.9
 
 
-def test_hnsw_graph_path_works_without_hnswlib(spark):
-    """The per-partition graph path must run with either backend (hnswlib
-    if installed, PyHNSW otherwise) — never an ImportError, never a stub."""
+def test_hnsw_partition_search_recall(spark):
+    """The per-partition graph path runs on PyHNSW everywhere — never an
+    ImportError, never a stub."""
     from webscale_vector_search_spark.operators import hnsw_partition
     from webscale_vector_search_spark.operators.ivf import recall_at_k
     from webscale_vector_search_spark.operators.knn import knn
@@ -103,7 +103,7 @@ def test_pyhnsw_recall_and_sublinear_cost():
     graph search must hit high recall while evaluating distances to a
     bounded, sub-linearly-growing fraction of the corpus (beam cost
     saturates near ef*2M nodes regardless of n). Measured here directly on
-    PyHNSW's dist_evals counter (hnswlib doesn't expose one)."""
+    PyHNSW's dist_evals counter."""
     import duckdb
 
     from webscale_vector_search_spark.operators.hnsw_partition import PyHNSW
@@ -137,36 +137,3 @@ def test_pyhnsw_recall_and_sublinear_cost():
     assert e_big <= 0.6 * 2000, e_big
     assert e_big / e_small <= 2.5, (e_small, e_big)  # corpus grew 4x
 
-
-def test_hnswlib_backend_recall():
-    """The C++ production backend (skipped where hnswlib isn't installed —
-    this container doesn't ship it; runs wherever the wheel exists so the
-    hnswlib arm of hnsw_partition_search has at least one CI signal).
-    Mirrors test_pyhnsw_recall_and_sublinear_cost's recall gate on the same
-    fixture vectors, through the real hnswlib.Index path."""
-    pytest.importorskip("hnswlib")
-    import duckdb
-
-    from webscale_vector_search_spark.operators import hnsw_partition
-
-    assert hnsw_partition.HAS_HNSWLIB
-    con = duckdb.connect()
-    emb = con.execute(
-        "SELECT embedding FROM read_parquet('/root/testdata/sf0.1/embeddings.parquet') "
-        "ORDER BY vec_id"
-    ).fetchdf()
-    V = np.stack(emb["embedding"].to_numpy()).astype(np.float32)
-    X, Q = V[:2000], V[:50].astype(np.float64)
-
-    index = hnsw_partition.hnswlib.Index(space="l2", dim=X.shape[1])
-    index.init_index(max_elements=len(X), M=16, ef_construction=64)
-    index.add_items(X, np.arange(len(X)))
-    index.set_ef(64)
-    labels, _ = index.knn_query(Q.astype(np.float32), k=10)
-
-    dist = (Q**2).sum(1)[:, None] - 2.0 * Q @ X.astype(np.float64).T + (
-        X.astype(np.float64) ** 2
-    ).sum(1)[None, :]
-    exact = np.argsort(dist, axis=1, kind="stable")[:, :10]
-    recall = sum(len(set(labels[i]) & set(exact[i])) for i in range(len(Q))) / (len(Q) * 10)
-    assert recall >= 0.95, recall

@@ -475,7 +475,7 @@ def test_ivfpq_auto_filtered_plan_and_recall(spark, ivfpq_dir, queries,
     from webscale_vector_search_spark.sources.index_io import open_index
 
     h = open_index(spark, ivfpq_dir)
-    base = default_nprobe(NLIST, "IVFPQ")
+    base = default_nprobe(NLIST)
     planned = plan_nprobe(h, base, 10, where=WHERE, spark=spark)
     assert planned >= min(NLIST, 2 * base)
     auto = search_index(spark, h, queries, k=10, where=WHERE)

@@ -1,6 +1,5 @@
 """PyHNSW kernel properties for the round-6 batched/lockstep construction
-and serving paths (VERDICT r5 #1's in-container answer — hnswlib cannot be
-installed here, so the python kernel's speedups must not change semantics).
+and serving paths (the python kernel's speedups must not change semantics).
 
 Pure numpy — no SparkSession; these pin the kernel claims the Spark-level
 stored==adhoc / stream==batch tests build on:
@@ -86,7 +85,7 @@ def test_chunked_build_recall_parity_and_determinism():
 def test_degree_bound_with_shrink_slack():
     """Shrink hysteresis trades re-select call count for a bounded degree
     overshoot: no node's list at any level may exceed mmax + shrink_slack
-    (slack=0 reproduces hnswlib's shrink-on-every-overflow)."""
+    (slack=0 reproduces the paper's shrink-on-every-overflow)."""
     V = _corpus(n=2000)
     g = PyHNSW(V.shape[1], M=8, ef_construction=32, seed=0)
     g.add_items(V)

@@ -512,6 +512,39 @@ def test_compact_index_preserves_hnsw_graph_serving(spark, tmp_path_factory):
         )
 
 
+def test_pre_graph_hnsw_sidecar_is_refused(spark, tmp_path_factory):
+    """An HNSW sidecar without `hnsw_graph` (the centroid-layout artifact
+    that predates persisted graphs) is refused at read_metadata with an
+    error naming the cause, so open_index and append_vectors never
+    mis-read it."""
+    import json
+    import os
+
+    from webscale_vector_search_spark.plans.build import append_vectors
+    from webscale_vector_search_spark.sources.index_io import (
+        METADATA_FILE,
+        open_index,
+    )
+
+    corpus = load_table(spark, "embeddings", SF_SMOKE)
+    out = str(tmp_path_factory.mktemp("hnsw_pre_graph"))
+    build_index(
+        spark, corpus, out,
+        EngineConfig(index_type="HNSW", num_shards=2, recall_curve=False),
+    )
+    path = os.path.join(out, METADATA_FILE)
+    with open(path) as f:
+        meta = json.load(f)
+    del meta["hnsw_graph"]
+    with open(path, "w") as f:
+        json.dump(meta, f)
+
+    with pytest.raises(ValueError, match="pre-r5 centroid-layout"):
+        open_index(spark, out)
+    with pytest.raises(ValueError, match="rebuild it with build_index"):
+        append_vectors(spark, out, corpus.limit(2))
+
+
 def test_hnsw_frozen_bundle_freshness_and_fallback(spark, tmp_path_factory):
     """The serving bundle (freeze_shard_graph — the faiss.write_index
     analog) must never serve stale: build_index freezes automatically; a

@@ -275,7 +275,7 @@ def test_replay_plans_correlated_deeper(spark, tmp_path_factory):
     )
     qrows = corpus.orderBy("vec_id").limit(8).collect()
     Q = np.stack([r["embedding"] for r in qrows]).astype(np.float64)
-    base = default_nprobe(ncl, "IVF")
+    base = default_nprobe(ncl)
     p_corr = plan_nprobe(h, base, 10, where="label = 1", spark=spark, Q=Q)
     p_disp = plan_nprobe(h, base, 10, where="label2 = 1", spark=spark, Q=Q)
     assert p_corr > p_disp
@@ -670,7 +670,7 @@ def test_expected_replay_covers_parity_correlated_spread(
     qrows = corpus.filter("label = 0").orderBy("vec_id").limit(8).collect()
     Q = np.stack([r["embedding"] for r in qrows]).astype(np.float64)
     auto = plan_nprobe(
-        h, default_nprobe(ncl, "IVF"), 10, where="label = 1", spark=spark, Q=Q
+        h, default_nprobe(ncl), 10, where="label = 1", spark=spark, Q=Q
     )
     queries = spark.createDataFrame(
         [(r["vec_id"], r["embedding"]) for r in qrows],
@@ -1013,16 +1013,14 @@ def test_default_ef_floors_in_corpus_curves_only(spark, tmp_path_factory):
 def test_ensure_upgrades_in_corpus_profile_and_merges_stored_knobs(
     spark, corpus, tmp_path_factory
 ):
-    """r14 ensure_recall_curve contract: (a) a curve profiled IN-CORPUS is
-    KEPT by a bare ensure (protocol upgrades are opt-in — the implicit
-    multi-tier re-measure inside a timed bench window is what broke the
-    r13 driver bench, VERDICT r13 #1/#5); upgrade=True (or
-    SPARK_GRAFT_PROFILE_UPGRADE=1) performs the held-out upgrade once,
-    then no-ops; an explicit holdout=False keeps the in-corpus protocol;
+    """ensure_recall_curve contract: (a) a curve profiled IN-CORPUS is
+    KEPT by a bare ensure (no implicit re-measure inside a timed bench
+    window); holdout=True performs the held-out re-profile once, then
+    no-ops; an explicit holdout=False keeps the in-corpus protocol;
     (b) on ANY re-profile, knobs the caller did not specify come from the
-    STORED profile, never the module defaults (ADVICE r12: remediating a
-    stale kmax=400 profile with nq=16 must not silently shrink kmax to
-    the default)."""
+    STORED profile, never the module defaults (remediating a stale
+    kmax=400 profile with nq=16 must not silently shrink kmax to the
+    default)."""
     from webscale_vector_search_spark.sources import recall_curve as rc
 
     out = str(tmp_path_factory.mktemp("rt_upgrade") / "idx")
@@ -1053,13 +1051,13 @@ def test_ensure_upgrades_in_corpus_profile_and_merges_stored_knobs(
     assert mtime() == t_legacy
     assert rc.load_profile_meta(out)["holdout"] is False
 
-    assert ensure_recall_curve(spark, out, upgrade=True)  # opt-in upgrade
+    assert ensure_recall_curve(spark, out, holdout=True)  # explicit re-profile
     meta = rc.load_profile_meta(out)
     assert meta["holdout"] is True
     assert meta["kmax"] == 400 and meta["nq"] == 16  # stored knobs kept
 
     t0 = mtime()
-    assert ensure_recall_curve(spark, out, upgrade=True)  # now a no-op
+    assert ensure_recall_curve(spark, out, holdout=True)  # now a no-op
     assert mtime() == t0
     assert ensure_recall_curve(spark, out)  # bare call: still a no-op
     assert mtime() == t0

@@ -152,7 +152,7 @@ def test_auto_nprobe_restores_filtered_recall(
     at this corpus size the candidate-volume term reaches full probe ->
     exact equality with the pre-filtered brute force."""
     h = open_index(spark, ivf_dir)
-    base_np = default_nprobe(NLIST, "IVF")
+    base_np = default_nprobe(NLIST)
     fixed = search_index(spark, h, queries, k=10, nprobe=base_np, where=WHERE)
     auto = search_index(spark, h, queries, k=10, where=WHERE)  # nprobe=None
     r_fixed = recall_at_k(fixed, filtered_oracle, k=10)
@@ -216,7 +216,7 @@ def test_correlated_filter_cell_discovery(spark, tmp_path_factory):
     h = open_index(spark, out)
     f = cell_coverage(h, "label = 1", spark=spark)
     assert f is not None and f <= 0.5  # correlation detected (~4-8/16)
-    base = default_nprobe(16, "IVF")
+    base = default_nprobe(16)
     planned = plan_nprobe(h, base, 10, where="label = 1", spark=spark)
     # D/f >= 8 must beat the 2x floor the uniform-filter plan would pick
     assert planned >= max(2 * base, int(4 / f))
@@ -392,7 +392,7 @@ def test_allowlist_coverage_budgets(spark, tmp_path_factory):
     f_corr = allowlist_cell_coverage(h, corr)
     f_disp = allowlist_cell_coverage(h, disp)
     assert f_corr is not None and f_disp is not None and f_corr < f_disp
-    base = default_nprobe(16, "IVF")
+    base = default_nprobe(16)
     b_corr = plan_nprobe(h, base, 10, allowed_count=len(corr), allowed_arr=corr)
     b_disp = plan_nprobe(h, base, 10, allowed_count=len(disp), allowed_arr=disp)
     assert b_corr > b_disp  # concentration costs probes, dispersion doesn't

@@ -11,20 +11,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 
-def default_nprobe(nlist: int, index_type: str = "IVF") -> int:
-    """The single home of the probe-count rule (used by EngineConfig AND
-    plans/build.py::search_index — keep them from drifting):
-
-    - IVF/IVFPQ: the reference's serving rule min(64, max(1, nlist // 8))
-      (vector_search_cluster.py:549)
-    - HNSW slot: only reached when a LEGACY (pre-r5, centroid-layout) HNSW
-      artifact is served with kernel='sql' (graph artifacts use the stored
-      graph; their no-Python fallback is the exact scan). The 3/4-of-lists
-      probe is a deliberate near-exact scan: right answers, explicitly NOT
-      the sub-linear cost class the graph path provides.
-    """
-    if index_type == "HNSW":
-        return max(1, (3 * nlist) // 4)
+def default_nprobe(nlist: int) -> int:
+    """The single home of the IVF/IVFPQ probe-count rule (search_index and
+    serve_local both default through it): the reference's serving rule
+    min(64, max(1, nlist // 8)) (vector_search_cluster.py:549)."""
     return min(64, max(1, nlist // 8))
 
 
@@ -95,8 +85,8 @@ class EngineConfig:
     # normalizes queries symmetrically. Extension beyond the reference
     # (LLM pipelines are cosine-first).
     metric: str = "sq_l2"
-    # HNSW graph-build params (index_type="HNSW"): M follows hnswlib's
-    # default 16 (the reference passes 32 to IndexHNSWFlat at 1044 — higher
+    # HNSW graph-build params (index_type="HNSW"): M defaults to the
+    # customary 16 (the reference passes 32 to IndexHNSWFlat at 1044 — higher
     # recall ceiling, ~2x build cost and link storage; both supported).
     # ef_construction 64 mirrors the module default used by the recall and
     # sub-linear-cost property tests.
@@ -135,11 +125,6 @@ class EngineConfig:
         if self.nlist is not None:
             return self.nlist
         return max(100, int(n_vectors**0.5))
-
-    def resolved_nprobe(self, nlist: int) -> int:
-        if self.nprobe is not None:
-            return self.nprobe
-        return default_nprobe(nlist, self.index_type)
 
     def resolved_pq_m(self) -> int:
         if self.pq_m is not None:

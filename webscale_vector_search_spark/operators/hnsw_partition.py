@@ -18,15 +18,12 @@ shape as every other search in this engine. Two serving forms:
   path for repeated serving.
 
 The reference README claims 99%+ recall@10 at sub-linear cost — the cost
-class both forms provide (the r1 "HNSW slot" probed 3/4 of IVF lists: high
-recall at ~75% of an exact scan).
+class both forms provide.
 
-Two interchangeable graph backends:
-- `hnswlib` when installed (C++, the production path);
-- :class:`PyHNSW`, a self-contained numpy implementation of the
-  Malkov & Yashunin algorithm (IEEE TPAMI 2018) — always available, used by
-  tests to assert BOTH recall AND the sub-linear visit count (it counts
-  distance evaluations, which hnswlib does not expose).
+Both forms run on :class:`PyHNSW`, a self-contained numpy implementation of
+the Malkov & Yashunin algorithm (IEEE TPAMI 2018). It needs no native
+library, and it counts distance evaluations, so tests assert BOTH recall
+AND the sub-linear visit count.
 
 Determinism: level draws come from a fixed-seed RNG in insertion order, and
 parquet scans enumerate rows deterministically, so repeated runs build the
@@ -42,14 +39,6 @@ import random
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - exercised only where hnswlib is installed
-    import hnswlib  # type: ignore
-
-    HAS_HNSWLIB = True
-except ImportError:
-    hnswlib = None
-    HAS_HNSWLIB = False
 
 _EMPTY_IDS = np.empty(0, dtype=np.int64)
 
@@ -78,7 +67,7 @@ class PyHNSW:
         # in construction (~half of build); batching 4 overflows per
         # re-select cuts its call count ~4x for the same bound on final
         # degree (transient degree <= mmax + slack). slack=0 reproduces
-        # hnswlib's shrink-on-every-overflow exactly.
+        # the paper's shrink-on-every-overflow exactly.
         self.shrink_slack = 4
         self.ef_construction = max(ef_construction, M)
         self.mult = 1.0 / math.log(M)
@@ -173,9 +162,8 @@ class PyHNSW:
         pop/push sequence is identical to running `_search_layer` alone
         (queries are independent on a frozen graph), so results are
         BIT-IDENTICAL to the per-query form — only the numpy call count
-        drops from O(expansions) to O(rounds). This is the python kernel's
-        answer to VERDICT r5 #1 (hnswlib remains uninstallable here):
-        measured ~3x on build, ~4x on batch serving at 62.5k-node shards.
+        drops from O(expansions) to O(rounds): measured ~3x on build, ~4x
+        on batch serving at 62.5k-node shards.
 
         `banned` (a set of LOCAL node indices) makes those nodes behave as
         if ABSENT from the graph: never scored, never expanded, never
@@ -319,7 +307,7 @@ class PyHNSW:
         return [sorted((-nd, u) for nd, u in r) for r in res]
 
     def _select_heuristic(self, cands, m: int) -> list[int]:
-        """Malkov & Yashunin Algorithm 4 (hnswlib's default selection):
+        """Malkov & Yashunin Algorithm 4 (the usual default selection):
         from ascending candidates keep u only if u is closer to the base
         point than to every already-selected neighbor, then backfill with
         pruned candidates (keepPrunedConnections). Plain nearest-m selection
@@ -455,7 +443,7 @@ class PyHNSW:
         if level > self.max_level:
             self.entry, self.max_level = idx, level
 
-    # -- hnswlib-compatible surface ---------------------------------------
+    # -- public surface (add_items / knn_query) ---------------------------
 
     _BOOTSTRAP = 256  # sequential until the graph can anchor a chunk
 
@@ -481,7 +469,7 @@ class PyHNSW:
     def knn_query(self, Q: np.ndarray, k: int, ef: int = 64, banned=None):
         """Top-k (squared-L2, the engine's canonical metric) per query row.
 
-        Returns (labels, dists) shaped (nq, k) like hnswlib.knn_query.
+        Returns (labels, dists) shaped (nq, k).
         The whole batch traverses in lockstep (`_batch_search_layer`) —
         bit-identical results to per-query traversal, ~4x fewer numpy
         dispatches on serving batches.
@@ -921,7 +909,7 @@ def extend_shard_graphs(
     are seeded by (seed, shard, existing size): a given append sequence is
     deterministic, batch != incremental bit-wise (different insertion
     order) but both are valid graphs of the same parameters — equivalence
-    is asserted on recall, like hnswlib's own add_items contract.
+    is asserted on recall.
     """
     import os
     import random as _random
@@ -1117,8 +1105,7 @@ def hnsw_partition_search(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-partition HNSW build+search inside one mapInPandas pass, then the
-    K2/K3 partial/final merge. Uses hnswlib when installed, else PyHNSW —
-    same graph algorithm, same result contract."""
+    K2/K3 partial/final merge (PyHNSW per partition)."""
     import pandas as pd
 
     q_rows = queries.select("query_id", "qvec").collect()
@@ -1140,16 +1127,9 @@ def hnsw_partition_search(
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             ids = pdf[id_col].to_numpy()
             kk = min(k, len(V))
-            if HAS_HNSWLIB:  # pragma: no cover - lib absent in this container
-                index = hnswlib.Index(space="l2", dim=V.shape[1])
-                index.init_index(max_elements=len(V), M=m, ef_construction=ef_construction)
-                index.add_items(V.astype(np.float32), np.arange(len(V)))
-                index.set_ef(max(ef_search, kk))
-                labels, dists = index.knn_query(Q.astype(np.float32), k=kk)
-            else:
-                index = PyHNSW(V.shape[1], M=m, ef_construction=ef_construction)
-                index.add_items(V)
-                labels, dists = index.knn_query(Q, k=kk, ef=max(ef_search, kk))
+            index = PyHNSW(V.shape[1], M=m, ef_construction=ef_construction)
+            index.add_items(V)
+            labels, dists = index.knn_query(Q, k=kk, ef=max(ef_search, kk))
             nq, kk = labels.shape
             flat = labels.ravel()
             valid = flat >= 0  # underflow padding (disconnected shard)

@@ -319,9 +319,9 @@ def build_index(
         # for humans and sidecar-only tooling)
         meta["pq_opq_iters"] = config.pq_opq_iters
     if config.index_type == "HNSW":
-        # readers route on this flag: graph artifacts serve via
-        # hnsw_stored_search; its absence means a legacy centroid-layout
-        # HNSW index (pre-r5), served by the rebuild-per-call path
+        # marks the persisted-graph layout; index_io.read_metadata refuses
+        # an HNSW sidecar without it (a centroid-layout artifact that must
+        # be rebuilt)
         meta["hnsw_graph"] = True
         # seed recorded so a delete-compaction can rebuild affected shards'
         # graphs with the same level draws as the original build
@@ -499,7 +499,7 @@ def append_vectors(
 
     centroids = codebooks = None
     cent_dir = os.path.join(index_dir, "centroids")
-    if itype in ("IVF", "IVFPQ") or (itype == "HNSW" and not meta.get("hnsw_graph")):
+    if itype in ("IVF", "IVFPQ"):
         centroids = spark.read.parquet(cent_dir)
     if itype == "IVFPQ":
         codebooks = index_io.read_codebooks(spark, index_dir)
@@ -526,7 +526,7 @@ def append_vectors(
             raise RuntimeError("append stream failed to drain")
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-    if itype == "HNSW" and meta.get("hnsw_graph") and attr_cols:
+    if itype == "HNSW" and attr_cols:
         # resolve through the pointer: an upsert/compaction may have moved
         # the live attrs table to an attrs.v{N} directory
         base.select("vec_id", *attr_cols).write.mode("append").parquet(
@@ -751,7 +751,7 @@ def _physical_delete(
         touched_cond = touched_cond | F.col(part_col).isNull()
     touched = vecs.filter(touched_cond)
     kept = touched.join(F.broadcast(ids), "vec_id", "left_anti")
-    if meta.get("hnsw_graph"):
+    if meta["index_type"] == "HNSW":
         # dropping graph rows dangles adjacency: rebuild the affected
         # shards' graphs over their surviving rows (compaction's rule)
         from webscale_vector_search_spark.operators import hnsw_partition as hnsw_ops
@@ -791,7 +791,7 @@ def _physical_delete(
         _link_forward_partition(
             os.path.join(vectors_dir, entry), os.path.join(next_dir, entry)
         )
-    if meta.get("hnsw_graph"):
+    if meta["index_type"] == "HNSW":
         from webscale_vector_search_spark.operators import hnsw_partition as hnsw_ops
 
         hnsw_ops.freeze_graphs(
@@ -808,9 +808,10 @@ def _physical_delete(
         from webscale_vector_search_spark.sources.attr_stats import merge_attr_delta
 
         acols = meta["attr_cols"]
+        attrs_dir = index_io.attrs_path(index_dir, meta)
         attr_src = (
-            spark.read.parquet(index_io.attrs_path(index_dir, meta))
-            if meta.get("hnsw_graph") and os.path.isdir(index_io.attrs_path(index_dir, meta))
+            spark.read.parquet(attrs_dir)
+            if meta["index_type"] == "HNSW" and os.path.isdir(attrs_dir)
             else touched
         )
         merge_attr_delta(
@@ -991,15 +992,12 @@ def search_index(
                 exact distances (standard two-stage PQ serving; the refine
                 IO is candidates-only — |queries| * refine_factor * k rows
                 via a broadcast semi-join over the probed lists)
-    - HNSW   -> stored-graph traversal (K9, hnsw_stored_search) when the
-                artifact carries persisted adjacency (`hnsw_graph` in the
-                sidecar — every build_index(HNSW) since r5): one task per
-                shard, graph loaded once per python worker, serving pays
-                only beam traversal (`ef_search` tunes the recall/latency
-                point). Legacy centroid-layout HNSW artifacts rebuild the
-                per-partition graph in-pass (hnsw_partition_search).
-                kernel='sql' on a graph artifact = the exact SQL scan
-                (graph traversal has no SQL form).
+    - HNSW   -> stored-graph traversal (K9, hnsw_stored_search) over the
+                adjacency build_index persisted: one task per shard, graph
+                loaded once per python worker, serving pays only beam
+                traversal (`ef_search` tunes the recall/latency point).
+                kernel='sql' = the exact SQL scan (graph traversal has no
+                SQL form).
 
     kernel='pandas' (default) uses the vectorized Arrow/numpy kernels —
     identical results to kernel='sql' (the tie-stable batch top-k makes both
@@ -1037,9 +1035,9 @@ def search_index(
     recall_target, a graph index that carries a measured ef curve defaults
     its beam to the DEFAULT_TARGET (0.99) pick from that curve (capped at
     the ladder ceiling when no measured rung reaches it); indexes without
-    a curve (FLAT, legacy graphs, or built with recall_curve=False and
-    never backfilled via ensure_recall_curve) keep the closed-form
-    defaults (ef=64, the reference's constant).
+    a curve (FLAT, or built with recall_curve=False and never backfilled
+    via ensure_recall_curve) keep the closed-form defaults (ef=64, the
+    reference's constant).
     """
     from webscale_vector_search_spark.operators.knn import knn, knn_pandas
 
@@ -1139,12 +1137,12 @@ def search_index(
             k=k,
         )
 
-    if itype == "HNSW" and handle.meta.get("hnsw_graph"):
-        # persisted-graph artifact: serving pays ONLY traversal (graphs are
-        # loaded once per python worker — hnsw_partition.load_shard_graph)
+    if itype == "HNSW":
+        # serving pays ONLY traversal (graphs are loaded once per python
+        # worker — hnsw_partition.load_shard_graph)
         def _exact_filtered_scan(fn):
             # exact scan with the filter applied BEFORE ranking: attrs live
-            # in the sidecar for graph artifacts, so the valid ids semi-join
+            # in the sidecar for HNSW, so the valid ids semi-join
             # into the scan (an unfiltered scan + post-filter would need a
             # k' covering the filtered depth — this form needs no margin)
             vecs = _live(handle.vectors.select("vec_id", "embedding"), tomb)
@@ -1200,10 +1198,10 @@ def search_index(
             # stated stance — measured artifact over hand-tuning; the
             # reference hardcodes ef=64, vector_search_cluster.py:552,
             # serving 0.92 recall at the 10M bench tier while the sidecar
-            # knows ef128 gives 0.96). Curve-less legacy indexes keep 64;
-            # in-corpus-profiled curves floor at 64 (default_ef, ADVICE
-            # r12 — their optimistic rungs must not undercut the legacy
-            # constant), held-out curves are trusted as measured.
+            # knows ef128 gives 0.96). Curve-less indexes keep 64;
+            # in-corpus-profiled curves floor at 64 (default_ef — their
+            # optimistic rungs must not undercut the constant), held-out
+            # curves are trusted as measured.
             ef_search = default_ef(handle, k)
         from webscale_vector_search_spark.operators.hnsw_partition import hnsw_stored_search
 
@@ -1232,8 +1230,8 @@ def search_index(
     if nprobe is None:
         from webscale_vector_search_spark.config import default_nprobe
 
-        nprobe = default_nprobe(nlist, itype)
-        if (filtered or recall_target is not None) and itype in ("IVF", "IVFPQ"):
+        nprobe = default_nprobe(nlist)
+        if filtered or recall_target is not None:
             # probe budget from the measured recall curve at depth
             # ceil(k/s) when the index carries one (closes the fixed-
             # constant planner's 3.2x overshoot at the 10M tier), else the
@@ -1256,7 +1254,7 @@ def search_index(
                 # query_id before the cut (TakeOrderedAndProject — no full
                 # sort lands on the driver): a bare limit() over >4096
                 # queries returns whichever partitions answer first, so the
-                # plan itself would vary run-to-run (ADVICE r11).
+                # plan itself would vary run-to-run.
                 import numpy as np
 
                 plan_q = np.stack(
@@ -1274,42 +1272,7 @@ def search_index(
                 Q=plan_q,
             )
 
-    if itype == "HNSW" and kernel == "pandas":
-        # legacy (pre-r5) HNSW artifact without a stored graph: rebuild the
-        # per-partition graph inside the search pass
-        from webscale_vector_search_spark.operators.hnsw_partition import hnsw_partition_search
-
-        if filtered and filter_oversample is None:
-            # same selective-filter escape as the graph path (attrs are
-            # row-carried on legacy artifacts, so the plain filtered exact
-            # scan applies directly)
-            from webscale_vector_search_spark.sources.attr_stats import (
-                cell_coverage,
-                graph_filter_fallback,
-            )
-
-            f_leg = (
-                cell_coverage(handle, where, spark=spark)
-                if where is not None
-                else None
-            )
-            if graph_filter_fallback(_sel(), f_leg):
-                return knn_pandas(
-                    _live(_apply_filter(handle.vectors, where, allowed_ids), tomb),
-                    queries,
-                    k=k,
-                )
-        if filtered:
-            k_leg = k * _oversample() * (2 if tomb is not None else 1)
-        else:
-            k_leg = 2 * k if tomb is not None else k
-        res = hnsw_partition_search(handle.vectors, queries, k=k_leg)
-        if not (filtered or tomb is not None):
-            return res
-        attr_src = handle.attrs if handle.attrs is not None else handle.vectors
-        return _postfilter_topk(res, attr_src, where, allowed_ids, k, tombstones=tomb)
-
-    if itype in ("IVF", "HNSW"):
+    if itype == "IVF":
         vecs = _live(_apply_filter(handle.vectors, where, allowed_ids), tomb)
         if kernel == "pandas":
             return ivf_ops.ivf_search_pandas(
@@ -1478,7 +1441,7 @@ def compact_index(
             )
     if tomb is not None:
         df = df.join(F.broadcast(tomb), "vec_id", "left_anti")
-    if tomb is not None and meta.get("hnsw_graph"):
+    if tomb is not None and meta["index_type"] == "HNSW":
         # dropping graph rows leaves neighbors pointing at deleted nodes —
         # rebuild the graphs of shards that actually lost nodes (same m/ef/
         # seed as the original build: bit-deterministic per shard), keep the
@@ -1548,7 +1511,7 @@ def compact_index(
         old_attrs = index_io.attrs_path(index_dir, meta)
         attr_src = (
             spark.read.parquet(old_attrs)
-            if meta.get("hnsw_graph") and os.path.isdir(old_attrs)
+            if meta["index_type"] == "HNSW" and os.path.isdir(old_attrs)
             else spark.read.parquet(vectors_dir)
         )
         merge_attr_delta(
@@ -1590,7 +1553,7 @@ def compact_index(
             keep={os.path.join(index_dir, meta["attrs_dir"]), old_attrs},
             stem="attrs",
         )
-    if meta.get("hnsw_graph"):
+    if meta["index_type"] == "HNSW":
         # the frozen serving bundles lived inside the directory just
         # superseded — without a re-freeze every cold worker would silently
         # pay the ~6x-slower parquet decode forever after a compaction
@@ -1656,7 +1619,7 @@ def compact_index(
             )  # clears profile_stale on success
         except Exception:
             # stale-but-present profile beats a failed compaction — but the
-            # staleness must be OBSERVABLE (VERDICT r11 #6): flag it in the
+            # staleness must be OBSERVABLE: flag it in the
             # sidecar (get_stats surfaces it; the next successful
             # measure_recall_curve clears it)
             from webscale_vector_search_spark.sources.recall_curve import (
@@ -1671,7 +1634,7 @@ def compact_index(
         # runs. A pure small-file merge (no tombstones) leaves the vector
         # SET byte-identical — the curve is layout-independent, so
         # flagging there would force a pointless exact-scan re-measure on
-        # remediation (ADVICE r12).
+        # remediation.
         from webscale_vector_search_spark.sources.recall_curve import (
             set_profile_stale,
         )

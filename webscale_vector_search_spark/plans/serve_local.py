@@ -853,9 +853,7 @@ def serve_local(
         )
         if not len(ex_sorted):
             ex_sorted = None
-    if ex_sorted is not None and not (
-        itype == "HNSW" and meta.get("hnsw_graph")
-    ):
+    if ex_sorted is not None and itype != "HNSW":
         # scanned lists: absence == id mask, so held-out rows ride the
         # tombstone mask (the graph path instead bans them in the kernel)
         tomb_sorted = (
@@ -900,7 +898,7 @@ def serve_local(
             as_arrays,
         )
 
-    if itype == "HNSW" and meta.get("hnsw_graph"):
+    if itype == "HNSW":
         if filtered and filter_oversample is None:
             # selective-filter escape, mirroring search_index: past the
             # oversample cap the beam can't produce k survivors — run the
@@ -942,8 +940,8 @@ def serve_local(
         if ef_search is None:
             # default the beam from the measured curve (mirror search_index:
             # DEFAULT_TARGET pick when a curve exists — floored at 64 for
-            # in-corpus-profiled curves, ADVICE r12 — and ef=64 for
-            # curve-less legacy indexes). The curve pdf and profile meta
+            # in-corpus-profiled curves — and ef=64 for curve-less
+            # indexes). The curve pdf and profile meta
             # are handle-cached (load_curve_pdf/load_profile_meta_cached),
             # so the 1-query hot path pays only a sort over the <=6-rung
             # ladder — and a curve re-profile or reopen invalidates the
@@ -981,8 +979,8 @@ def serve_local(
     if nprobe is None:
         from webscale_vector_search_spark.config import default_nprobe
 
-        nprobe = default_nprobe(nlist, itype)
-        if (filtered or recall_target is not None) and itype in ("IVF", "IVFPQ"):
+        nprobe = default_nprobe(nlist)
+        if filtered or recall_target is not None:
             # probe budget from the measured curve / calibrated formula —
             # same stats and curve rows as search_index's auto path (plan
             # parity)
@@ -999,10 +997,7 @@ def serve_local(
             )
     probes = _LocalProbes(handle, Q, nprobe)
 
-    if itype in ("IVF", "HNSW"):
-        # legacy (pre-r5) HNSW artifacts share the IVF centroid layout and
-        # serve through the probe path (their default_nprobe is the
-        # deliberate 3/4-of-lists near-exact scan — config.default_nprobe)
+    if itype == "IVF":
         return _finalize(
             _ivf_parts(handle, q_ids, Q, k, probes, cache_budget_mb,
                        where=where, allowed_sorted=allowed_sorted,

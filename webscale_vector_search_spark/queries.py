@@ -603,8 +603,8 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q_ann_hnsw — K9: per-partition HNSW graph search (hnswlib when installed,
-# the PyHNSW numpy implementation otherwise). Graph construction is
+# q_ann_hnsw — K9: per-partition HNSW graph search (the PyHNSW numpy
+# implementation). Graph construction is
 # randomized-by-seeded-RNG and inherently non-SQL -> rows-only driver check;
 # recall + sub-linear-cost assertions live in tests/test_api.py.
 # ---------------------------------------------------------------------------

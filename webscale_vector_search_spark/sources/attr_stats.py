@@ -296,8 +296,8 @@ def merge_attr_delta(spark: SparkSession, index_dir: str, delta: DataFrame) -> N
 
 def ensure_attr_stats(spark: SparkSession, index_dir: str) -> bool:
     """Backfill the stats table for an attr_cols index built before the
-    planner existed (pre-r10 artifact): recompute from the stored rows
-    (row-carried attrs, or the attrs sidecar for graph indexes). No-op
+    planner existed: recompute from the stored rows (row-carried attrs,
+    or the attrs sidecar for HNSW indexes). No-op
     when stats already exist or the index has no attributes. Returns True
     when a stats table exists afterwards."""
     from webscale_vector_search_spark.sources import index_io
@@ -309,7 +309,7 @@ def ensure_attr_stats(spark: SparkSession, index_dir: str) -> bool:
     attr_cols = meta.get("attr_cols")
     if not attr_cols:
         return False
-    if meta.get("hnsw_graph"):
+    if meta["index_type"] == "HNSW":
         src = spark.read.parquet(index_io.attrs_path(index_dir, meta))
     else:
         src = spark.read.parquet(index_io.vectors_path(index_dir, meta))
@@ -476,7 +476,7 @@ def _allowlist_lookup(handle, allowed_arr):
                 vc = pdf["centroid_id"].value_counts()
                 cells_d = {int(c): int(v) for c, v in vc.items()}
                 f = len(cells_d) / nonempty
-        elif itype == "HNSW" and handle.meta.get("hnsw_graph"):
+        elif itype == "HNSW":
             cents_dir = os.path.join(handle.index_dir, STATS_CENTROIDS_DIRNAME)
             cell_pdf = load_cell_stats_pdf(handle)
             if os.path.isdir(cents_dir) and cell_pdf is not None:
@@ -547,7 +547,7 @@ def _tombstone_matched(handle, where, spark=None) -> "tuple | None":
     attr_cols = handle.meta.get("attr_cols") or []
     root = (
         index_io.attrs_path(handle.index_dir, handle.meta)
-        if handle.meta.get("hnsw_graph")
+        if handle.meta["index_type"] == "HNSW"
         else handle.vectors_dir
     )
     cache = handle.__dict__.setdefault("_tomb_sel_cache", {})

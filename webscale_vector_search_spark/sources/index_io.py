@@ -42,8 +42,19 @@ def write_metadata(out_dir: str, meta: dict) -> None:
 
 
 def read_metadata(index_dir: str) -> dict:
+    """Load the sidecar. An HNSW sidecar must carry `hnsw_graph` (every
+    build_index / incremental_build writes it): one without it is a
+    centroid-layout artifact that no reader serves, so it is refused here
+    rather than mis-read downstream."""
     with open(os.path.join(index_dir, METADATA_FILE)) as f:
-        return json.load(f)
+        meta = json.load(f)
+    if meta.get("index_type") == "HNSW" and not meta.get("hnsw_graph"):
+        raise ValueError(
+            f"{index_dir}: HNSW index without a persisted graph (no "
+            "'hnsw_graph' in its sidecar) is a pre-r5 centroid-layout "
+            "artifact; rebuild it with build_index"
+        )
+    return meta
 
 
 def vectors_path(index_dir: str, meta: dict | None = None) -> str:
@@ -366,13 +377,8 @@ def open_index(spark: SparkSession, index_dir: str) -> IndexHandle:
     vectors = spark.read.parquet(vdir)
     centroids = None
     codebooks = None
-    # graph-artifact HNSW (r5+) has no centroid table; legacy HNSW shares
-    # the IVF layout and keeps one
-    cent_dir = os.path.join(index_dir, "centroids")
-    if meta["index_type"] in ("IVF", "IVFPQ") or (
-        meta["index_type"] == "HNSW" and os.path.isdir(cent_dir)
-    ):
-        centroids = spark.read.parquet(cent_dir)
+    if meta["index_type"] in ("IVF", "IVFPQ"):
+        centroids = spark.read.parquet(os.path.join(index_dir, "centroids"))
     lopq_rots = pq_rotation = None
     if meta["index_type"] == "IVFPQ":
         if meta.get("pq_local_codebooks"):

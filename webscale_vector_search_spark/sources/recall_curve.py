@@ -404,15 +404,15 @@ def measure_recall_curve(
     """Profile an opened index and write its curve sidecar. Returns True
     when a curve was written (False for FLAT — exact by definition).
 
-    `holdout=True` (the r13 default) profiles HELD-OUT: the sampled rows
+    `holdout=True` (the default) profiles HELD-OUT: the sampled rows
     are excluded from the searched corpus — dropped from the exact ground
     truth AND banned inside the graph search (serve_local exclude_ids) —
     so the curve measures what a FRESH query sees. The in-corpus form
-    (holdout=False, the pre-r13 protocol) flatters graph indexes: every
+    (holdout=False) flatters graph indexes: every
     sample query is its own nearest neighbor, with a guaranteed
     entry region whose edges point at its true neighbors — measured
     0.9953 in-corpus vs 0.9754 fresh-query recall at ef=32 on the
-    clustered 512-d bench arm (VERDICT r12 #1), a BIAS the strict-margin
+    clustered 512-d bench arm, a BIAS the strict-margin
     ladder read narrows but cannot close. Held-out profiling removes the
     self-match term exactly and the navigation term conservatively (a
     banned node also can't bridge paths a fresh-query graph would bridge
@@ -591,7 +591,7 @@ def measure_recall_curve(
         set_profile_stale(out_dir, False)  # a fresh profile is never stale
         return True
 
-    if itype == "HNSW" and meta.get("hnsw_graph"):
+    if itype == "HNSW":
         from webscale_vector_search_spark.plans.serve_local import serve_local
 
         k_eff = max(1, min(k, (n_total - nq) if holdout_eff else n_total))
@@ -653,9 +653,7 @@ def reprofile_kwargs(stored: "dict | None") -> dict:
     return out
 
 
-def ensure_recall_curve(
-    spark, index_dir: str, upgrade: "bool | None" = None, **kwargs
-) -> bool:
+def ensure_recall_curve(spark, index_dir: str, **kwargs) -> bool:
     """Backfill the curve for an index built before it existed (or with
     recall_curve=False). No-op when present AND profiled under the same
     knobs as requested AND not flagged `profile_stale`: a caller asking
@@ -667,26 +665,19 @@ def ensure_recall_curve(
     too, since this function IS the documented remediation for that flag;
     a matching-knobs no-op here would leave it set forever.
 
-    PROTOCOL UPGRADES ARE OPT-IN (`upgrade=True`, or
-    SPARK_GRAFT_PROFILE_UPGRADE=1 when the caller leaves it None): a
-    curve profiled IN-CORPUS (pre-r13 artifact) whose knobs otherwise
-    match is KEPT, not re-measured — the held-out re-profile walks an
-    exact ground-truth scan plus a serve ladder per index, and an
-    implicit multi-tier re-measure inside a timed bench window is exactly
-    what broke the r13 driver bench (VERDICT r13 #1/#5). Consumers
-    already price the old protocol: default_ef floors in-corpus picks at
-    the legacy 64. An EXPLICIT `holdout=` kwarg still forces the match
-    (the caller named the protocol; `holdout=False` keeps in-corpus
-    deliberately).
+    A curve profiled IN-CORPUS whose knobs otherwise match is KEPT unless
+    the caller passes `holdout=` explicitly: the held-out re-profile walks
+    an exact ground-truth scan plus a serve ladder, and default_ef already
+    prices in-corpus curves (it floors their picks at 64). `holdout=True`
+    forces the held-out re-profile; `holdout=False` keeps in-corpus
+    deliberately.
 
     On any re-profile, knobs the caller did NOT specify come from the
-    STORED profile, not the module defaults (ADVICE r12: a stale kmax=5000
-    profile remediated with ensure_recall_curve(nq=16) must not silently
-    shrink to kmax=1000). Returns True when a curve exists afterwards."""
+    STORED profile, not the module defaults (a stale kmax=5000 profile
+    remediated with ensure_recall_curve(nq=16) must not silently shrink to
+    kmax=1000). Returns True when a curve exists afterwards."""
     from webscale_vector_search_spark.sources import index_io
 
-    if upgrade is None:
-        upgrade = os.environ.get("SPARK_GRAFT_PROFILE_UPGRADE", "0") == "1"
     path = os.path.join(index_dir, CURVE_DIRNAME)
     if os.path.isdir(path):
         stored = load_profile_meta(index_dir) or {
@@ -708,17 +699,12 @@ def ensure_recall_curve(
         }
         if not stale and not mismatched:
             return True
-        if (
-            not stale
-            and mismatched == {"holdout"}
-            and "holdout" not in kwargs
-            and not upgrade
-        ):
-            # legacy in-corpus profile, knobs otherwise current: keep it
-            # (bounded-run contract; see docstring)
+        if not stale and mismatched == {"holdout"} and "holdout" not in kwargs:
+            # in-corpus profile, knobs otherwise current: keep it (see
+            # docstring)
             return True
         # re-profile under stored-then-caller knobs (never the module
-        # defaults for knobs the stored profile pins — ADVICE r12), with
+        # defaults for knobs the stored profile pins), with
         # the held-out default applying unless the caller says otherwise
         base = reprofile_kwargs(stored)
         base.pop("holdout", None)  # `want` owns the holdout decision
@@ -1095,16 +1081,15 @@ def default_ef(handle, k: int) -> int:
     """The NO-TARGET default beam for graph serving (search_index and
     serve_local when the caller passes neither ef_search nor
     recall_target): the curve pick at DEFAULT_TARGET — FLOORED at the
-    legacy constant 64 when the curve was profiled IN-CORPUS (ADVICE r12:
-    the in-corpus sample flatters graphs, so an optimistic rung below 64
-    would silently serve WORSE than the old hardcoded default — the
-    opposite of the curve-default change's intent). Held-out curves (the
-    r13 protocol, meta holdout=True) are trusted un-floored: their sample
-    has no self-match advantage, and the strict-margin ladder read already
-    prices sample noise — flooring them would throw away an honestly
-    measured cheaper operating point. Explicit recall_target picks stay
-    un-floored in both cases (the caller named a target; the curve is the
-    contract for it). Curve-less legacy indexes keep 64."""
+    constant 64 when the curve was profiled IN-CORPUS (measure_recall_curve
+    falls back to in-corpus when the corpus is too small to hold queries
+    out): the in-corpus sample flatters graphs, so an optimistic rung
+    below 64 would serve worse than the plain constant. Held-out curves
+    (profile meta holdout=True) are trusted un-floored: their sample has
+    no self-match advantage, and the strict-margin ladder read already
+    prices sample noise. Explicit recall_target picks stay un-floored in
+    both cases (the caller named a target; the curve is the contract for
+    it). Curve-less indexes keep 64."""
     pick = ef_from_curve(handle, DEFAULT_TARGET, k)
     if pick is None:
         return 64

@@ -256,23 +256,17 @@ def incremental_build(
     # (num_shards, the hnsw build params) come from the sidecar below.
     stored_type = meta_now.get("index_type")
     if stored_type and stored_type != config.index_type:
-        legacy_hnsw_via_ivf = (
-            stored_type == "HNSW"
-            and not meta_now.get("hnsw_graph")
-            and config.index_type == "IVF"
+        raise ValueError(
+            f"config.index_type={config.index_type!r} but the index was "
+            f"built as {stored_type!r} — appended partitions would not "
+            "match the stored layout"
         )
-        if not legacy_hnsw_via_ivf:
-            raise ValueError(
-                f"config.index_type={config.index_type!r} but the index was "
-                f"built as {stored_type!r} — appended partitions would not "
-                "match the stored layout"
-            )
     num_shards = int(meta_now.get("num_shards") or config.num_shards)
     # IVF-family appends into an EXISTING index must assign against the
-    # STORED centroid table (ADVICE r11): the layout checks above verify
-    # index_type/num_shards/metric but previously trusted a caller-passed
-    # centroids table — a mismatched one silently files appended vectors
-    # into cells no probe selection will ever route their queries to. Same
+    # STORED centroid table: the layout checks above verify
+    # index_type/num_shards/metric, and a mismatched caller-passed
+    # centroids table silently files appended vectors into cells no probe
+    # selection will ever route their queries to. Same
     # refuse-on-mismatch discipline as the other layout knobs: the stored
     # table wins; a passed table that DISAGREES (count or contents) is an
     # error, not a preference. Both tables are nlist-sized, so the exact
@@ -296,9 +290,9 @@ def incremental_build(
                         F.col("cvec").cast("array<double>").alias(name),
                     )
 
-                # tolerant per-element comparison (ADVICE r12): exact float
-                # equality refused callers whose table round-tripped through
-                # a lossy path (float32 re-encode, float64 recompute) even
+                # tolerant per-element comparison: exact float equality
+                # would refuse callers whose table round-tripped through a
+                # lossy path (float32 re-encode, float64 recompute) even
                 # though the geometry is identical. 1e-5 absolute on O(1)-
                 # magnitude centroids is ~100x a float32 round-trip error
                 # and ~10000x below any genuinely different centroid.
@@ -423,18 +417,11 @@ def incremental_build(
         # stored graphs and ONLY those shard partitions are rewritten
         # (dynamic partition overwrite — neighbor lists of existing nodes
         # change when new nodes link in, so an append-only write can't
-        # represent the update). Legacy centroid-layout HNSW artifacts take
-        # the IVF append path with explicit centroids instead.
+        # represent the update).
         hnsw_params = meta_now.get("hnsw") or {}
         m_ = hnsw_params.get("m", config.hnsw_m)
         efc_ = hnsw_params.get("ef_construction", config.hnsw_ef_construction)
         seed_ = hnsw_params.get("seed", config.seed)
-        if not meta_now.get("hnsw_graph"):
-            raise ValueError(
-                "HNSW incremental append requires a graph artifact "
-                "(build_index since r5); legacy centroid-layout HNSW "
-                "indexes append via index_type='IVF' with their centroids"
-            )
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
             if _epoch_done(out_dir, _token(), epoch_id):
