@@ -1106,3 +1106,80 @@ def test_compact_index_preserves_capped_split_lists(spark, tmp_path_factory):
         "query_id", "rank"
     ).collect()
     assert after == before
+
+
+def _attr_corpus_parquet(spark, path, n=4000, dim=16, seed=11):
+    """A parquet corpus of n clustered vectors with two int attribute
+    columns (one follows the cluster, one is dispersed)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    owner = rng.integers(0, 40, n)
+    V = (rng.normal(0.0, 5.0, (40, dim))[owner] + rng.normal(0.0, 0.5, (n, dim))).astype(
+        np.float32
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(np.arange(n, dtype=np.int64)),
+                "embedding": pa.array(list(V), pa.list_(pa.float32())),
+                "a_corr": pa.array((owner % 5).astype(np.int32)),
+                "a_disp": pa.array(rng.integers(0, 7, n).astype(np.int32)),
+            }
+        ),
+        path,
+    )
+    return spark.read.parquet(path)
+
+
+def test_build_index_spark_job_budget(spark, tmp_path_factory):
+    """An IVF build with attributes, given its centroid table (training is
+    MLlib KMeans, whose jobs are its own), runs a handful of Spark jobs: the
+    centers go to the assign kernel and to centroids/ from the driver, each
+    stats table is one action, and the 41-directory vectors/ tree is listed
+    without a distributed job. The same build ran 31 jobs when each of
+    those was a Spark job of its own."""
+    d = tmp_path_factory.mktemp("job_budget")
+    corpus = _attr_corpus_parquet(spark, str(d / "corpus.parquet"))
+    cents = train_centroids(spark, corpus, nlist=41, seed=42, sample_fraction=1.0)
+    sc = spark.sparkContext
+    group = "test-build-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        build_index(
+            spark, corpus, str(d / "idx"),
+            EngineConfig(index_type="IVF", vector_dim=16, nlist=41, centroid_polish_iters=0,
+                         ivf_max_list_factor=None, recall_curve_queries=16),
+            centroids_df=cents,
+            attr_cols=["a_corr", "a_disp"],
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 15, f"build_index ran {len(jobs)} Spark jobs"
+
+
+def test_sidecar_nlist_counts_written_centroids(spark, tmp_path_factory):
+    """A corpus with fewer distinct vectors than nlist gets fewer centers;
+    the sidecar's nlist (which sizes the default nprobe) must count the
+    centers actually written, not the configured nlist."""
+    import os
+
+    import pyarrow.dataset as pads
+
+    rng = np.random.default_rng(3)
+    distinct = rng.normal(0.0, 1.0, (4, 16))
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in distinct[i % 4]]) for i in range(200)],
+        "vec_id BIGINT, embedding ARRAY<FLOAT>",
+    )
+    out = str(tmp_path_factory.mktemp("few_distinct"))
+    build_index(
+        spark, corpus, out,
+        EngineConfig(index_type="IVF", vector_dim=16, nlist=8, kmeans_sample_fraction=1.0,
+                     centroid_polish_iters=0, ivf_max_list_factor=None, recall_curve=False),
+    )
+    written = pads.dataset(os.path.join(out, "centroids"), format="parquet").count_rows()
+    assert written < 8
+    assert read_metadata(out)["nlist"] == written

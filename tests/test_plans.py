@@ -252,3 +252,42 @@ def test_spread_fires_only_where_measured_to_win(spark):
     assert "RoundRobinPartitioning" not in plan, (
         "the Arrow kernel must not spread: vectorized map work, measured slower spread"
     )
+
+
+def test_driver_written_tables_match_spark(spark, tmp_path_factory):
+    """attr_stats/, attr_cell_stats/ and centroids/ are written from the
+    driver with pyarrow; each must hold exactly what the Spark groupBy (or
+    the centroid collect) gives, under the schema a Spark write of the same
+    frame reads back with."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path_factory.mktemp("driver_tables"))
+    corpus = load_table(spark, "embeddings", SF_SMOKE).withColumn(
+        "a_mod", (F.col("vec_id") % 7).cast("int")
+    )
+    handle = build_index(
+        spark, corpus, out,
+        EngineConfig(index_type="IVF", nlist=16, kmeans_sample_fraction=1.0, recall_curve=False),
+        attr_cols=["a_mod"],
+    )
+    vectors = spark.read.parquet(handle.vectors_dir)
+    spark_written = {
+        "attr_stats": corpus.groupBy("a_mod").agg(F.count(F.lit(1)).alias("count")),
+        "attr_cell_stats": vectors.groupBy("centroid_id", "a_mod").agg(
+            F.count(F.lit(1)).alias("count")
+        ),
+        "centroids": spark.createDataFrame(
+            [(int(i), [float(x) for x in c]) for i, c in zip(*handle.centroid_arrays())],
+            "centroid_id INT, cvec ARRAY<FLOAT>",
+        ),
+    }
+    for name, want in spark_written.items():
+        ref = str(tmp_path_factory.mktemp(f"ref_{name}"))
+        want.coalesce(1).write.mode("overwrite").parquet(ref)
+        got = spark.read.parquet(os.path.join(out, name))
+        exp = spark.read.parquet(ref)
+        assert got.schema == exp.schema, name
+        keys = [c for c in exp.columns if c != "cvec"]
+        assert got.orderBy(*keys).collect() == exp.orderBy(*keys).collect(), name

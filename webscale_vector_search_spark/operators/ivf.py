@@ -9,6 +9,11 @@ Reference behaviors re-expressed (SURVEY.md §2.3):
   query time scan only the nprobe nearest inverted lists
   (nprobe = min(64, max(1, nlist // 8)) at 549).
 
+Centroid tables travel in two forms: a (centroid_id INT, cvec ARRAY<FLOAT>)
+DataFrame, or the (c_ids int64, C float64) numpy pair `centroid_arrays`
+returns. The kernels accept either; the build keeps the numpy form, so
+after the fit the centers never round-trip through Spark.
+
 Physical plan (the whole point at 100 TB):
 1. centroids are tiny (nlist <= ~10^4) -> broadcast; probe selection is a
    BroadcastNestedLoopJoin of the query batch x centroids + rank window.
@@ -25,10 +30,61 @@ Physical plan (the whole point at 100 TB):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from webscale_vector_search_spark.operators.knn import topk, with_distance
+
+
+def centroid_arrays(centroids) -> tuple:
+    """(c_ids int64, C float64), sorted by centroid_id, from a centroid
+    table DataFrame or an already-split (c_ids, C) pair (returned as is).
+    The DataFrame is collected unsorted and ordered here: an orderBy would
+    cost a job even on a driver-local table."""
+    if isinstance(centroids, tuple):
+        return centroids
+    rows = centroids.collect()
+    c_ids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
+    C = np.array([r["cvec"] for r in rows], dtype=np.float64)
+    order = np.argsort(c_ids, kind="stable")
+    return c_ids[order], C[order]
+
+
+def centroids_frame(spark: SparkSession, cents: tuple) -> DataFrame:
+    """The (centroid_id INT, cvec ARRAY<FLOAT>) DataFrame of a numpy pair —
+    built from Arrow, so it is a driver-local relation and costs no job."""
+    from webscale_vector_search_spark.sources.index_io import centroid_table
+
+    return spark.createDataFrame(centroid_table(*cents))
+
+
+def train_centroid_arrays(
+    corpus: DataFrame,
+    nlist: int,
+    seed: int = 42,
+    sample_fraction: float = 0.2,
+    vec_col: str = "embedding",
+) -> tuple:
+    """K5 — fit nlist centroids with MLlib KMeans on a seeded sample.
+
+    Returns the (c_ids, C) pair (see centroid_arrays), C rounded to the
+    float32 the centroid table stores, so assignment and serving use
+    identical values. The sample keeps the training set bounded at any
+    corpus size; KMeans itself is the distributed MLlib implementation
+    (k-means|| init), so even the sample never has to fit on one executor.
+    MLlib can return fewer than nlist centers (fewer distinct points than
+    nlist), so callers size the index from the result."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    sample = corpus.select(vec_col)
+    if sample_fraction < 1.0:
+        sample = sample.sample(fraction=sample_fraction, seed=seed)
+    train = sample.select(array_to_vector(F.col(vec_col)).alias("features"))
+    model = KMeans(k=nlist, seed=seed, maxIter=20).fit(train)
+    C = np.array(model.clusterCenters(), dtype=np.float32).astype(np.float64)
+    return np.arange(len(C), dtype=np.int64), C
 
 
 def train_centroids(
@@ -39,49 +95,33 @@ def train_centroids(
     sample_fraction: float = 0.2,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """K5 — fit nlist centroids with MLlib KMeans on a seeded sample.
-
-    Returns (centroid_id INT, cvec ARRAY<FLOAT>). The sample keeps the
-    training set bounded at any corpus size; KMeans itself is the distributed
-    MLlib implementation (k-means|| init), so even the sample never has to
-    fit on one executor.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    sample = corpus.select(vec_col)
-    if sample_fraction < 1.0:
-        sample = sample.sample(fraction=sample_fraction, seed=seed)
-    train = sample.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=nlist, seed=seed, maxIter=20).fit(train)
-    centers = model.clusterCenters()
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "centroid_id INT, cvec ARRAY<FLOAT>",
+    """train_centroid_arrays as a (centroid_id INT, cvec ARRAY<FLOAT>)
+    DataFrame (driver-local, no job to read)."""
+    return centroids_frame(
+        spark, train_centroid_arrays(corpus, nlist, seed, sample_fraction, vec_col)
     )
 
 
 def assign_centroids(
-    corpus: DataFrame, centroids: DataFrame, vec_col: str = "embedding"
+    corpus: DataFrame, centroids, vec_col: str = "embedding"
 ) -> DataFrame:
     """K6 (assign) — nearest centroid per vector, as a map-only numpy kernel.
 
-    The centroid table is tiny; it ships to every task as a closure array and
+    `centroids` is a centroid table DataFrame or a (c_ids, C) pair
+    (centroid_arrays). It is tiny; it ships to every task as a closure array and
     the argmin runs vectorized over Arrow batches ((v-c)^2 via the dot-product
     expansion). NO shuffle, NO join — at 100 TB this is a single pass over
     the corpus. Ties break to the lowest centroid_id (matches the SQL
     reference form below). Output: corpus columns + centroid_id INT.
     """
-    import numpy as np
     from pyspark.sql import types as T
 
-    rows = centroids.orderBy("centroid_id").collect()
     # REAL ids, not argmin positions: centroid tables can be non-dense
     # (split_oversized_lists retires parents and adds children past the
     # old max id) — a positional label would file vectors into wrong or
     # retired lists. Sorted order keeps the tie-break at the lowest id.
-    c_ids = np.array([r["centroid_id"] for r in rows], dtype=np.int32)
-    C = np.array([r["cvec"] for r in rows], dtype=np.float64)  # (nlist, dim)
+    c_ids, C = centroid_arrays(centroids)  # (nlist,), (nlist, dim)
+    c_ids = c_ids.astype(np.int32)
     c_sq = (C * C).sum(axis=1)
     schema = T.StructType(list(corpus.schema.fields) + [T.StructField("centroid_id", T.IntegerType())])
 
@@ -104,10 +144,10 @@ def assign_centroids(
 
 
 def polish_centroids(
-    corpus: DataFrame, centroids: DataFrame, iters: int = 1, vec_col: str = "embedding"
+    corpus: DataFrame, centroids, iters: int = 1, vec_col: str = "embedding"
 ) -> DataFrame:
     """K5 refinement — exact full-corpus Lloyd iteration(s) on the coarse
-    quantizer.
+    quantizer (`centroids`: a table DataFrame or a (c_ids, C) pair).
 
     MLlib KMeans trains on a bounded sample (train_centroids); with nlist ~
     sqrt(n) that leaves only tens of sample points per list, and the centroid
@@ -125,12 +165,9 @@ def polish_centroids(
     sorts partials by task partition id before summing, so centers are
     bit-deterministic for a fixed corpus partitioning.
     """
-    import numpy as np
     from pyspark.sql import types as T
 
-    rows = centroids.orderBy("centroid_id").collect()
-    c_ids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-    C = np.array([r["cvec"] for r in rows], dtype=np.float64)
+    c_ids, C = centroid_arrays(centroids)
     nlist, dim = C.shape
 
     for _ in range(iters):
@@ -201,11 +238,7 @@ def polish_centroids(
         for r in folded:  # <= nlist rows on the driver, like train_centroids
             C[r["slot"]] = np.array(r["vsum"]) / r["n"]
 
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(int(cid), [float(x) for x in C[i]]) for i, cid in enumerate(c_ids)],
-        "centroid_id INT, cvec ARRAY<FLOAT>",
-    )
+    return centroids_frame(corpus.sparkSession, (c_ids, C))
 
 
 def assign_centroids_sql(
@@ -306,9 +339,7 @@ class DriverProbes:
         if centroid_np is not None:  # handle-cached arrays (IndexHandle.centroid_arrays)
             self.c_ids, self.C = centroid_np
         else:
-            c_rows = centroids.orderBy("centroid_id").collect()
-            self.C = np.stack([r["cvec"] for r in c_rows]).astype(np.float64)
-            self.c_ids = np.array([r["centroid_id"] for r in c_rows], dtype=np.int64)
+            self.c_ids, self.C = centroid_arrays(centroids)
         nq, nlist = len(self.q_ids), len(self.c_ids)
         # qc2[q, l] = ||Q[q] - C[l]||^2 — probe ranking here, and the
         # coarse term of the residual ADC decomposition in pq.adc_search
@@ -466,7 +497,7 @@ def _local_kmeans(V, k: int, seed: int, iters: int = 8):
 def split_oversized_lists(
     spark: SparkSession,
     assigned: DataFrame,
-    centroids: DataFrame,
+    centroids,
     max_list_factor: float,
     seed: int = 42,
     vec_col: str = "embedding",
@@ -501,17 +532,19 @@ def split_oversized_lists(
     corpus-sized shuffles or reaches the driver. Deterministic: seeded
     per-list k-means on a det_hash sample, seed varied per pass.
 
-    Returns (reassigned, new_centroids, info) where info carries
-    cap/split-list counts for index metadata and reporting.
+    Returns (reassigned, new_centroids, info): new_centroids as a
+    (c_ids, C) pair (centroid_arrays), info carrying cap/split-list counts
+    for index metadata and reporting.
     """
     import math
 
+    centroids = centroid_arrays(centroids)
     counts = {
         r["centroid_id"]: r["cnt"]
         for r in assigned.groupBy("centroid_id").agg(F.count("*").alias("cnt")).collect()
     }
     n_total = sum(counts.values())
-    nlist0 = centroids.count()
+    nlist0 = len(centroids[0])
     cap = max(1, math.ceil(max_list_factor * n_total / max(nlist0, 1)))
     info = {"cap": cap, "lists_split": 0, "nlist_before": nlist0, "passes": 0}
     for p in range(max_passes):
@@ -523,7 +556,7 @@ def split_oversized_lists(
             break
         info["lists_split"] += n_split
         info["passes"] = p + 1
-    info["nlist_after"] = centroids.count() if info["passes"] else info["nlist_before"]
+    info["nlist_after"] = len(centroids[0])
     # non-convergence is a visible signal, not a silent success: a
     # pathological list can stay over cap for every pass (e.g. massive
     # duplicate vectors that no center split separates)
@@ -535,7 +568,7 @@ def split_oversized_lists(
 def _split_pass(
     spark: SparkSession,
     assigned: DataFrame,
-    centroids: DataFrame,
+    centroids: tuple,
     cap: int,
     counts: dict[int, int],
     seed: int,
@@ -549,14 +582,12 @@ def _split_pass(
     one filtered aggregate over the split parents' rows only."""
     import math
 
-    import numpy as np
-
     from webscale_vector_search_spark.functions.hashing import det_hash
 
     oversized = {cid: c for cid, c in counts.items() if c > cap}
     if not oversized:
         return assigned, centroids, 0, counts
-    c_rows = centroids.orderBy("centroid_id").collect()
+    c_ids, C_all = centroids
 
     s_of = {cid: max(2, math.ceil(c / cap)) for cid, c in oversized.items()}
     # bounded deterministic sample per oversized list: ~sample_per_center
@@ -596,21 +627,21 @@ def _split_pass(
     # new centroid table: untouched parents keep their ids; sub-centers get
     # fresh ids above the old max (float32 round-trip: the table is the
     # serving artifact, stored float32)
-    next_id = max(r["centroid_id"] for r in c_rows) + 1
-    new_rows = [
-        (int(r["centroid_id"]), r["cvec"]) for r in c_rows if r["centroid_id"] not in oversized
-    ]
+    next_id = int(c_ids.max()) + 1
+    keep = ~np.isin(c_ids, list(oversized))
+    new_ids, new_C = [c_ids[keep]], [C_all[keep]]
     sub_map = {}
     by_parent: dict[int, list] = {}
     for r in sorted(sub_rows, key=lambda r: (r["centroid_id"], r["sub"])):
         by_parent.setdefault(r["centroid_id"], []).append(r["cvec"])
     for parent in sorted(by_parent):
-        vecs = by_parent[parent]
+        vecs = np.array(by_parent[parent], dtype=np.float64)
         ids = np.arange(next_id, next_id + len(vecs), dtype=np.int64)
         next_id += len(vecs)
-        new_rows.extend((int(i), [float(x) for x in v]) for i, v in zip(ids, vecs))
-        sub_map[parent] = (ids, np.array(vecs, dtype=np.float64))
-    new_centroids = spark.createDataFrame(new_rows, "centroid_id INT, cvec ARRAY<FLOAT>")
+        new_ids.append(ids)
+        new_C.append(vecs)
+        sub_map[parent] = (ids, vecs)
+    new_centroids = (np.concatenate(new_ids), np.concatenate(new_C))
 
     schema = assigned.schema
 
@@ -689,7 +720,7 @@ def index_skew(spark: SparkSession, index_dir: str) -> dict:
 
 
 def assign_centroids_multi(
-    corpus: DataFrame, centroids: DataFrame, n_assign: int = 2, vec_col: str = "embedding"
+    corpus: DataFrame, centroids, n_assign: int = 2, vec_col: str = "embedding"
 ) -> DataFrame:
     """Soft assignment: each vector lands in its `n_assign` nearest lists.
 
@@ -698,12 +729,9 @@ def assign_centroids_multi(
     write-side counterpart of read-side multi-probing. Output: one row per
     (vector, assigned centroid), `assign_rank` 0 = nearest.
     """
-    import numpy as np
     from pyspark.sql import types as T
 
-    rows = centroids.orderBy("centroid_id").collect()
-    C = np.array([r["cvec"] for r in rows], dtype=np.float64)
-    c_ids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
+    c_ids, C = centroid_arrays(centroids)
     c_sq = (C * C).sum(axis=1)
     n_assign = min(n_assign, len(c_ids))
     schema = T.StructType(

@@ -29,13 +29,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _centroid_array(centroids: DataFrame) -> np.ndarray:
-    """(max_centroid_id + 1, dim) float64 lookup, indexable by centroid_id."""
-    rows = centroids.orderBy("centroid_id").collect()
-    dim = len(rows[0]["cvec"])
-    C = np.zeros((max(r["centroid_id"] for r in rows) + 1, dim))
-    for r in rows:
-        C[r["centroid_id"]] = r["cvec"]
+def _centroid_array(centroids) -> np.ndarray:
+    """(max_centroid_id + 1, dim) float64 lookup, indexable by centroid_id
+    (`centroids`: a table DataFrame or a (c_ids, C) pair)."""
+    from webscale_vector_search_spark.operators.ivf import centroid_arrays
+
+    c_ids, cv = centroid_arrays(centroids)
+    C = np.zeros((int(c_ids.max()) + 1, cv.shape[1]))
+    C[c_ids] = cv
     return C
 
 
@@ -99,8 +100,9 @@ def fit_codebooks(
         # sample with nlist=65536, exactly the huge-nlist regime the
         # global-OPQ path is documented for. Chunking bounds the transient
         # to O(block * nlist).
-        crows = centroids.orderBy("centroid_id").collect()
-        C = np.stack([np.asarray(r["cvec"], dtype=np.float64) for r in crows])
+        from webscale_vector_search_spark.operators.ivf import centroid_arrays
+
+        C = centroid_arrays(centroids)[1]
         csq = (C * C).sum(1)
         for s in range(0, len(X), 4096):
             blk = X[s : s + 4096]

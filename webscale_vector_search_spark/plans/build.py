@@ -4,7 +4,8 @@ Reference: create_sharded_index (vector_search_cluster.py:977-1068) —
 single-process, whole-corpus-in-RAM, unseeded shuffle, per-shard FAISS build.
 
 This job is parallel, out-of-core, deterministic:
-  read corpus -> validate dim -> shard assign (seeded, id-hash) ->
+  read corpus -> validate dim + count (one aggregate) -> shard assign
+  (seeded, id-hash) ->
   [IVF: KMeans on sample -> centroid assign]
   [IVFPQ: + codebook fit -> PQ encode]
   -> write.partitionBy(...) parquet + metadata sidecar
@@ -26,28 +27,19 @@ from webscale_vector_search_spark.config import EngineConfig
 from webscale_vector_search_spark.operators import ivf as ivf_ops
 from webscale_vector_search_spark.operators import pq as pq_ops
 from webscale_vector_search_spark.operators.shard import hash_shard
-from webscale_vector_search_spark.schemas import validate_vectors
+from webscale_vector_search_spark.schemas import validated_count
 from webscale_vector_search_spark.sources import index_io
 
 
-def _packed_repartition(df: DataFrame, part_col: str, n_values: int) -> DataFrame:
-    """Cluster rows by their target directory for a partitioned write,
-    WITHOUT collapsing to one task per partition value.
-
-    Plain repartition(n, part_col) creates the tasks-x-dirs small-file
-    explosion's dual: one unbounded file per value, write parallelism capped
-    at n_values, and hash collisions leaving ~1/e of tasks empty at large
-    n_values. The secondary bucket spreads each value over `k` tasks sized
-    to the cluster's parallelism; `spark.sql.files.maxRecordsPerFile`
-    (session.py) bounds individual file size independently.
-    """
-    from webscale_vector_search_spark.functions.hashing import det_hash
-
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    k = max(1, (2 * parallelism) // max(n_values, 1))
-    first_id = df.columns[0]  # vec_id by construction of `base`
-    bucket = (det_hash(F.col(first_id)) % F.lit(k)).cast("int")
-    return df.repartition(n_values * k, F.col(part_col), bucket)
+def _write_partitioned(df: DataFrame, part_col: str, path: str) -> None:
+    """Partitioned parquet write with rows clustered by their target
+    directory: a rebalance shuffle on `part_col`. Without it every map task
+    writes a file into every directory (tasks x dirs small files — measured
+    as the dominant scan overhead at the 10M tier). AQE sizes the rebalance:
+    it coalesces small partitions (few write tasks for a small index) and
+    splits skewed ones (a hot value is not one straggler task), and
+    `spark.sql.files.maxRecordsPerFile` (session.py) bounds file size."""
+    df.hint("rebalance", part_col).write.mode("overwrite").partitionBy(part_col).parquet(path)
 
 
 def build_index(
@@ -79,7 +71,6 @@ def build_index(
     a join. HNSW graph rows have a fixed schema, so attrs are written to an
     `attrs/` sidecar instead (one map-only pass, no shuffle) and filtered
     searches pay a candidates-only semi-join (see search_index)."""
-    validate_vectors(corpus, config.vector_dim, vec_col)
     attr_cols = list(attr_cols) if attr_cols else None
     if attr_cols:
         reserved = {
@@ -104,19 +95,13 @@ def build_index(
         base = with_l2_normalized(base, "embedding")
     elif config.metric != "sq_l2":
         raise ValueError(f"unknown metric {config.metric!r}")
-    n_total = base.count()
+    n_total = validated_count(corpus, config.vector_dim, vec_col)
 
     nlist = pq_m = None
     vectors_dir = os.path.join(out_dir, "vectors")
 
     if config.index_type == "FLAT":
-        sharded = hash_shard(base, config.num_shards)
-        # cluster rows by their target directory before the partitioned
-        # write: otherwise every map task writes a file into every shard dir
-        # (tasks x shards small files — measured as the dominant scan
-        # overhead at the 10M tier)
-        sharded = _packed_repartition(sharded, "shard_id", config.num_shards)
-        sharded.write.mode("overwrite").partitionBy("shard_id").parquet(vectors_dir)
+        _write_partitioned(hash_shard(base, config.num_shards), "shard_id", vectors_dir)
     elif config.index_type == "HNSW":
         # One graph per shard, persisted as adjacency columns BESIDE the
         # vectors (reference: faiss.write_index per shard,
@@ -149,25 +134,28 @@ def build_index(
                 os.path.join(out_dir, "attrs")
             )
     elif config.index_type in ("IVF", "IVFPQ"):
-        nlist = config.resolved_nlist(n_total)
+        # the centers stay a driver-side (c_ids, C) pair throughout: the
+        # kernels take them in their closures and centroids/ is written
+        # with pyarrow, so no centroid table round-trips through Spark
         if centroids_df is not None:
-            centroids = centroids_df
-            # the sidecar's nlist drives the serving default nprobe — a
-            # reused centroid table from a different-nlist build would
-            # record the config's number, not the artifact's, and recall
-            # silently collapses (e.g. meta nlist=8 over 1000 real lists
-            # -> default nprobe 1). Derive from what was actually supplied.
-            supplied = centroids.count()
-            if supplied != nlist:
-                nlist = supplied
+            centroids = ivf_ops.centroid_arrays(centroids_df)
         else:
-            centroids = ivf_ops.train_centroids(
-                spark, base, nlist, seed=config.seed, sample_fraction=config.kmeans_sample_fraction
+            centroids = ivf_ops.train_centroid_arrays(
+                base, config.resolved_nlist(n_total), seed=config.seed,
+                sample_fraction=config.kmeans_sample_fraction,
             )
             if config.centroid_polish_iters > 0:
-                centroids = ivf_ops.polish_centroids(
-                    base, centroids, iters=config.centroid_polish_iters
+                centroids = ivf_ops.centroid_arrays(
+                    ivf_ops.polish_centroids(
+                        base, centroids, iters=config.centroid_polish_iters
+                    )
                 )
+        # the sidecar's nlist drives the serving default nprobe, so it is
+        # the number of centers actually written — a reused table from a
+        # different-nlist build, or a fit that returned fewer centers, would
+        # otherwise record the config's number and recall silently collapses
+        # (e.g. meta nlist=8 over 1000 real lists -> default nprobe 1)
+        nlist = len(centroids[0])
         assigned = ivf_ops.assign_centroids(base, centroids)
         split_info = None
         presplit = None
@@ -190,7 +178,7 @@ def build_index(
                 spark, presplit, centroids, config.ivf_max_list_factor, seed=config.seed
             )
             nlist = split_info["nlist_after"]
-        centroids.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "centroids"))
+        index_io.write_centroids(os.path.join(out_dir, "centroids"), centroids)
         if config.index_type == "IVFPQ":
             pq_m = config.resolved_pq_m()
             if config.pq_opq_iters > 0 and not config.pq_residual:
@@ -261,9 +249,7 @@ def build_index(
                 assigned = pq_ops.encode(
                     assigned, books, centroids=pq_cents, rotation=rot
                 )
-        # pack each inverted list into few files (see FLAT note above)
-        assigned = _packed_repartition(assigned, "centroid_id", nlist)
-        assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(vectors_dir)
+        _write_partitioned(assigned, "centroid_id", vectors_dir)
         if config.index_type == "IVFPQ" and config.pq_local_codebooks:
             persisted_assigned.unpersist()
         if presplit is not None:

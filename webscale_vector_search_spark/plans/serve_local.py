@@ -328,27 +328,6 @@ def _flat_subset(handle, data, where, allowed_sorted, tomb_sorted):
     return sub
 
 
-def _centroid_arrays_local(handle: IndexHandle) -> tuple:
-    """(c_ids, C) without a Spark job: prefer the handle's cached collect
-    (shared with the Spark path), else read the tiny centroid parquet via
-    Arrow — float32 storage widened to float64, value-identical to the
-    collect route."""
-    if handle._centroid_np is not None:
-        return handle._centroid_np
-    cent_dir = os.path.join(os.path.dirname(handle.vectors_dir), "centroids")
-    tbl = _dataset(cent_dir).to_table(columns=["centroid_id", "cvec"]).sort_by("centroid_id")
-    arrs = {"ids": tbl.column("centroid_id").to_numpy().astype(np.int64, copy=False)}
-    cv = tbl.column("cvec").combine_chunks()
-    C = (
-        cv.flatten()
-        .to_numpy(zero_copy_only=False)
-        .reshape(tbl.num_rows, -1)
-        .astype(np.float64)
-    )
-    handle._centroid_np = (arrs["ids"], C)
-    return handle._centroid_np
-
-
 # --------------------------------------------------------------------------
 # probe selection (DriverProbes' math, artifact-cache edition)
 
@@ -359,7 +338,7 @@ class _LocalProbes:
     set (and hence the candidate set) matches the Spark path exactly."""
 
     def __init__(self, handle: IndexHandle, Q: np.ndarray, nprobe: int):
-        self.c_ids, self.C = _centroid_arrays_local(handle)
+        self.c_ids, self.C = handle.centroid_arrays()
         nq, nlist = len(Q), len(self.c_ids)
         qc2 = (
             (Q * Q).sum(1)[:, None]

@@ -91,19 +91,26 @@ FIXTURE_TABLES = (
 )
 
 
-def validate_vectors(df, dim: int, col: str = "embedding"):
-    """Ingest-time dimension check the reference lacks (§1.3).
-
-    Returns the DataFrame unchanged; raises if any row violates ``size(col) = dim``.
-    Runs as one cheap aggregate, not a collect.
-    """
+def validated_count(df, dim: int, col: str = "embedding") -> int:
+    """Ingest-time dimension check the reference lacks (§1.3), fused with
+    the row count: ONE aggregate returns both the number of rows and the
+    number violating ``size(col) = dim``. Raises if any row violates it;
+    returns the row count."""
     from pyspark.sql import functions as F
 
     # size(NULL) is NULL, which a bare != would silently drop — NULL vectors
     # must fail ingest too, not crash a numpy kernel later
-    bad = df.filter(
-        F.col(col).isNull() | (F.size(F.col(col)) != dim)
-    ).limit(1).count()
-    if bad:
+    bad = F.col(col).isNull() | (F.size(F.col(col)) != dim)
+    n, n_bad = df.agg(
+        F.count(F.lit(1)), F.count(F.when(bad, 1))
+    ).first()
+    if n_bad:
         raise ValueError(f"vector column {col!r} has NULL rows or rows with size != {dim}")
+    return n
+
+
+def validate_vectors(df, dim: int, col: str = "embedding"):
+    """validated_count's check alone: returns the DataFrame unchanged;
+    raises if any row violates ``size(col) = dim``."""
+    validated_count(df, dim, col)
     return df

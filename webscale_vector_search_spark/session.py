@@ -51,8 +51,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(256 * 1024 * 1024))
         # bound individual output files (a 64-dim vector row ~ 300 B, so 2M
-        # records ~ 500 MB) — write-task count governs parallelism, this
-        # governs file size; see plans/build.py::_packed_repartition
+        # records ~ 500 MB) — the AQE-sized rebalance before a partitioned
+        # write governs parallelism, this governs file size; see
+        # plans/build.py::_write_partitioned
         .config("spark.sql.files.maxRecordsPerFile", "2000000")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # one BLAS thread per python worker: N workers x an N-thread BLAS
@@ -71,6 +72,14 @@ def get_spark(
     )
     if not os.environ.get("SPARK_MASTER") and "SPARK_ENV_LOADED" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
+        # list partition directories on the driver however many there are:
+        # past the threshold (32 paths by default) Spark lists them in a
+        # distributed job, which in local mode runs in this same JVM — a
+        # job per read of an index's vectors/ tree, with no parallelism
+        # gained over the driver's own listing
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(1 << 30)
+        )
         # 16g (was 8g): in local mode ALL task threads share the driver
         # JVM heap. 32 concurrent 256 MB-split parquet reads (Hadoop
         # vectored IO allocates ~70 MB heap buffers per range) plus

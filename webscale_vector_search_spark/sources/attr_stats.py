@@ -116,16 +116,14 @@ def _cache_put(cache: dict, key, val, cap: int = PLAN_CACHE_CAP):
 
 def write_attr_stats(base: DataFrame, attr_cols: list, out_dir: str) -> bool:
     """One map-side-combined aggregation over the corpus -> the per-combo
-    count table. Skipped (returns False) when the attribute domain exceeds
-    MAX_COMBOS combinations — a stats table that large stops being a
-    broadcast-trivial planner input."""
+    count table, collected and written in one action (index_io.write_capped).
+    Skipped (returns False) when the attribute domain exceeds MAX_COMBOS
+    combinations — a stats table that large stops being a broadcast-trivial
+    planner input."""
+    from webscale_vector_search_spark.sources.index_io import write_capped
+
     counts = base.groupBy(*attr_cols).agg(F.count(F.lit(1)).alias("count"))
-    if counts.limit(MAX_COMBOS + 1).count() > MAX_COMBOS:
-        return False
-    counts.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, STATS_DIRNAME)
-    )
-    return True
+    return write_capped(counts, os.path.join(out_dir, STATS_DIRNAME), MAX_COMBOS)
 
 
 def write_attr_cell_stats(
@@ -137,17 +135,16 @@ def write_attr_cell_stats(
     column, attrs ride the rows — a 2-3 int-column scan). Skipped past
     CELL_STATS_MAX_ROWS present rows; the planner then falls back to the
     pessimistic ceil(base/s) budget for attr predicates."""
+    from webscale_vector_search_spark.sources.index_io import write_capped
+
     counts = (
         spark.read.parquet(vectors_dir)
         .groupBy("centroid_id", *attr_cols)
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    if counts.limit(CELL_STATS_MAX_ROWS + 1).count() > CELL_STATS_MAX_ROWS:
-        return False
-    counts.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, CELL_STATS_DIRNAME)
+    return write_capped(
+        counts, os.path.join(out_dir, CELL_STATS_DIRNAME), CELL_STATS_MAX_ROWS
     )
-    return True
 
 
 def write_graph_cell_stats(
@@ -170,27 +167,26 @@ def write_graph_cell_stats(
     maintenance can assign removed rows to pseudo-cells without refitting."""
     from webscale_vector_search_spark.operators.ivf import (
         assign_centroids,
-        train_centroids,
+        train_centroid_arrays,
+    )
+    from webscale_vector_search_spark.sources.index_io import (
+        write_capped,
+        write_centroids,
     )
 
     cells = max(4, min(STATS_QUANT_CELLS, n_total // 32))
     frac = min(1.0, 100_000 / max(1, n_total))
-    cents = train_centroids(
-        spark, base, cells, seed=seed, sample_fraction=frac, vec_col=vec_col
+    cents = train_centroid_arrays(
+        base, cells, seed=seed, sample_fraction=frac, vec_col=vec_col
     )
     counts = (
         assign_centroids(base.select(vec_col, *attr_cols), cents, vec_col=vec_col)
         .groupBy("centroid_id", *attr_cols)
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    if counts.limit(CELL_STATS_MAX_ROWS + 1).count() > CELL_STATS_MAX_ROWS:
+    if not write_capped(counts, os.path.join(out_dir, CELL_STATS_DIRNAME), CELL_STATS_MAX_ROWS):
         return False
-    counts.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, CELL_STATS_DIRNAME)
-    )
-    cents.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, STATS_CENTROIDS_DIRNAME)
-    )
+    write_centroids(os.path.join(out_dir, STATS_CENTROIDS_DIRNAME), cents)
     return True
 
 
@@ -244,11 +240,12 @@ def _swap_stats_dir(path: str, merged: DataFrame, cap: int) -> None:
     and the next compaction recomputes it."""
     import shutil
 
+    from webscale_vector_search_spark.sources.index_io import write_capped
+
     tmp, old = path + ".rewrite", path + ".old"
-    if merged.limit(cap + 1).count() > cap:
+    if not write_capped(merged, tmp, cap):
         shutil.rmtree(path, ignore_errors=True)
         return
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)
     os.rename(tmp, path)

@@ -148,6 +148,64 @@ def metadata_dict(
     }
 
 
+def write_table_dir(tbl, path: str) -> None:
+    """Write a small Arrow table from the driver as a one-file parquet
+    table directory at `path` (replacing it) — the layout Spark's writer
+    produces, read back by Spark and pyarrow alike, without a job."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(tbl, os.path.join(path, "part-00000.parquet"), compression="zstd")
+
+
+def write_capped(df: DataFrame, path: str, cap: int) -> bool:
+    """Materialize a small DataFrame (a stats table) in one action and
+    write it with write_table_dir when it holds at most `cap` rows. Returns
+    False, writing nothing, past the cap: the limit keeps an oversized
+    result from reaching the driver."""
+    tbl = df.limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
+        return False
+    write_table_dir(tbl, path)
+    return True
+
+
+def centroid_table(c_ids: np.ndarray, C: np.ndarray):
+    """The centroid table (centroid_id INT, cvec ARRAY<FLOAT>) as Arrow."""
+    import pyarrow as pa
+
+    C32 = np.ascontiguousarray(C, dtype=np.float32)
+    cvec = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, C32.size + 1, C32.shape[1], dtype=np.int32)),
+        pa.array(C32.ravel()),
+    )
+    return pa.table({"centroid_id": pa.array(c_ids, pa.int32()), "cvec": cvec})
+
+
+def write_centroids(path: str, cents: tuple) -> None:
+    """Write the (c_ids, C) pair as a centroid table directory."""
+    write_table_dir(centroid_table(*cents), path)
+
+
+def read_centroids(index_dir: str) -> tuple:
+    """(c_ids int64, C float64) of the index's centroids/ table, sorted by
+    centroid_id — read with pyarrow, no job; float32 storage widened."""
+    import pyarrow.dataset as pads
+
+    tbl = (
+        pads.dataset(os.path.join(index_dir, "centroids"), format="parquet")
+        .to_table(columns=["centroid_id", "cvec"])
+        .sort_by("centroid_id")
+    )
+    c_ids = tbl.column("centroid_id").to_numpy().astype(np.int64)
+    cv = tbl.column("cvec").combine_chunks()
+    C = cv.flatten().to_numpy(zero_copy_only=False).reshape(tbl.num_rows, -1)
+    return c_ids, C.astype(np.float64)
+
+
 def write_codebooks(spark: SparkSession, out_dir: str, codebooks: np.ndarray) -> None:
     m, n_codes, _ = codebooks.shape
     rows = [
@@ -355,15 +413,13 @@ class IndexHandle:
         return self._tombstone_np
 
     def centroid_arrays(self) -> tuple:
-        """(c_ids int64, C float64) numpy views of the centroid table,
-        collected once and cached on the handle — probe selection runs per
-        query batch, re-reading the (tiny) centroid parquet every batch is
-        pure overhead in a serving loop."""
+        """(c_ids int64, C float64) numpy views of the centroid table, read
+        once with pyarrow (read_centroids, no Spark job) and cached on the
+        handle — probe selection runs per query batch, re-reading the
+        (tiny) centroid parquet every batch is pure overhead in a serving
+        loop."""
         if self._centroid_np is None:
-            rows = self.centroids.orderBy("centroid_id").collect()
-            c_ids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-            C = np.stack([r["cvec"] for r in rows]).astype(np.float64)
-            self._centroid_np = (c_ids, C)
+            self._centroid_np = read_centroids(self.index_dir)
         return self._centroid_np
 
 

@@ -80,6 +80,10 @@ DEFAULT_TARGET = 0.99
 # ranked correctly). 4x matches the within-cell spread the profiled tiers
 # show and keeps the correlated>dispersed ordering property.
 REPLAY_SUPPLY = 4
+# _ground_truth merges per-batch top-m partials into its running frontier
+# once they cover this many scanned rows: a partitioned index yields one
+# small batch per list file, and a merge per batch was most of the scan
+GT_FOLD_ROWS = 65536
 
 
 # --------------------------------------------------------------------------
@@ -149,18 +153,23 @@ def _ground_truth(
     else:
         own_cells = None
     q_sq = (Q * Q).sum(1)
-    best = best_x = None
     member_min: "dict | None" = {} if own_cells is not None else None
+    # running frontiers [all, out-of-own-cell]: each holds the folded
+    # top-depth partial (or None) plus the partials not yet folded in
+    fronts = [[None, []], [None, []]]
 
-    def fold(prev, part, depth):
-        if prev is None:
-            return part
-        cut = _finalize_arrays([prev, part], depth)
-        return {
-            "query_id": cut["query_id"],
-            "vec_id": cut["neighbor_id"],
-            "distance": cut["distance"],
-        }
+    def fold(front, depth):
+        parts = ([front[0]] if front[0] is not None else []) + front[1]
+        if parts:
+            cut = _finalize_arrays(parts, depth)
+            front[0] = {
+                "query_id": cut["query_id"],
+                "vec_id": cut["neighbor_id"],
+                "distance": cut["distance"],
+            }
+        front[1] = []
+
+    pending_rows = 0
 
     ex_sorted = (
         np.unique(np.asarray(exclude_ids, dtype=np.int64))
@@ -199,7 +208,7 @@ def _ground_truth(
                     continue
         d = q_sq[:, None] - 2.0 * (Q @ V.T) + (V * V).sum(1)[None, :]
         np.maximum(d, 0.0, out=d)
-        best = fold(best, batch_topk_rows(d, ids, q_ids, min(m, n)), m)
+        fronts[0][1].append(batch_topk_rows(d, ids, q_ids, min(m, n)))
         if own_cells is not None:
             # per-(query, cell) running min — batches come from hive
             # partition dirs, so a batch usually holds ONE cell value
@@ -214,13 +223,19 @@ def _ground_truth(
             )
             keep = np.isfinite(dx).any(axis=0)
             if keep.any():
-                best_x = fold(
-                    best_x,
+                fronts[1][1].append(
                     batch_topk_rows(
                         dx[:, keep], ids[keep], q_ids, min(m_x, int(keep.sum()))
-                    ),
-                    m_x,
+                    )
                 )
+        pending_rows += n
+        if pending_rows >= GT_FOLD_ROWS:
+            fold(fronts[0], m)
+            fold(fronts[1], m_x)
+            pending_rows = 0
+    fold(fronts[0], m)
+    fold(fronts[1], m_x)
+    best, best_x = fronts[0][0], fronts[1][0]
     gt_all = _finalize_arrays([best] if best is not None else [], m)
     gt_x = (
         _finalize_arrays([best_x], m_x)
