@@ -1183,3 +1183,126 @@ def test_sidecar_nlist_counts_written_centroids(spark, tmp_path_factory):
     written = pads.dataset(os.path.join(out, "centroids"), format="parquet").count_rows()
     assert written < 8
     assert read_metadata(out)["nlist"] == written
+
+
+@pytest.mark.parametrize("nlist", [4, 8, 10, 16, 128])
+def test_driver_lloyd_equals_mllib(spark, corpus, nlist):
+    """The driver-side Lloyd loop from MLlib's k-means|| start gives MLlib's
+    own centers, float32 for float32. nlist 128 at dim 64 takes MLlib's
+    distributed center-statistics branch (k^2 * dim >= 10^6), which only
+    prunes distance evaluations."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    from webscale_vector_search_spark.operators.ivf import train_centroid_arrays
+
+    train = corpus.select(array_to_vector("embedding").alias("features"))
+    want = np.array(
+        KMeans(k=nlist, seed=42, maxIter=20).fit(train).clusterCenters(), dtype=np.float32
+    )
+    _, got = train_centroid_arrays(corpus, nlist, seed=42, sample_fraction=1.0)
+    assert np.array_equal(got.astype(np.float32), want)
+
+
+def test_driver_training_rows_are_capped(spark, corpus, tmp_path_factory, monkeypatch):
+    """Past the driver budget, Lloyd runs on a seeded uniform subsample:
+    the driver receives at most cap+1 rows, the centers repeat from run to
+    run, and the sidecar's nlist counts the centers written."""
+    import os
+
+    import pyarrow.dataset as pads
+
+    from webscale_vector_search_spark.operators import ivf
+
+    cap = 120
+    monkeypatch.setattr(ivf, "DRIVER_TRAIN_BYTES", cap * 8 * 64)
+    received = []
+    frame_cls = type(corpus)
+    to_arrow = frame_cls.toArrow
+
+    def counting_to_arrow(self):
+        tbl = to_arrow(self)
+        received.append(tbl.num_rows)
+        return tbl
+
+    monkeypatch.setattr(frame_cls, "toArrow", counting_to_arrow)
+    _, C1 = ivf.train_centroid_arrays(corpus, 8, seed=42, sample_fraction=1.0)
+    assert received == [cap + 1, cap]  # the bounded probe, then the subsample
+    _, C2 = ivf.train_centroid_arrays(corpus, 8, seed=42, sample_fraction=1.0)
+    assert np.array_equal(C1, C2)
+    out = str(tmp_path_factory.mktemp("capped_train"))
+    build_index(
+        spark, corpus, out,
+        EngineConfig(index_type="IVF", nlist=8, kmeans_sample_fraction=1.0,
+                     centroid_polish_iters=0, ivf_max_list_factor=None, recall_curve=False),
+    )
+    assert max(received) <= cap + 1
+    written = pads.dataset(os.path.join(out, "centroids"), format="parquet").count_rows()
+    assert read_metadata(out)["nlist"] == written
+
+
+@pytest.fixture(scope="module")
+def trained_build_jobs(spark, corpus, tmp_path_factory):
+    """(description per job of the caller's group, build jobs outside that
+    group, the caller's description after the build) for a trained IVF
+    build with attributes. MLlib's Lloyd loop needs 17 iterations on these
+    near-isotropic embeddings at nlist 8."""
+    import json
+    import time
+    import urllib.request
+
+    attributed = corpus.withColumn("a_corr", F.col("label")).withColumn(
+        "a_disp", (F.col("vec_id") % 7).cast("int")
+    )
+    sc = spark.sparkContext
+    group = "test-trained-build-jobs"
+    sc.setJobGroup(group, "caller description")
+    try:
+        build_index(
+            spark, attributed, str(tmp_path_factory.mktemp("trained_job_budget")),
+            EngineConfig(index_type="IVF", nlist=8, kmeans_sample_fraction=1.0,
+                         centroid_polish_iters=0, ivf_max_list_factor=None,
+                         recall_curve_queries=16),
+            attr_cols=["a_corr", "a_disp"],
+        )
+        after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/jobs"
+    deadline = time.monotonic() + 10.0
+    while True:  # the listener bus records jobs asynchronously
+        ids = set(sc.statusTracker().getJobIdsForGroup(group))
+        with urllib.request.urlopen(url, timeout=10) as r:
+            jobs = {j["jobId"]: j for j in json.load(r)}
+        if ids <= jobs.keys() or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    built = {
+        i for i, j in jobs.items()
+        if i >= min(ids) and j.get("description", "").startswith("build_index:")
+    }
+    return [jobs[i].get("description") for i in sorted(ids)], built - ids, after
+
+
+def test_trained_build_spark_job_budget(trained_build_jobs):
+    """A trained IVF build with attributes runs at most 25 Spark jobs, and
+    training at most 12 whatever MLlib's iteration count: only the
+    k-means|| draw is distributed, and the Lloyd loop (one or two jobs per
+    iteration in MLlib) runs on the driver."""
+    descs, _, _ = trained_build_jobs
+    assert len(descs) <= 25, f"build_index ran {len(descs)} Spark jobs"
+    assert descs.count("build_index:train") <= 12
+
+
+def test_build_jobs_are_described_by_phase(trained_build_jobs):
+    """Every build job is described build_index:<phase>, the caller's job
+    group still collects all of them, and the caller's description is back
+    after the build."""
+    descs, outside_group, after = trained_build_jobs
+    assert descs and all(d.startswith("build_index:") for d in descs)
+    assert {d.split(":", 1)[1] for d in descs} == {
+        "validate", "train", "assign+write", "stats", "open", "recall_curve",
+    }
+    assert not outside_group
+    assert after == "caller description"

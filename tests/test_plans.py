@@ -289,5 +289,7 @@ def test_driver_written_tables_match_spark(spark, tmp_path_factory):
         got = spark.read.parquet(os.path.join(out, name))
         exp = spark.read.parquet(ref)
         assert got.schema == exp.schema, name
+        if name == "centroids":  # open_index reads it with the fixed schema
+            assert handle.centroids.schema == exp.schema
         keys = [c for c in exp.columns if c != "cvec"]
         assert got.orderBy(*keys).collect() == exp.orderBy(*keys).collect(), name

@@ -9,7 +9,7 @@ programs optimized by Catalyst:
 
 - index build    -> partitioned Parquet write job        (plans.build)
 - kNN search     -> crossJoin/centroid-join + window     (operators.knn)
-- IVF pruning    -> KMeans centroids + partition pruning (operators.ivf)
+- IVF pruning    -> k-means centroids + partition pruning (operators.ivf)
 - PQ compression -> codebook tables + ADC kernel         (operators.pq)
 - result cache   -> query-dedup rewrite                  (plans.rewrite)
 - metrics        -> aggregate queries                    (operators.metrics)

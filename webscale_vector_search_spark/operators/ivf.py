@@ -2,9 +2,11 @@
 
 Reference behaviors re-expressed (SURVEY.md §2.3):
 - K5 coarse-quantizer training: FAISS k-means with nlist = max(100, floor(sqrt(n)))
-  (vector_search_cluster.py:1023-1031). Here: MLlib KMeans, seeded, trained on
-  a documented sample fraction of the FULL corpus — fixing quirk Q7 (the
-  reference's streaming builder trains on only the first batch, 1156-1159).
+  (vector_search_cluster.py:1023-1031). Here: seeded k-means on a documented
+  sample fraction of the FULL corpus — fixing quirk Q7 (the reference's
+  streaming builder trains on only the first batch, 1156-1159). MLlib draws
+  the k-means|| start; the Lloyd iterations run in numpy on the driver over
+  the same sampled rows, as the reference trains each shard in one process.
 - K6 assign + probe search: assign every vector to its nearest centroid; at
   query time scan only the nprobe nearest inverted lists
   (nprobe = min(64, max(1, nlist // 8)) at 549).
@@ -59,6 +61,16 @@ def centroids_frame(spark: SparkSession, cents: tuple) -> DataFrame:
     return spark.createDataFrame(centroid_table(*cents))
 
 
+# Driver memory the Lloyd iterations may hold as float64 training rows; the
+# row cap is this over 8 * dim (524,288 rows at dim 64).
+DRIVER_TRAIN_BYTES = 256 << 20
+# MLlib KMeans' defaults, which the driver-side loop keeps.
+LLOYD_MAX_ITER = 20
+LLOYD_TOL = 1e-4
+# Elements of one (rows x centers) distance block.
+_LLOYD_BLOCK = 1 << 22
+
+
 def train_centroid_arrays(
     corpus: DataFrame,
     nlist: int,
@@ -66,25 +78,69 @@ def train_centroid_arrays(
     sample_fraction: float = 0.2,
     vec_col: str = "embedding",
 ) -> tuple:
-    """K5 — fit nlist centroids with MLlib KMeans on a seeded sample.
+    """K5 — fit nlist centroids by seeded k-means on a sample of the corpus.
+
+    MLlib KMeans with maxIter=0 draws the k-means|| start on the seeded
+    sample (distributed, and independent of maxIter). The sample is then
+    collected once and `lloyd` runs MLlib's iterations on the driver, so the
+    centers are MLlib's own and the job count does not grow with the
+    iteration count. At most DRIVER_TRAIN_BYTES of float64 rows reach the
+    driver: a larger sample is cut to a seeded uniform subsample of that
+    many rows, and polish_centroids is the full-corpus refinement.
 
     Returns the (c_ids, C) pair (see centroid_arrays), C rounded to the
     float32 the centroid table stores, so assignment and serving use
-    identical values. The sample keeps the training set bounded at any
-    corpus size; KMeans itself is the distributed MLlib implementation
-    (k-means|| init), so even the sample never has to fit on one executor.
-    MLlib can return fewer than nlist centers (fewer distinct points than
-    nlist), so callers size the index from the result."""
+    identical values. MLlib can return fewer than nlist centers (fewer
+    distinct points than nlist), so callers size the index from the result."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
+
+    from webscale_vector_search_spark.operators.knn import list_matrix
 
     sample = corpus.select(vec_col)
     if sample_fraction < 1.0:
         sample = sample.sample(fraction=sample_fraction, seed=seed)
     train = sample.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=nlist, seed=seed, maxIter=20).fit(train)
-    C = np.array(model.clusterCenters(), dtype=np.float32).astype(np.float64)
+    C0 = np.array(KMeans(k=nlist, seed=seed, maxIter=0).fit(train).clusterCenters())
+    cap = max(1, DRIVER_TRAIN_BYTES // (8 * C0.shape[1]))
+    # the same Sample operator and seed give the same rows on re-evaluation
+    rows = sample.limit(cap + 1).toArrow()
+    if rows.num_rows > cap:
+        rows = sample.orderBy(F.rand(seed)).limit(cap).toArrow()
+    X = list_matrix(rows.combine_chunks().to_batches()[0], vec_col, dtype=np.float64)
+    C = lloyd(X, C0).astype(np.float32).astype(np.float64)
     return np.arange(len(C), dtype=np.int64), C
+
+
+def lloyd(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """MLlib's Lloyd loop (KMeans.runAlgorithmWithWeight) on the driver:
+    nearest center by squared L2, ties to the lowest index; a center
+    becomes its rows' sum scaled by 1/count (MLlib scales by the
+    reciprocal); a center with no rows keeps its value; stop once every
+    updated center moved at most LLOYD_TOL (squared distance <= LLOYD_TOL^2)
+    or after LLOYD_MAX_ITER iterations. Distances run in row blocks of
+    _LLOYD_BLOCK elements, so memory stays bounded at any nlist."""
+    C = np.array(C, dtype=np.float64)
+    k = len(C)
+    step = max(1, _LLOYD_BLOCK // k)
+    x_sq = (X * X).sum(axis=1)
+    for _ in range(LLOYD_MAX_ITER):
+        c_sq = (C * C).sum(axis=1)
+        sums = np.zeros_like(C)
+        counts = np.zeros(k, dtype=np.int64)
+        for s in range(0, len(X), step):
+            Xb = X[s : s + step]
+            d = x_sq[s : s + step, None] - 2.0 * (Xb @ C.T) + c_sq[None, :]
+            labels = d.argmin(axis=1)
+            counts += np.bincount(labels, minlength=k)
+            np.add.at(sums, labels, Xb)
+        hit = counts > 0
+        new = sums[hit] * (1.0 / counts[hit])[:, None]
+        moved = ((new - C[hit]) ** 2).sum(axis=1)
+        C[hit] = new
+        if (moved <= LLOYD_TOL * LLOYD_TOL).all():
+            break
+    return C
 
 
 def train_centroids(
@@ -149,11 +205,12 @@ def polish_centroids(
     """K5 refinement — exact full-corpus Lloyd iteration(s) on the coarse
     quantizer (`centroids`: a table DataFrame or a (c_ids, C) pair).
 
-    MLlib KMeans trains on a bounded sample (train_centroids); with nlist ~
-    sqrt(n) that leaves only tens of sample points per list, and the centroid
-    noise inflates residual magnitudes (directly costing IVFPQ ADC recall —
-    measured +0.1 recall@10 per polish pass at the 1M bench tier) and skews
-    list occupancy. Each iteration is the exact Lloyd update at FULL corpus
+    train_centroid_arrays fits on a sample, and on at most
+    DRIVER_TRAIN_BYTES of it; with nlist ~ sqrt(n) that leaves only tens of
+    sample points per list, and the centroid noise inflates residual
+    magnitudes (directly costing IVFPQ ADC recall — measured +0.1
+    recall@10 per polish pass at the 1M bench tier) and skews list
+    occupancy. Each iteration is the exact Lloyd update at FULL corpus
     scale:
 
       fused assign+partial-sum map pass (<= nlist partial rows per task) ->
@@ -582,6 +639,8 @@ def _split_pass(
     one filtered aggregate over the split parents' rows only."""
     import math
 
+    import pyarrow as pa
+
     from webscale_vector_search_spark.functions.hashing import det_hash
 
     oversized = {cid: c for cid, c in counts.items() if c > cap}
@@ -592,11 +651,15 @@ def _split_pass(
     s_of = {cid: max(2, math.ceil(c / cap)) for cid, c in oversized.items()}
     # bounded deterministic sample per oversized list: ~sample_per_center
     # rows per sub-center, selected map-side by id hash (no shuffle)
-    thr_rows = [
-        (int(cid), int(min(10_000, math.ceil(10_000 * s_of[cid] * sample_per_center / oversized[cid]))))
-        for cid in sorted(oversized)
+    cids = sorted(oversized)
+    thresh = [
+        min(10_000, math.ceil(10_000 * s_of[cid] * sample_per_center / oversized[cid]))
+        for cid in cids
     ]
-    thr = spark.createDataFrame(thr_rows, "centroid_id INT, thresh INT")
+    thr = spark.createDataFrame(pa.table({
+        "centroid_id": pa.array(cids, pa.int32()),
+        "thresh": pa.array(thresh, pa.int32()),
+    }))
     sample = assigned.join(F.broadcast(thr), "centroid_id").filter(
         det_hash(F.col("vec_id"), seed=seed) % 10_000 < F.col("thresh")
     )

@@ -278,6 +278,17 @@ def list_matrix(batch, col: str, dtype=None):
     return out if dtype is None else out.astype(dtype, copy=False)
 
 
+def matrix_list(M, dtype="float32"):
+    """list_matrix's inverse: the fixed-width list<dtype> Arrow column of
+    a 2-D matrix, built from one offsets buffer (no per-row objects)."""
+    import numpy as np
+    import pyarrow as pa
+
+    M = np.ascontiguousarray(M, dtype=dtype)
+    offsets = np.arange(0, M.size + 1, M.shape[1], dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(M.ravel()))
+
+
 def segment_iter(values):
     """Yield (value, row_index_array) per distinct value via ONE argsort.
 

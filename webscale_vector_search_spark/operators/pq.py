@@ -464,13 +464,9 @@ def adc_distances_sql(codes_df: DataFrame, codebooks: np.ndarray, queries: DataF
     tables and compute exact SQL distances to each query. Used to cross-check
     the numpy ADC kernel on small data (ADC distance == distance to the
     reconstruction, by definition)."""
-    m, n_codes, dsub = codebooks.shape
-    flat = [
-        (j, c, [float(x) for x in codebooks[j, c]])
-        for j in range(m)
-        for c in range(n_codes)
-    ]
-    cb_df = spark.createDataFrame(flat, "subspace INT, code INT, cvec ARRAY<FLOAT>")
+    from webscale_vector_search_spark.sources.index_io import codebook_table
+
+    cb_df = spark.createDataFrame(codebook_table(codebooks))
     exploded = codes_df.select(
         "vec_id", F.posexplode("codes").alias("subspace", "code")
     ).join(F.broadcast(cb_df), ["subspace", "code"])

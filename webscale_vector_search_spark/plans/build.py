@@ -6,7 +6,8 @@ single-process, whole-corpus-in-RAM, unseeded shuffle, per-shard FAISS build.
 This job is parallel, out-of-core, deterministic:
   read corpus -> validate dim + count (one aggregate) -> shard assign
   (seeded, id-hash) ->
-  [IVF: KMeans on sample -> centroid assign]
+  [IVF: k-means on a sample (MLlib k-means|| start, Lloyd on the driver)
+   -> centroid assign]
   [IVFPQ: + codebook fit -> PQ encode]
   -> write.partitionBy(...) parquet + metadata sidecar
 
@@ -19,6 +20,7 @@ Partitioning strategy (the 100 TB posture):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +42,20 @@ def _write_partitioned(df: DataFrame, part_col: str, path: str) -> None:
     splits skewed ones (a hot value is not one straggler task), and
     `spark.sql.files.maxRecordsPerFile` (session.py) bounds file size."""
     df.hint("rebalance", part_col).write.mode("overwrite").partitionBy(part_col).parquet(path)
+
+
+@contextmanager
+def _job_phases(spark: SparkSession):
+    """Yields phase(name), which labels the Spark jobs that follow
+    `build_index:<name>` (spark.job.description: the UI, the event log and
+    the status API show it). The caller's description is restored on exit;
+    its job group is never touched."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    try:
+        yield lambda name: sc.setJobDescription(f"build_index:{name}")
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
 
 
 def build_index(
@@ -70,7 +86,19 @@ def build_index(
     PushedFilters — filtering costs row-group stats + column decode, never
     a join. HNSW graph rows have a fixed schema, so attrs are written to an
     `attrs/` sidecar instead (one map-only pass, no shuffle) and filtered
-    searches pay a candidates-only semi-join (see search_index)."""
+    searches pay a candidates-only semi-join (see search_index).
+
+    Each phase's jobs are described `build_index:<phase>`: validate, train,
+    assign+write, stats, open, recall_curve."""
+    with _job_phases(spark) as phase:
+        return _build_index(
+            spark, corpus, out_dir, config, id_col, vec_col, centroids_df, attr_cols, phase
+        )
+
+
+def _build_index(
+    spark, corpus, out_dir, config, id_col, vec_col, centroids_df, attr_cols, phase
+) -> index_io.IndexHandle:
     attr_cols = list(attr_cols) if attr_cols else None
     if attr_cols:
         reserved = {
@@ -95,11 +123,13 @@ def build_index(
         base = with_l2_normalized(base, "embedding")
     elif config.metric != "sq_l2":
         raise ValueError(f"unknown metric {config.metric!r}")
+    phase("validate")
     n_total = validated_count(corpus, config.vector_dim, vec_col)
 
     nlist = pq_m = None
     vectors_dir = os.path.join(out_dir, "vectors")
 
+    phase("assign+write")
     if config.index_type == "FLAT":
         _write_partitioned(hash_shard(base, config.num_shards), "shard_id", vectors_dir)
     elif config.index_type == "HNSW":
@@ -140,6 +170,7 @@ def build_index(
         if centroids_df is not None:
             centroids = ivf_ops.centroid_arrays(centroids_df)
         else:
+            phase("train")
             centroids = ivf_ops.train_centroid_arrays(
                 base, config.resolved_nlist(n_total), seed=config.seed,
                 sample_fraction=config.kmeans_sample_fraction,
@@ -150,6 +181,7 @@ def build_index(
                         base, centroids, iters=config.centroid_polish_iters
                     )
                 )
+            phase("assign+write")
         # the sidecar's nlist drives the serving default nprobe, so it is
         # the number of centers actually written — a reused table from a
         # different-nlist build, or a fit that returned fewer centers, would
@@ -257,6 +289,7 @@ def build_index(
     else:
         raise ValueError(f"unknown index_type {config.index_type!r}")
 
+    phase("stats")
     if attr_cols:
         # per-combo row counts beside the index: the filtered-search
         # planner input (selectivity-scaled nprobe / oversample). One
@@ -317,6 +350,7 @@ def build_index(
             "seed": config.seed,
         }
     index_io.write_metadata(out_dir, meta)
+    phase("open")
     handle = index_io.open_index(spark, out_dir)
     if config.recall_curve and config.index_type != "FLAT":
         # measured recall-vs-knob profile (sources/recall_curve.py): the
@@ -325,6 +359,7 @@ def build_index(
             measure_recall_curve,
         )
 
+        phase("recall_curve")
         measure_recall_curve(
             spark,
             handle,
@@ -358,8 +393,10 @@ def delete_vectors(spark: SparkSession, index_dir: str, ids) -> int:
     if isinstance(ids, SparkDF):
         df = ids.select(F.col("vec_id").cast("long")).distinct()
     else:
+        import pyarrow as pa
+
         vals = sorted({int(x) for x in ids})
-        df = spark.createDataFrame([(v,) for v in vals], "vec_id BIGINT")
+        df = spark.createDataFrame(pa.table({"vec_id": pa.array(vals, pa.int64())}))
     n = df.count()
     if n == 0:
         return 0
@@ -1038,8 +1075,10 @@ def search_index(
     if allowed_ids is not None and not isinstance(allowed_ids, DataFrame):
         # accept the same plain-sequence form serve_local takes, so a
         # search_routed call is valid on both sides of the batch-size split
+        import pyarrow as pa
+
         allowed_ids = spark.createDataFrame(
-            [(int(x),) for x in allowed_ids], "vec_id BIGINT"
+            pa.table({"vec_id": pa.array([int(x) for x in allowed_ids], pa.int64())})
         )
     filtered = where is not None or allowed_ids is not None
     tomb = handle.tombstones  # pending logical deletes (delete_vectors)

@@ -1059,9 +1059,12 @@ def search_routed(
     else:
         q_ids, Q = _query_batch(queries)
         if len(q_ids) > max_local_batch:
+            import pyarrow as pa
+
+            from webscale_vector_search_spark.operators.knn import matrix_list
+
             df = spark.createDataFrame(
-                [(int(i), [float(x) for x in v]) for i, v in zip(q_ids, Q.astype("float32"))],
-                "query_id BIGINT, qvec ARRAY<FLOAT>",
+                pa.table({"query_id": pa.array(q_ids, pa.int64()), "qvec": matrix_list(Q)})
             )
             return _spark_path(df)
         small = (q_ids, Q)

@@ -1897,8 +1897,14 @@ ORDER BY query_id, rank
 
 @declare("q_bm25", _BM25_ORACLE)
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pyarrow as pa
+
     docs = load_table(spark, "documents", sf_dir)
-    kw = spark.createDataFrame(_BM25_QUERIES, "query_id BIGINT, terms ARRAY<STRING>")
+    qids, terms = zip(*_BM25_QUERIES)
+    kw = spark.createDataFrame(pa.table({
+        "query_id": pa.array(qids, pa.int64()),
+        "terms": pa.array(terms, pa.list_(pa.string())),
+    }))
     return textops.bm25_search(docs, kw, k=_BM25_K).orderBy("query_id", "rank")
 
 

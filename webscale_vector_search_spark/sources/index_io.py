@@ -173,16 +173,31 @@ def write_capped(df: DataFrame, path: str, cap: int) -> bool:
     return True
 
 
+CENTROID_SCHEMA = "centroid_id INT, cvec ARRAY<FLOAT>"
+
+
 def centroid_table(c_ids: np.ndarray, C: np.ndarray):
     """The centroid table (centroid_id INT, cvec ARRAY<FLOAT>) as Arrow."""
     import pyarrow as pa
 
-    C32 = np.ascontiguousarray(C, dtype=np.float32)
-    cvec = pa.ListArray.from_arrays(
-        pa.array(np.arange(0, C32.size + 1, C32.shape[1], dtype=np.int32)),
-        pa.array(C32.ravel()),
-    )
-    return pa.table({"centroid_id": pa.array(c_ids, pa.int32()), "cvec": cvec})
+    from webscale_vector_search_spark.operators.knn import matrix_list
+
+    return pa.table({"centroid_id": pa.array(c_ids, pa.int32()), "cvec": matrix_list(C)})
+
+
+def codebook_table(codebooks: np.ndarray):
+    """The global codebook table (subspace INT, code INT, cvec ARRAY<FLOAT>)
+    of an (m, n_codes, dsub) array, as Arrow."""
+    import pyarrow as pa
+
+    from webscale_vector_search_spark.operators.knn import matrix_list
+
+    m, n_codes, dsub = codebooks.shape
+    return pa.table({
+        "subspace": pa.array(np.repeat(np.arange(m), n_codes), pa.int32()),
+        "code": pa.array(np.tile(np.arange(n_codes), m), pa.int32()),
+        "cvec": matrix_list(codebooks.reshape(m * n_codes, dsub)),
+    })
 
 
 def write_centroids(path: str, cents: tuple) -> None:
@@ -207,21 +222,21 @@ def read_centroids(index_dir: str) -> tuple:
 
 
 def write_codebooks(spark: SparkSession, out_dir: str, codebooks: np.ndarray) -> None:
-    m, n_codes, _ = codebooks.shape
-    rows = [
-        (j, c, [float(x) for x in codebooks[j, c]]) for j in range(m) for c in range(n_codes)
-    ]
-    df = spark.createDataFrame(rows, "subspace INT, code INT, cvec ARRAY<FLOAT>")
+    df = spark.createDataFrame(codebook_table(codebooks))
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "codebooks"))
 
 
 def write_rotation(spark: SparkSession, out_dir: str, rot: np.ndarray) -> None:
     """Global OPQ rotation artifact: one row, flat row-major floats.
     dim x dim float32 — 16 kB at dim 64."""
-    dim = rot.shape[0]
-    df = spark.createDataFrame(
-        [(dim, [float(x) for x in rot.ravel()])], "dim INT, rot ARRAY<FLOAT>"
-    )
+    import pyarrow as pa
+
+    from webscale_vector_search_spark.operators.knn import matrix_list
+
+    df = spark.createDataFrame(pa.table({
+        "dim": pa.array([rot.shape[0]], pa.int32()),
+        "rot": matrix_list(rot.reshape(1, -1)),
+    }))
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "rotation"))
 
 
@@ -434,7 +449,10 @@ def open_index(spark: SparkSession, index_dir: str) -> IndexHandle:
     centroids = None
     codebooks = None
     if meta["index_type"] in ("IVF", "IVFPQ"):
-        centroids = spark.read.parquet(os.path.join(index_dir, "centroids"))
+        # the table's fixed schema: an inferring read costs a job per open
+        centroids = spark.read.schema(CENTROID_SCHEMA).parquet(
+            os.path.join(index_dir, "centroids")
+        )
     lopq_rots = pq_rotation = None
     if meta["index_type"] == "IVFPQ":
         if meta.get("pq_local_codebooks"):
