@@ -555,3 +555,121 @@ def test_hnsw_correlated_filter_falls_back_exact(spark, tmp_path_factory):
         )
     }
     assert local_rows == _rows(got)
+
+
+def _capture_plans(monkeypatch) -> list:
+    """Record every SearchPlan either search path computes."""
+    from webscale_vector_search_spark.plans import planner
+
+    seen = []
+    real = planner.plan_search
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(planner, "plan_search", spy)
+    return seen
+
+
+def _query_pair(queries):
+    import numpy as np
+
+    rows = queries.collect()
+    return (
+        np.array([r["query_id"] for r in rows], dtype=np.int64),
+        np.stack([r["qvec"] for r in rows]).astype(np.float64),
+    )
+
+
+@pytest.mark.parametrize("itype", ["ivf", "ivfpq", "hnsw"])
+def test_plan_parity_spark_vs_serve(spark, request, corpus, queries, itype,
+                                    tmp_path, monkeypatch):
+    """search_index and serve_local compute the SAME SearchPlan for the
+    same request: unfiltered, a where, an allowlist, both, a
+    recall_target, and each again with pending tombstones. Comparing
+    result rows alone can miss a plan split (at full probe different
+    nprobes return the same rows)."""
+    import shutil
+
+    from webscale_vector_search_spark.plans.build import delete_vectors
+    from webscale_vector_search_spark.plans.serve_local import serve_local
+    from webscale_vector_search_spark.sources.index_io import open_index
+
+    out = str(tmp_path / "idx")  # a private copy: deletes land on it
+    shutil.copytree(request.getfixturevalue(f"{itype}_dir"), out)
+    h = open_index(spark, out)
+    q = _query_pair(queries)
+    allowed = [int(r["vec_id"]) for r in corpus.filter("vec_id % 5 = 0").collect()]
+    cases = [
+        ({}, {}),
+        ({"where": WHERE}, {"where": lambda a: a["label"] == 3}),
+        ({"allowed_ids": allowed}, {"allowed_ids": allowed}),
+        (
+            {"where": WHERE, "allowed_ids": allowed},
+            {"where": lambda a: a["label"] == 3, "allowed_ids": allowed},
+        ),
+        ({"recall_target": 0.95}, {"recall_target": 0.95}),
+    ]
+    seen = _capture_plans(monkeypatch)
+    plans = {}
+    for pending in (False, True):
+        if pending:
+            delete_vectors(spark, out, allowed[:40])
+        for i, (spark_kw, local_kw) in enumerate(cases):
+            search_index(spark, h, queries, k=10, **spark_kw)
+            serve_local(h, q, k=10, **local_kw)
+            assert len(seen) == 2 and seen[0] == seen[1], (pending, spark_kw, seen)
+            plans[pending, i] = seen.pop()
+            seen.clear()
+    if itype == "hnsw":
+        # pending deletes widen the unfiltered beam on both paths
+        assert not plans[False, 0].widen and plans[True, 0].widen
+        assert plans[True, 0].k_search == 2 * plans[False, 0].k_search
+    else:
+        # the filtered budget is planned, not the unfiltered default
+        assert plans[False, 1].nprobe > plans[False, 0].nprobe
+
+
+def test_hnsw_fallback_plan_parity(spark, hnsw_rare_dir, queries, monkeypatch):
+    """The selective-filter escape is one planner decision: both paths
+    route bucket = 7 (s ~ 0.01) to the exact filtered scan."""
+    from webscale_vector_search_spark.plans.planner import SearchPlan
+    from webscale_vector_search_spark.plans.serve_local import serve_local
+    from webscale_vector_search_spark.sources.index_io import open_index
+
+    h = open_index(spark, hnsw_rare_dir)
+    seen = _capture_plans(monkeypatch)
+    search_index(spark, h, queries, k=3, where="bucket = 7")
+    serve_local(h, _query_pair(queries), k=3, where=lambda a: a["bucket"] == 7)
+    assert seen == [SearchPlan("exact_filtered")] * 2
+
+
+def _search_jobs(spark, group: str, **search_kw) -> int:
+    """Spark jobs one search_index(...).collect() runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        search_index(spark, **search_kw).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("itype, budget", [("ivf", 3), ("ivfpq", 6)])
+def test_filtered_search_job_budget(spark, request, queries, itype, budget):
+    """A filtered search (pandas kernel) runs no more Spark jobs than an
+    unfiltered one, on a fresh handle and again on the warm one: the plan
+    walks the query batch the probe selector collects, and a SQL predicate
+    is evaluated on the driver-local stats rows (attr_stats.where_mask),
+    which Spark answers without a job. The same filtered searches ran 8
+    then 4 jobs (IVF) and 11 then 7 (IVFPQ) when the plan collected the
+    batch a second time and aggregated the stats tables in Spark jobs."""
+    from webscale_vector_search_spark.sources.index_io import open_index
+
+    h = open_index(spark, request.getfixturevalue(f"{itype}_dir"))
+    kw = dict(index_dir=h, queries=queries, k=10)
+    for filt in (None, WHERE):
+        for call in ("fresh", "warm"):
+            n = _search_jobs(spark, f"budget-{itype}-{filt}-{call}", where=filt, **kw)
+            assert n <= budget, f"{itype} where={filt!r} {call}: {n} Spark jobs"

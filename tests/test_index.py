@@ -374,7 +374,7 @@ def test_driver_probes_csr_structure_and_size(spark):
     queries at nlist=65k (65 MB at a 1000-query serving batch)."""
     import pickle
 
-    from webscale_vector_search_spark.operators.ivf import DriverProbes
+    from webscale_vector_search_spark.operators.ivf import DriverProbes, query_arrays
 
     nlist, dim, nprobe, nq = 65_000, 8, 4, 16
     rng = np.random.default_rng(0)
@@ -384,7 +384,7 @@ def test_driver_probes_csr_structure_and_size(spark):
         [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(nq)],
         "query_id BIGINT, qvec ARRAY<FLOAT>",
     )
-    probes = DriverProbes(q, None, nprobe, centroid_np=(c_ids, C))
+    probes = DriverProbes(*query_arrays(q), (c_ids, C), nprobe)
     assert sum(len(v) for v in probes.probe_lists.values()) == nq * nprobe
     # membership matches an independent per-query argsort of the distances
     for qi in range(nq):

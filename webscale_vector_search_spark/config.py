@@ -12,9 +12,9 @@ from dataclasses import dataclass
 
 
 def default_nprobe(nlist: int) -> int:
-    """The single home of the IVF/IVFPQ probe-count rule (search_index and
-    serve_local both default through it): the reference's serving rule
-    min(64, max(1, nlist // 8)) (vector_search_cluster.py:549)."""
+    """The single home of the IVF/IVFPQ probe-count rule (both search
+    paths default through plans.planner.plan_search): the reference's
+    serving rule min(64, max(1, nlist // 8)) (vector_search_cluster.py:549)."""
     return min(64, max(1, nlist // 8))
 
 
@@ -30,7 +30,6 @@ class EngineConfig:
     - index_type FLAT|IVF|IVFPQ|HNSW (argparse choices at
       vector_search_cluster.py:934 plus HNSW at 1043-1045; HNSW builds one
       graph per shard and persists adjacency beside the vectors)
-    - nprobe: min(64, max(1, nlist // 8)) (vector_search_cluster.py:549)
     - seed 42: the reference seeds nothing (np.random.shuffle at 1002);
       we require determinism everywhere.
     """
@@ -39,7 +38,6 @@ class EngineConfig:
     num_shards: int = 16
     index_type: str = "FLAT"
     nlist: int | None = None  # None -> max(100, floor(sqrt(n))) as reference:1027
-    nprobe: int | None = None  # None -> min(64, max(1, nlist // 8)) as reference:549
     pq_m: int | None = None  # None -> max(1, dim // 4) as reference:1037
     pq_bits: int = 8  # reference:1038
     # IVFPQ codes encode residuals v - C[centroid] (FAISS by_residual

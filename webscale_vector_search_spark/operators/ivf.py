@@ -53,6 +53,17 @@ def centroid_arrays(centroids) -> tuple:
     return c_ids[order], C[order]
 
 
+def query_arrays(queries) -> tuple:
+    """(q_ids int64, Q float64) of a (query_id, qvec) DataFrame, collected
+    in one action, or an already-collected pair (returned as is)."""
+    if isinstance(queries, tuple):
+        return queries
+    rows = queries.select("query_id", "qvec").collect()
+    q_ids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    Q = np.stack([r["qvec"] for r in rows]).astype(np.float64)
+    return q_ids, Q
+
+
 def centroids_frame(spark: SparkSession, cents: tuple) -> DataFrame:
     """The (centroid_id INT, cvec ARRAY<FLOAT>) DataFrame of a numpy pair —
     built from Arrow, so it is a driver-local relation and costs no job."""
@@ -377,26 +388,16 @@ def recall_at_k(approx: DataFrame, exact: DataFrame, k: int = 10) -> float:
 
 class DriverProbes:
     """Driver-side probe selection shared by the numpy search kernels
-    (ivf_search_pandas, pq.adc_search). Both tables are tiny (a query batch
-    and <= ~65k centroids), so the queries x centroids argsort runs in
-    milliseconds on the driver and ships to tasks as closure arrays."""
+    (ivf_search_pandas, pq.adc_search, and serve_local's driver-resident
+    kernels). Both inputs are tiny (a query batch and <= ~65k centroids),
+    so the queries x centroids argsort runs in milliseconds on the driver
+    and ships to tasks as closure arrays. `centroids` is a centroid table
+    DataFrame or the (c_ids, C) pair (centroid_arrays); a Spark caller
+    collects its query batch first (query_arrays)."""
 
-    def __init__(
-        self,
-        queries: DataFrame,
-        centroids: DataFrame | None,
-        nprobe: int,
-        centroid_np: tuple | None = None,
-    ):
-        import numpy as np
-
-        q_rows = queries.select("query_id", "qvec").collect()
-        self.q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-        self.Q = np.stack([r["qvec"] for r in q_rows]).astype(np.float64)
-        if centroid_np is not None:  # handle-cached arrays (IndexHandle.centroid_arrays)
-            self.c_ids, self.C = centroid_np
-        else:
-            self.c_ids, self.C = centroid_arrays(centroids)
+    def __init__(self, q_ids: np.ndarray, Q: np.ndarray, centroids, nprobe: int):
+        self.q_ids, self.Q = q_ids, Q
+        self.c_ids, self.C = centroid_arrays(centroids)
         nq, nlist = len(self.q_ids), len(self.c_ids)
         # qc2[q, l] = ||Q[q] - C[l]||^2 — probe ranking here, and the
         # coarse term of the residual ADC decomposition in pq.adc_search
@@ -436,13 +437,12 @@ class DriverProbes:
 
 def ivf_search_pandas(
     corpus_with_centroid: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
+    centroids,
+    queries,
     k: int = 10,
     nprobe: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroid_np: tuple | None = None,
 ) -> DataFrame:
     """K6 fast path — probe-pruned search with NO candidate join.
 
@@ -461,12 +461,13 @@ def ivf_search_pandas(
 
     The join-based :func:`ivf_search` remains the pure-DataFrame reference
     form (used by the SQL-determinism tests); this is the bench/scale path —
-    same recall, same results, map-only.
+    same recall, same results, map-only. `centroids` and `queries` are
+    DataFrames or their collected numpy pairs (centroid_arrays,
+    query_arrays).
     """
-    import numpy as np
     from pyspark.sql import types as T
 
-    probes = DriverProbes(queries, centroids, nprobe, centroid_np=centroid_np)
+    probes = DriverProbes(*query_arrays(queries), centroids, nprobe)
     q_ids, Q, probe_lists = probes.q_ids, probes.Q, probes.probe_lists
     pruned = probes.prune(corpus_with_centroid)
     q_sq = (Q * Q).sum(1)

@@ -571,11 +571,11 @@ def adc_search(
             "(per-cell books carry their own rotations via local_rots)"
         )
 
+    from webscale_vector_search_spark.operators.ivf import DriverProbes, query_arrays
+
     scan_cols = [id_col, "codes"]
     if probes is None and centroids is not None and nprobe is not None:
-        from webscale_vector_search_spark.operators.ivf import DriverProbes
-
-        probes = DriverProbes(queries, centroids, nprobe)
+        probes = DriverProbes(*query_arrays(queries), centroids, nprobe)
     if probes is not None:
         q_ids, Q = probes.q_ids, probes.Q
         codes_df = probes.prune(codes_df)
@@ -589,9 +589,7 @@ def adc_search(
         probed_row[probed_ids] = np.arange(len(probed_ids))
         use_probes = True
     else:
-        q_rows = queries.select("query_id", "qvec").collect()
-        q_ids = np.array([r["query_id"] for r in q_rows])
-        Q = np.stack([r["qvec"] for r in q_rows]).astype(np.float64)  # (nq, dim)
+        q_ids, Q = query_arrays(queries)
         probe_lists = probed_row = Cp = None
         use_probes = False
     if local_books is not None:

@@ -29,6 +29,7 @@ from webscale_vector_search_spark.config import EngineConfig
 from webscale_vector_search_spark.operators import ivf as ivf_ops
 from webscale_vector_search_spark.operators import pq as pq_ops
 from webscale_vector_search_spark.operators.shard import hash_shard
+from webscale_vector_search_spark.plans import planner
 from webscale_vector_search_spark.schemas import validated_count
 from webscale_vector_search_spark.sources import index_io
 
@@ -985,6 +986,10 @@ def _postfilter_topk(res: DataFrame, attr_src: DataFrame | None, where,
     )
 
 
+# query rows the SQL IVF kernel's filtered plan walks (search_index)
+PLAN_MAX_QUERIES = 4096
+
+
 def search_index(
     spark: SparkSession,
     index_dir: str | index_io.IndexHandle,
@@ -1026,6 +1031,10 @@ def search_index(
     identical results to kernel='sql' (the tie-stable batch top-k makes both
     follow the (distance, vec_id) total order), ~3-5x faster measured on a
     1M-vector corpus.
+
+    The knob choices below (nprobe, ef_search, the filter oversample, the
+    graph's exact-scan fallback) are made by plans.planner.plan_search, the
+    one planner serve_local calls too; this function executes its plan.
 
     Filtered search (`where` / `allowed_ids`): `where` is a SQL predicate
     string (or Column) over attribute columns stored at build time
@@ -1083,20 +1092,13 @@ def search_index(
     filtered = where is not None or allowed_ids is not None
     tomb = handle.tombstones  # pending logical deletes (delete_vectors)
 
-    _sel_cache: list = []  # computed at most once per call
-
     def _allowed_info():
-        """(distinct count, sorted id array | None) for the allowlist —
-        ONE bounded Spark job shared by _sel() and the plan_nprobe branch
-        (they used to run independent count jobs per filtered batch),
-        cached per allowlist DataFrame object on the handle so a serving
-        loop that re-passes the same allowlist pays it once. The array
-        form (None past ALLOW_COVERAGE_MAX_IDS — a second count-only job
-        then sizes the budget) feeds the exact allowlist cell-coverage
-        term; the list is broadcast into the scan anyway, so collecting
-        it is the same driver-memory class."""
-        if allowed_ids is None:
-            return (None, None)
+        """(distinct count, sorted id array | None) for the allowlist: one
+        bounded collect, cached per allowlist DataFrame object on the
+        handle so a serving loop that re-passes the same allowlist pays it
+        once. Past ALLOW_COVERAGE_MAX_IDS the array is None and a second,
+        count-only job sizes the list; the list is broadcast into the scan
+        anyway, so collecting it is the same driver-memory class."""
         cache = handle.__dict__.setdefault("_allowed_count_cache", {})
         hit = cache.get(allowed_ids)
         if hit is None:
@@ -1124,29 +1126,6 @@ def search_index(
             cache[allowed_ids] = hit
         return hit
 
-    def _sel():
-        """Estimated filter selectivity (None = unknown) — feeds the
-        auto-scaled nprobe / filter_oversample; both paths (this and
-        serve_local) read the same stats, so auto plans match."""
-        if not _sel_cache:
-            from webscale_vector_search_spark.sources import attr_stats
-
-            _sel_cache.append(
-                attr_stats.selectivity(
-                    handle, where=where, allowed_count=_allowed_info()[0],
-                    spark=spark,
-                )
-            )
-        return _sel_cache[0]
-
-    def _oversample():
-        if filter_oversample is not None:
-            return filter_oversample
-        if not filtered:
-            return 4
-        from webscale_vector_search_spark.sources.attr_stats import filtered_oversample
-
-        return filtered_oversample(_sel())
     if handle.meta.get("metric", "sq_l2") == "cosine":
         # the stored vectors are unit-normalized; normalizing the query batch
         # makes every sq_l2 kernel below rank as cosine (distance emitted is
@@ -1154,168 +1133,87 @@ def search_index(
         from webscale_vector_search_spark.functions.distance import with_l2_normalized
 
         queries = with_l2_normalized(queries, "qvec")
-    if itype == "FLAT":
+
+    def _exact_filtered_scan(fn):
+        # exact scan with the filter applied BEFORE ranking: attrs live in
+        # the sidecar for HNSW, so the valid ids semi-join into the scan
+        # (an unfiltered scan + post-filter would need a k' covering the
+        # filtered depth — this form needs no margin)
+        vecs = _live(handle.vectors.select("vec_id", "embedding"), tomb)
+        if filtered:
+            valid = handle.attrs if handle.attrs is not None else handle.vectors
+            valid = _apply_filter(valid, where, allowed_ids)
+            vecs = vecs.join(valid.select("vec_id"), "vec_id", "left_semi")
+        return fn(vecs, queries, k=k)
+
+    if itype == "HNSW" and kernel != "pandas":
+        # graph traversal has no SQL form; the no-Python fallback is the
+        # exact scan (right answers, exact cost — explicit, not probed)
+        return _exact_filtered_scan(knn)
+
+    # the probe kernels run on the collected batch; the SQL IVF kernel
+    # exists for batches too large to collect, so its filtered plan walks
+    # the 4096 smallest query_ids (the adaptive budget is a max over
+    # queries, and serve-sized batches fit under the cap whole)
+    batch = None
+    if itype == "IVFPQ" or (itype == "IVF" and kernel == "pandas"):
+        batch = ivf_ops.query_arrays(queries)
+
+    def _plan_queries():
+        import numpy as np
+
+        if batch is not None:
+            q_ids, Q = batch
+            return Q[np.argsort(q_ids, kind="stable")[:PLAN_MAX_QUERIES]]
+        # ordered before the cut (TakeOrderedAndProject, no full sort): a
+        # bare limit() returns whichever partitions answer first
+        first = queries.select("query_id", "qvec").orderBy("query_id")
+        return ivf_ops.query_arrays(first.limit(PLAN_MAX_QUERIES))[1]
+
+    plan = planner.plan_search(
+        handle, k, nprobe=nprobe, ef_search=ef_search,
+        filter_oversample=filter_oversample, recall_target=recall_target,
+        where=where, allowed=_allowed_info if allowed_ids is not None else None,
+        tombstoned=tomb is not None, spark=spark, queries=_plan_queries,
+    )
+    if plan.route == "scan":
         fn = knn_pandas if kernel == "pandas" else knn
         return fn(
             _live(_apply_filter(handle.vectors, where, allowed_ids), tomb),
             queries,
             k=k,
         )
-
-    if itype == "HNSW":
+    if plan.route == "exact_filtered":
+        return _exact_filtered_scan(knn_pandas)
+    if plan.route == "graph":
         # serving pays ONLY traversal (graphs are loaded once per python
         # worker — hnsw_partition.load_shard_graph)
-        def _exact_filtered_scan(fn):
-            # exact scan with the filter applied BEFORE ranking: attrs live
-            # in the sidecar for HNSW, so the valid ids semi-join
-            # into the scan (an unfiltered scan + post-filter would need a
-            # k' covering the filtered depth — this form needs no margin)
-            vecs = _live(handle.vectors.select("vec_id", "embedding"), tomb)
-            if filtered:
-                valid = handle.attrs if handle.attrs is not None else handle.vectors
-                if where is not None:
-                    valid = valid.filter(where)
-                if allowed_ids is not None:
-                    valid = valid.join(
-                        F.broadcast(allowed_ids.select("vec_id")), "vec_id", "left_semi"
-                    )
-                vecs = vecs.join(valid.select("vec_id"), "vec_id", "left_semi")
-            return fn(vecs, queries, k=k)
-
-        if kernel != "pandas":
-            # graph traversal has no SQL form; the no-Python fallback is the
-            # exact scan (right answers, exact cost — explicit, not probed)
-            return _exact_filtered_scan(knn)
-        if filtered and filter_oversample is None:
-            from webscale_vector_search_spark.sources.attr_stats import (
-                allowlist_cell_coverage,
-                cell_coverage,
-                graph_filter_fallback,
-            )
-
-            f_cov = (
-                cell_coverage(handle, where, spark=spark)
-                if where is not None
-                else None
-            )
-            arr = _allowed_info()[1]
-            f_allow = (
-                allowlist_cell_coverage(handle, arr) if arr is not None else None
-            )
-            if f_cov is not None or f_allow is not None:
-                f_cov = min(v for v in (f_cov, f_allow) if v is not None)
-            if graph_filter_fallback(_sel(), f_cov):
-                # the beam can't produce k survivors (too selective past
-                # the oversample cap, or spatially concentrated so the
-                # neighborhood holds no valid candidates) — route to the
-                # exact filtered scan instead of silently losing recall
-                return _exact_filtered_scan(knn_pandas)
-        from webscale_vector_search_spark.sources.recall_curve import (
-            default_ef,
-            ef_from_curve,
-        )
-
-        if recall_target is not None:
-            ef_search = ef_from_curve(handle, recall_target, k) or ef_search
-        if ef_search is None:
-            # no caller beam and no target: default from the index's OWN
-            # measured ef->recall curve at DEFAULT_TARGET (the engine's
-            # stated stance — measured artifact over hand-tuning; the
-            # reference hardcodes ef=64, vector_search_cluster.py:552,
-            # serving 0.92 recall at the 10M bench tier while the sidecar
-            # knows ef128 gives 0.96). Curve-less indexes keep 64;
-            # in-corpus-profiled curves floor at 64 (default_ef — their
-            # optimistic rungs must not undercut the constant), held-out
-            # curves are trusted as measured.
-            ef_search = default_ef(handle, k)
         from webscale_vector_search_spark.operators.hnsw_partition import hnsw_stored_search
 
-        # pending deletes post-filter like a mild predicate: oversample 2x
-        # (tombstones are a small fraction by the compaction contract);
-        # with a filter AND tombstones the margins compose — tombstone
-        # hits must not consume the filter's candidate budget
-        if filtered:
-            k_search = k * _oversample() * (2 if tomb is not None else 1)
-        else:
-            k_search = 2 * k if tomb is not None else k
-        widen = filtered or tomb is not None
         res = hnsw_stored_search(
             handle.vectors_dir,
             handle.meta["num_shards"],
             queries,
-            k=k_search,
-            ef_search=max(ef_search, 2 * k_search) if widen else ef_search,
+            k=plan.k_search,
+            ef_search=plan.ef_search,
         )
-        if not widen:
+        if not plan.widen:
             return res
         attr_src = handle.attrs if handle.attrs is not None else handle.vectors
         return _postfilter_topk(res, attr_src, where, allowed_ids, k, tombstones=tomb)
-
-    nlist = handle.meta["nlist"]
-    if nprobe is None:
-        from webscale_vector_search_spark.config import default_nprobe
-
-        nprobe = default_nprobe(nlist)
-        if filtered or recall_target is not None:
-            # probe budget from the measured recall curve at depth
-            # ceil(k/s) when the index carries one (closes the fixed-
-            # constant planner's 3.2x overshoot at the 10M tier), else the
-            # calibrated closed-form max(2x floor, candidate volume, cell
-            # discovery D/f) — see attr_stats.plan_nprobe
-            from webscale_vector_search_spark.sources.attr_stats import plan_nprobe
-
-            n_allowed, arr = _allowed_info()
-            plan_q = None
-            if filtered:
-                # the query-adaptive budget walks the ACTUAL batch against
-                # the cell layout — a BOUNDED collect (the pandas kernel
-                # collects queries again in the probe selector; the sql
-                # kernel exists precisely for query batches too large to
-                # drive from the driver, so the plan walks a capped sample
-                # of them: the adaptive budget is a max over queries, and a
-                # 4096-query sample's max is the batch's max in any
-                # realistic batch — serve-sized batches fit under the cap,
-                # keeping the serve-path plan bit-identical). Ordered by
-                # query_id before the cut (TakeOrderedAndProject — no full
-                # sort lands on the driver): a bare limit() over >4096
-                # queries returns whichever partitions answer first, so the
-                # plan itself would vary run-to-run.
-                import numpy as np
-
-                plan_q = np.stack(
-                    [
-                        r["qvec"]
-                        for r in queries.select("query_id", "qvec")
-                        .orderBy("query_id")
-                        .limit(4096)
-                        .collect()
-                    ]
-                ).astype("float64")
-            nprobe = plan_nprobe(
-                handle, nprobe, k, where=where, allowed_count=n_allowed,
-                spark=spark, recall_target=recall_target, allowed_arr=arr,
-                Q=plan_q,
-            )
 
     if itype == "IVF":
         vecs = _live(_apply_filter(handle.vectors, where, allowed_ids), tomb)
         if kernel == "pandas":
             return ivf_ops.ivf_search_pandas(
-                vecs,
-                handle.centroids,
-                queries,
-                k=k,
-                nprobe=nprobe,
-                centroid_np=handle.centroid_arrays(),
+                vecs, handle.centroid_arrays(), batch, k=k, nprobe=plan.nprobe
             )
-        return ivf_ops.ivf_search(vecs, handle.centroids, queries, k=k, nprobe=nprobe)
+        return ivf_ops.ivf_search(
+            vecs, handle.centroids, queries, k=k, nprobe=plan.nprobe
+        )
 
     # IVFPQ: per-query probe-masked ADC over statically pruned code lists
-    from webscale_vector_search_spark.operators.ivf import DriverProbes
-
-    probes = DriverProbes(
-        queries, handle.centroids, nprobe, centroid_np=handle.centroid_arrays()
-    )
+    probes = ivf_ops.DriverProbes(*batch, handle.centroid_arrays(), plan.nprobe)
     is_local = isinstance(handle.codebooks, dict)  # LOPQ per-cell books
     local_arg = rots_arg = None
     if is_local:

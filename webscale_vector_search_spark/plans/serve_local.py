@@ -44,6 +44,8 @@ from collections import OrderedDict
 
 import numpy as np
 
+from webscale_vector_search_spark.operators.ivf import DriverProbes, query_arrays
+from webscale_vector_search_spark.plans import planner
 from webscale_vector_search_spark.sources.index_io import IndexHandle
 
 # Batches at or below this are faster driver-side than as a Spark job
@@ -65,10 +67,7 @@ def _query_batch(queries) -> tuple[np.ndarray, np.ndarray]:
     default to 0..nq-1). The float64 widening matches what the executor
     kernels see after collecting an ARRAY<FLOAT> column."""
     if hasattr(queries, "sparkSession"):  # Spark DataFrame
-        rows = queries.select("query_id", "qvec").collect()
-        q_ids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-        Q = np.stack([r["qvec"] for r in rows]).astype(np.float64)
-        return q_ids, Q
+        return query_arrays(queries)
     if isinstance(queries, tuple) and len(queries) == 2:
         q_ids = np.asarray(queries[0], dtype=np.int64)
         Q = np.asarray(queries[1], dtype=np.float64)
@@ -329,40 +328,6 @@ def _flat_subset(handle, data, where, allowed_sorted, tomb_sorted):
 
 
 # --------------------------------------------------------------------------
-# probe selection (DriverProbes' math, artifact-cache edition)
-
-
-class _LocalProbes:
-    """Per-call probe selection — the same stable argsort over the same
-    unrounded query-centroid distances as ivf.DriverProbes, so the probed
-    set (and hence the candidate set) matches the Spark path exactly."""
-
-    def __init__(self, handle: IndexHandle, Q: np.ndarray, nprobe: int):
-        self.c_ids, self.C = handle.centroid_arrays()
-        nq, nlist = len(Q), len(self.c_ids)
-        qc2 = (
-            (Q * Q).sum(1)[:, None]
-            - 2.0 * (Q @ self.C.T)
-            + (self.C * self.C).sum(1)[None, :]
-        )
-        order = np.argsort(qc2, axis=1, kind="stable")[:, : min(nprobe, nlist)]
-        probed_ids_per_q = self.c_ids[order]
-        qi_rep = np.repeat(np.arange(nq, dtype=np.int64), order.shape[1])
-        flat_cids = probed_ids_per_q.ravel()
-        by_cid = np.argsort(flat_cids, kind="stable")
-        sorted_cids = flat_cids[by_cid]
-        sorted_qis = qi_rep[by_cid]
-        bounds = np.flatnonzero(np.diff(sorted_cids)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(sorted_cids)]))
-        self.probe_lists = {
-            int(sorted_cids[s]): sorted_qis[s:e] for s, e in zip(starts, ends)
-        }
-        self.slot_of = np.full(int(self.c_ids.max()) + 1, -1, dtype=np.int64)
-        self.slot_of[self.c_ids] = np.arange(nlist)
-
-
-# --------------------------------------------------------------------------
 # per-index-type kernels (the executors' scan bodies, driver-resident data)
 
 
@@ -480,7 +445,7 @@ def _flat_parts(handle, q_ids, Q, k, chunk_rows: int = 131072,
     return parts
 
 
-def _ivf_parts(handle, q_ids, Q, k, probes: _LocalProbes, cache_budget_mb,
+def _ivf_parts(handle, q_ids, Q, k, probes: DriverProbes, cache_budget_mb,
                where=None, allowed_sorted=None, tomb_sorted=None) -> list[dict]:
     from webscale_vector_search_spark.operators.knn import batch_topk_rows
 
@@ -627,7 +592,7 @@ def _hnsw_parts(handle, q_ids, Q, k, ef_search, banned_ids=None) -> list[dict]:
     ]
 
 
-def _adc_parts(handle, q_ids, Q, k, probes: _LocalProbes, cache_budget_mb,
+def _adc_parts(handle, q_ids, Q, k, probes: DriverProbes, cache_budget_mb,
                where=None, allowed_sorted=None, tomb_sorted=None) -> list[dict]:
     """pq.adc_search's scan body over driver-cached code lists: residual
     decode-then-GEMM (global or per-cell LOPQ books, with their stored OPQ
@@ -699,7 +664,7 @@ def _adc_parts(handle, q_ids, Q, k, probes: _LocalProbes, cache_budget_mb,
     return parts
 
 
-def _refine(handle, q_ids, Q, k, adc_result, probes: _LocalProbes, cache_budget_mb):
+def _refine(handle, q_ids, Q, k, adc_result, probes: DriverProbes, cache_budget_mb):
     """The exact-refine second stage: re-rank each query's ADC candidates
     with exact distances over the raw vectors, scored with the SQL fold
     (search_index's refine goes through with_distance, not the GEMM
@@ -775,18 +740,16 @@ def serve_local(
     ``cache_budget_mb`` bounds the inverted-list LRU (FLAT's corpus block
     and HNSW's mmap'd bundles are whole-artifact by nature).
 
-    Filtered serving mirrors search_index's where/allowed_ids — same
-    semantics (scan-side mask for FLAT/IVF/IVFPQ, post-filter with
-    `filter_oversample` for HNSW), same results — EXCEPT that `where` here
+    Filtered serving has search_index's where/allowed_ids semantics
+    (scan-side mask for FLAT/IVF/IVFPQ, post-filter with
+    `filter_oversample` for HNSW) and results — EXCEPT that `where` here
     is a vectorized CALLABLE over {attr_name: ndarray} -> bool ndarray,
     not a SQL string: the driver path deliberately carries no SQL parser,
     the Spark path owns SQL. `allowed_ids` is any int sequence/array.
-    With nprobe/filter_oversample left at None under a filter, both size
-    automatically from the attr_stats sidecars (the calibrated budget in
-    sources/attr_stats.py, exactly as search_index does — the callable
-    evaluates against the same stats rows, so the two paths pick the same
-    plan). `recall_target` picks the knob from the stored recall curve,
-    exactly as search_index does (same curve rows -> same plan).
+    Knobs left at None (nprobe, ef_search, filter_oversample, the graph's
+    exact-scan fallback) are chosen by plans.planner.plan_search, the one
+    planner search_index calls too; the callable evaluates against the
+    same stats rows as the Spark path's SQL, so both paths plan alike.
 
     `exclude_ids` serves as if those stored rows were ABSENT from the
     index — the held-out recall-profiling hook (sources/recall_curve.py
@@ -821,7 +784,6 @@ def serve_local(
             if not isinstance(allowed_ids, np.ndarray)
             else allowed_ids.astype(np.int64, copy=False)
         )
-    filtered = where is not None or allowed_sorted is not None
     tomb_sorted = handle.tombstone_array()  # pending deletes, None if clean
     ex_sorted = None
     if exclude_ids is not None:
@@ -841,111 +803,43 @@ def serve_local(
             else np.union1d(tomb_sorted, ex_sorted)
         )
 
-    _sel_cache: list = []
-
-    def _sel():
-        """Filter selectivity from the attr_stats sidecar (same numbers
-        the Spark path reads, so auto-scaled plans match bit-for-bit)."""
-        if not _sel_cache:
-            from webscale_vector_search_spark.sources import attr_stats
-
-            _sel_cache.append(
-                attr_stats.selectivity(
-                    handle,
-                    where=where,
-                    allowed_count=(
-                        len(allowed_sorted) if allowed_sorted is not None else None
-                    ),
-                )
-            )
-        return _sel_cache[0]
-
-    def _oversample():
-        if filter_oversample is not None:
-            return filter_oversample
-        if not filtered:
-            return 4
-        from webscale_vector_search_spark.sources.attr_stats import filtered_oversample
-
-        return filtered_oversample(_sel())
-
-    if itype == "FLAT":
+    plan = planner.plan_search(
+        handle, k, nprobe=nprobe, ef_search=ef_search,
+        filter_oversample=filter_oversample, recall_target=recall_target,
+        where=where,
+        allowed=(lambda: (len(allowed_sorted), allowed_sorted))
+        if allowed_sorted is not None
+        else None,
+        tombstoned=handle.tombstones is not None, queries=lambda: Q,
+    )
+    if plan.route == "scan":
         return _finalize(
             _flat_parts(handle, q_ids, Q, k, where=where,
                         allowed_sorted=allowed_sorted, tomb_sorted=tomb_sorted),
             k,
             as_arrays,
         )
-
-    if itype == "HNSW":
-        if filtered and filter_oversample is None:
-            # selective-filter escape, mirroring search_index: past the
-            # oversample cap the beam can't produce k survivors — run the
-            # exact scan restricted to the valid ids instead (the FLAT
-            # pairing, so Spark/serve results stay bit-identical)
-            from webscale_vector_search_spark.sources.attr_stats import (
-                allowlist_cell_coverage,
-                cell_coverage,
-                graph_filter_fallback,
-            )
-
-            f_cov = cell_coverage(handle, where) if where is not None else None
-            f_allow = (
-                allowlist_cell_coverage(handle, allowed_sorted)
-                if allowed_sorted is not None
-                else None
-            )
-            if f_cov is not None or f_allow is not None:
-                f_cov = min(v for v in (f_cov, f_allow) if v is not None)
-            if graph_filter_fallback(_sel(), f_cov):
-                allowed_fb = allowed_sorted
-                if where is not None:
-                    allowed_fb = _graph_fallback_allowed(
-                        handle, where, allowed_sorted
-                    )
-                return _finalize(
-                    _flat_parts(handle, q_ids, Q, k, allowed_sorted=allowed_fb,
-                                tomb_sorted=tomb_sorted),
-                    k,
-                    as_arrays,
-                )
-        from webscale_vector_search_spark.sources.recall_curve import (
-            default_ef,
-            ef_from_curve,
+    if plan.route == "exact_filtered":
+        # the Spark path's exact filtered scan, over the same valid ids
+        allowed_fb = allowed_sorted
+        if where is not None:
+            allowed_fb = _graph_fallback_allowed(handle, where, allowed_sorted)
+        return _finalize(
+            _flat_parts(handle, q_ids, Q, k, allowed_sorted=allowed_fb,
+                        tomb_sorted=tomb_sorted),
+            k,
+            as_arrays,
         )
-
-        if recall_target is not None:
-            ef_search = ef_from_curve(handle, recall_target, k) or ef_search
-        if ef_search is None:
-            # default the beam from the measured curve (mirror search_index:
-            # DEFAULT_TARGET pick when a curve exists — floored at 64 for
-            # in-corpus-profiled curves — and ef=64 for curve-less
-            # indexes). The curve pdf and profile meta
-            # are handle-cached (load_curve_pdf/load_profile_meta_cached),
-            # so the 1-query hot path pays only a sort over the <=6-rung
-            # ladder — and a curve re-profile or reopen invalidates the
-            # pick with the pdf, no second cache to drift.
-            ef_search = default_ef(handle, k)
-        # tombstones post-filter like a mild predicate (2x oversample);
-        # user filters use filter_oversample (auto, clamped at the cap,
-        # when None), and the margins COMPOSE when both apply — mirror
-        # search_index exactly
-        if filtered:
-            k_search = k * _oversample() * (2 if tomb_sorted is not None else 1)
-        else:
-            k_search = 2 * k if tomb_sorted is not None else k
-        widen = filtered or tomb_sorted is not None
+    if plan.route == "graph":
         parts = _hnsw_parts(
-            handle, q_ids, Q, k_search,
-            max(ef_search, 2 * k_search) if widen else ef_search,
-            banned_ids=ex_sorted,
+            handle, q_ids, Q, plan.k_search, plan.ef_search, banned_ids=ex_sorted
         )
-        if widen:
+        if plan.widen:
             # cut to the global top-k_search FIRST (what hnsw_stored_search
             # returns), then mask — masking per-shard parts first would keep
             # filtered candidates the Spark path's global cut discards, and
             # the bit-identity contract would quietly break
-            cand = _finalize_arrays(parts, k_search)
+            cand = _finalize_arrays(parts, plan.k_search)
             part = {
                 "query_id": cand["query_id"],
                 "vec_id": cand["neighbor_id"],
@@ -954,28 +848,7 @@ def serve_local(
             parts = _mask_parts([part], handle, where, allowed_sorted, tomb_sorted)
         return _finalize(parts, k, as_arrays)
 
-    nlist = meta["nlist"]
-    if nprobe is None:
-        from webscale_vector_search_spark.config import default_nprobe
-
-        nprobe = default_nprobe(nlist)
-        if filtered or recall_target is not None:
-            # probe budget from the measured curve / calibrated formula —
-            # same stats and curve rows as search_index's auto path (plan
-            # parity)
-            from webscale_vector_search_spark.sources.attr_stats import plan_nprobe
-
-            nprobe = plan_nprobe(
-                handle, nprobe, k, where=where,
-                allowed_count=(
-                    len(allowed_sorted) if allowed_sorted is not None else None
-                ),
-                recall_target=recall_target,
-                allowed_arr=allowed_sorted,
-                Q=Q,
-            )
-    probes = _LocalProbes(handle, Q, nprobe)
-
+    probes = DriverProbes(q_ids, Q, handle.centroid_arrays(), plan.nprobe)
     if itype == "IVF":
         return _finalize(
             _ivf_parts(handle, q_ids, Q, k, probes, cache_budget_mb,
@@ -984,9 +857,6 @@ def serve_local(
             k,
             as_arrays,
         )
-
-    if itype != "IVFPQ":
-        raise ValueError(f"unknown index_type {itype!r}")
 
     adc_k = refine_factor * k if exact_refine else k
     adc = _finalize_arrays(

@@ -53,11 +53,13 @@ is tiny (≤ MAX_COMBOS rows), lives beside the index, and is maintained as
 deltas by append/upsert/compaction — approximate between maintenance
 operations is fine: it feeds a probe-budget heuristic, not correctness.
 
-Both search paths read the SAME numbers, so the auto-scaled nprobe /
-oversample is identical on the Spark path (SQL-string predicate, evaluated
-by Spark against the stats rows) and the serve_local path (vectorized
-callable, evaluated by numpy against the same rows) — the bit-identity
-contract between the two paths extends to their planning.
+Both search paths plan through one function, plans.planner.plan_search,
+which reads these numbers; a filter is evaluated against the stats rows in
+one place, where_mask, whether it arrives as the Spark path's SQL string
+(run by Spark on the tiny table) or serve_local's vectorized callable (run
+by numpy on the same rows). The auto-scaled nprobe / oversample is
+therefore identical on both paths — the bit-identity contract between
+them extends to their planning.
 
 Reference parity note: FAISS's IDSelector has no planner — the reference
 (vector_search_cluster.py) exposes no filtered search at all; this is
@@ -102,6 +104,8 @@ ALLOW_COVERAGE_MAX_IDS = 1_000_000
 # fingerprint; a serving loop that builds a fresh lambda per request would
 # otherwise grow them without bound (each allowlist entry can pin MBs)
 PLAN_CACHE_CAP = 32
+# row-index column where_mask adds to a stats frame for a SQL predicate
+_ROW_COL = "__stats_row"
 
 
 def _cache_put(cache: dict, key, val, cap: int = PLAN_CACHE_CAP):
@@ -112,6 +116,49 @@ def _cache_put(cache: dict, key, val, cap: int = PLAN_CACHE_CAP):
     if key not in cache and len(cache) >= cap:
         cache.pop(next(iter(cache)))
     cache[key] = val
+
+
+def where_mask(pdf, where, spark=None):
+    """Rows of the stats frame `pdf` passing the search filter, as a numpy
+    bool mask — the one place a filter is evaluated against stats rows. A
+    callable (serve_local's form) runs on the attribute columns; a SQL
+    string / Column (search_index's form) runs on spark.createDataFrame(pdf)
+    with a row-index column, and only the passing indices are collected.
+    Raises when the predicate can't be evaluated on these columns."""
+    import numpy as np
+
+    if callable(where):
+        attrs = {
+            c: pdf[c].to_numpy() for c in pdf.columns if c not in ("count", "centroid_id")
+        }
+        mask = np.asarray(where(attrs), dtype=bool)
+        if mask.shape != (len(pdf),):
+            raise ValueError("where callable must return one bool per row")
+        return mask
+    rows = (
+        spark.createDataFrame(pdf.assign(**{_ROW_COL: np.arange(len(pdf))}))
+        .filter(where)
+        .select(_ROW_COL)
+        .collect()
+    )
+    mask = np.zeros(len(pdf), dtype=bool)
+    mask[[r[0] for r in rows]] = True
+    return mask
+
+
+def _cached_eval(handle, cache_name: str, where, compute):
+    """compute() cached per predicate in the handle's plan cache
+    `cache_name` (one per stats table); None, uncached, when the predicate
+    can't be evaluated on the table — callers then keep their fallback."""
+    cache = handle.__dict__.setdefault(cache_name, {})
+    key = where if callable(where) else str(where)
+    if key not in cache:
+        try:
+            val = compute()
+        except Exception:
+            return None
+        _cache_put(cache, key, val)
+    return cache[key]
 
 
 def write_attr_stats(base: DataFrame, attr_cols: list, out_dir: str) -> bool:
@@ -383,8 +430,8 @@ def cell_coverage(handle, where, spark=None):
     None when no per-cell table exists or the predicate isn't answerable
     from it (callers then use the pessimistic budget).
 
-    Both predicate forms evaluate against the SAME rows (callable via
-    numpy, SQL string/Column via Spark on the tiny table), so the Spark
+    Both predicate forms evaluate against the SAME rows (where_mask), and
+    the per-cell matches are shared with matched_per_cell, so the Spark
     and serve_local paths compute identical f — the plan-parity contract.
     """
     pdf = load_cell_stats_pdf(handle)
@@ -393,43 +440,23 @@ def cell_coverage(handle, where, spark=None):
     nlist = int(pdf["centroid_id"].nunique())
     if nlist <= 0:
         return None
-    try:
-        # cached per predicate per handle for BOTH forms: a serving loop
-        # repeats one predicate, and the numpy eval over an up-to-1M-row
-        # cell table (or the Spark job for SQL strings) is per-plan money
-        cache = handle.__dict__.setdefault("_cell_coverage_cache", {})
-        key = where if callable(where) else str(where)
-        if key not in cache:
-            if callable(where):
-                import numpy as np
+    cells = _cell_matches(handle, pdf, where, spark)
+    if not cells:
+        return None
+    return len(cells) / nlist
 
-                attrs = {
-                    c: pdf[c].to_numpy()
-                    for c in pdf.columns
-                    if c not in ("count", "centroid_id")
-                }
-                mask = np.asarray(where(attrs), dtype=bool)
-                _cache_put(
-                    cache, key, len(np.unique(pdf["centroid_id"].to_numpy()[mask]))
-                )
-            else:
-                sdf = spark.createDataFrame(pdf)
-                _cache_put(
-                    cache,
-                    key,
-                    int(
-                        sdf.filter(where)
-                        .agg(F.countDistinct("centroid_id"))
-                        .first()[0]
-                        or 0
-                    ),
-                )
-        cells = cache[key]
-    except Exception:
-        return None
-    if cells <= 0:
-        return None
-    return cells / nlist
+
+def _cell_matches(handle, pdf, where, spark) -> "dict | None":
+    """{centroid_id: matched rows} of the per-cell table under `where`,
+    cached per predicate on the handle: a serving loop repeats one
+    predicate, and the eval over an up-to-1M-row table (a Spark job for
+    SQL) is per-plan money otherwise."""
+
+    def compute():
+        sub = pdf.loc[where_mask(pdf, where, spark)].groupby("centroid_id")["count"].sum()
+        return {int(c): int(v) for c, v in sub.items()}
+
+    return _cached_eval(handle, "_mpc_cache", where, compute)
 
 
 def allowlist_cells(handle, allowed_arr) -> "dict | None":
@@ -557,15 +584,8 @@ def _tombstone_matched(handle, where, spark=None) -> "tuple | None":
         t_live = len(pdf)
         if t_live == 0:
             out = (0, 0)
-        elif callable(where):
-            import numpy as np
-
-            attrs = {c: pdf[c].to_numpy() for c in attr_cols}
-            out = (int(np.asarray(where(attrs), dtype=bool).sum()), t_live)
         else:
-            sdf = spark.createDataFrame(pdf[attr_cols]) if spark else None
-            if sdf is not None:
-                out = (int(sdf.filter(where).count()), t_live)
+            out = (int(where_mask(pdf[attr_cols], where, spark).sum()), t_live)
     except Exception:
         out = None
     _cache_put(cache, key, out)
@@ -592,27 +612,12 @@ def selectivity(handle, where=None, allowed_count=None, spark=None):
         total = int(pdf["count"].sum())
         if total <= 0:
             return None
-        try:
-            cache = handle.__dict__.setdefault("_selectivity_cache", {})
-            key = where if callable(where) else str(where)
-            if key not in cache:
-                if callable(where):
-                    attrs = {
-                        c: pdf[c].to_numpy() for c in pdf.columns if c != "count"
-                    }
-                    import numpy as np
-
-                    mask = np.asarray(where(attrs), dtype=bool)
-                    _cache_put(cache, key, int(pdf["count"].to_numpy()[mask].sum()))
-                else:
-                    sdf = spark.createDataFrame(pdf)
-                    _cache_put(
-                        cache,
-                        key,
-                        int(sdf.filter(where).agg(F.sum("count")).first()[0] or 0),
-                    )
-            matched = cache[key]
-        except Exception:
+        counts = pdf["count"].to_numpy()
+        matched = _cached_eval(
+            handle, "_selectivity_cache", where,
+            lambda: int(counts[where_mask(pdf, where, spark)].sum()),
+        )
+        if matched is None:
             # predicate references non-attr columns / shape mismatch:
             # unknown, not an error — search keeps its fixed defaults
             return None
@@ -681,40 +686,12 @@ def matched_per_cell(handle, where=None, allowed_arr=None, spark=None) -> "dict 
     a scan per plan); they only overstate per-cell matches, and the
     fully-deleted-predicate case is already caught by the selectivity
     adjustment upstream (s<=0 keeps the base budget)."""
-    import numpy as np
-
     d_where = d_allow = None
     if where is not None:
         pdf = load_cell_stats_pdf(handle)
         if pdf is None:
             return None
-        cache = handle.__dict__.setdefault("_mpc_cache", {})
-        key = where if callable(where) else str(where)
-        if key not in cache:
-            try:
-                if callable(where):
-                    attrs = {
-                        c: pdf[c].to_numpy()
-                        for c in pdf.columns
-                        if c not in ("count", "centroid_id")
-                    }
-                    mask = np.asarray(where(attrs), dtype=bool)
-                    sub = pdf.loc[mask].groupby("centroid_id")["count"].sum()
-                    _cache_put(cache, key, {int(c): int(v) for c, v in sub.items()})
-                else:
-                    rows = (
-                        spark.createDataFrame(pdf)
-                        .filter(where)
-                        .groupBy("centroid_id")
-                        .agg(F.sum("count").alias("m"))
-                        .collect()
-                    )
-                    _cache_put(
-                        cache, key, {int(r["centroid_id"]): int(r["m"]) for r in rows}
-                    )
-            except Exception:
-                _cache_put(cache, key, None)
-        d_where = cache[key]
+        d_where = _cell_matches(handle, pdf, where, spark)
         if d_where is None:
             return None
     if allowed_arr is not None:

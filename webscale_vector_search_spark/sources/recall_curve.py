@@ -492,8 +492,8 @@ def measure_recall_curve(
             )
         )
         # the query's centroid ordering — EXACTLY the probe selection's
-        # math (stable argsort over unrounded sq-L2, cf. ivf.DriverProbes /
-        # serve_local._LocalProbes), so curve ranks and probed sets agree
+        # math (stable argsort over unrounded sq-L2, cf. ivf.DriverProbes),
+        # so curve ranks and probed sets agree
         c_ids, C = handle.centroid_arrays()
         qc2 = (
             (Q * Q).sum(1)[:, None]
