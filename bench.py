@@ -603,17 +603,11 @@ def _ann_filtered_maint(spark, cache_dir: str) -> tuple[dict, dict]:
         build_index(spark, corpus, idx_dir, cfg, attr_cols=["label"])
         build_secs["build_ivf_attr"] = round(time.perf_counter() - t0, 1)
 
-    # pre-r10 cached artifact: backfill the planner stats tables once (the
-    # auto-nprobe arm below needs them; new builds write them at build time)
     from webscale_vector_search_spark.sources.attr_stats import (
-        ensure_attr_cell_stats,
-        ensure_attr_stats,
         plan_nprobe,
         selectivity,
     )
 
-    ensure_attr_stats(spark, idx_dir)
-    ensure_attr_cell_stats(spark, idx_dir)
     # r11: backfill the measured recall curve (pre-r11 cached artifact) —
     # the auto filtered arm and the recall_target arm both read it
     from webscale_vector_search_spark.sources.recall_curve import (
@@ -646,8 +640,7 @@ def _ann_filtered_maint(spark, cache_dir: str) -> tuple[dict, dict]:
     from webscale_vector_search_spark.config import default_nprobe
 
     auto_np = plan_nprobe(
-        handle, default_nprobe(nlist), k, where=WHERE, spark=spark,
-        Q=qvecs.astype("float64"),
+        handle, default_nprobe(nlist), k, s_est, where=WHERE, spark=spark
     )
     # filtered exact oracle (one pass, not timed as an arm)
     exact_f = knn_pandas(corpus.filter(WHERE), queries, k=k)
@@ -758,7 +751,6 @@ def _ann_filtered_maint(spark, cache_dir: str) -> tuple[dict, dict]:
             hnsw_attr_dir, hnsw_cfg, attr_cols=["label", "bucket"],
         )
         build_secs["build_hnsw_attr"] = round(time.perf_counter() - t0, 1)
-    ensure_attr_cell_stats(spark, hnsw_attr_dir)  # pre-r10 cached artifact
     gh = open_index(spark, hnsw_attr_dir)
     g_base_sec, _ = timed(lambda: search_index(spark, gh, queries, k=k))
     # the EXPLICIT-oversample beam documents the correlated-filter cliff
@@ -1414,8 +1406,6 @@ def _ann_10m_maint(spark, cache_dir: str) -> tuple[dict, dict]:
         search_index,
     )
     from webscale_vector_search_spark.sources.attr_stats import (
-        ensure_attr_cell_stats,
-        ensure_attr_stats,
         plan_nprobe,
         selectivity,
     )
@@ -1457,8 +1447,6 @@ def _ann_10m_maint(spark, cache_dir: str) -> tuple[dict, dict]:
         build_index(spark, corpus, idx_dir, cfg, centroids_df=cents,
                     attr_cols=["label"])
         build_secs["build_ivf_attr_10m"] = round(time.perf_counter() - t0, 1)
-    ensure_attr_stats(spark, idx_dir)
-    ensure_attr_cell_stats(spark, idx_dir)
     from webscale_vector_search_spark.sources.recall_curve import (
         ensure_recall_curve,
         nprobe_from_curve,
@@ -1484,8 +1472,7 @@ def _ann_10m_maint(spark, cache_dir: str) -> tuple[dict, dict]:
     )
     s_est = selectivity(handle, where=WHERE, spark=spark)
     auto_np = plan_nprobe(
-        handle, default_nprobe(nlist), k, where=WHERE, spark=spark,
-        Q=qvecs.astype("float64"),
+        handle, default_nprobe(nlist), k, s_est, where=WHERE, spark=spark
     )
     # filtered exact truth: one untimed pass over the 10% slice
     exact_f = knn_pandas(
@@ -1798,8 +1785,8 @@ def _ann_100m(spark, cache_dir: str) -> tuple[dict, dict | None]:
             hand_f_np = p
             break
     auto_np = plan_nprobe(
-        handle, default_nprobe(nlist), k, where=F_WHERE, spark=spark,
-        Q=qvecs.astype("float64"),
+        handle, default_nprobe(nlist), k,
+        selectivity(handle, where=F_WHERE, spark=spark), where=F_WHERE, spark=spark,
     )
     rtf_sec, rtf_res = timed(
         lambda: search_index(spark, handle, queries, k=k, where=F_WHERE,

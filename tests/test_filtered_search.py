@@ -467,23 +467,19 @@ def test_hnsw_tiny_allowlist_falls_back_exact(spark, hnsw_dir, corpus,
 
 def test_ivfpq_auto_filtered_plan_and_recall(spark, ivfpq_dir, queries,
                                              filtered_oracle):
-    """The calibrated auto budget applies to IVFPQ too (cell stats are
-    written at build): nprobe=None under the label filter must plan at
-    least the 2x floor and keep recall at the explicit-full-probe level."""
-    from webscale_vector_search_spark.config import default_nprobe
-    from webscale_vector_search_spark.sources.attr_stats import plan_nprobe
+    """The cost rule applies to IVFPQ too: label = 3 (s ~ 1/7) holds fewer
+    rows than the filtered probe plan would scan, so nprobe=None plans
+    the exact scan of the matching rows and matches the filtered oracle."""
+    from webscale_vector_search_spark.plans.planner import SearchPlan, plan_search
     from webscale_vector_search_spark.sources.index_io import open_index
 
     h = open_index(spark, ivfpq_dir)
-    base = default_nprobe(NLIST)
-    planned = plan_nprobe(h, base, 10, where=WHERE, spark=spark)
-    assert planned >= min(NLIST, 2 * base)
+    assert plan_search(h, 10, where=WHERE, spark=spark) == SearchPlan("exact_filtered")
     auto = search_index(spark, h, queries, k=10, where=WHERE)
-    fixed_full = search_index(spark, h, queries, k=10, nprobe=NLIST,
-                              where=WHERE)
-    r_auto = recall_at_k(auto, filtered_oracle, k=10)
+    assert _rows(auto) == _rows(filtered_oracle)
+    fixed_full = search_index(spark, h, queries, k=10, nprobe=NLIST, where=WHERE)
     r_full = recall_at_k(fixed_full, filtered_oracle, k=10)
-    assert r_auto >= r_full - 1e-9  # the planned budget reaches full probe here
+    assert recall_at_k(auto, filtered_oracle, k=10) >= r_full - 1e-9
 
 
 def test_hnsw_correlated_filter_falls_back_exact(spark, tmp_path_factory):
@@ -586,10 +582,12 @@ def _query_pair(queries):
 def test_plan_parity_spark_vs_serve(spark, request, corpus, queries, itype,
                                     tmp_path, monkeypatch):
     """search_index and serve_local compute the SAME SearchPlan for the
-    same request: unfiltered, a where, an allowlist, both, a
-    recall_target, and each again with pending tombstones. Comparing
-    result rows alone can miss a plan split (at full probe different
-    nprobes return the same rows)."""
+    same request and return the same rows: unfiltered, a where, a
+    selective allowlist, both, a recall_target, a mild where, and each
+    again with pending tombstones. Comparing result rows alone can miss a
+    plan split (at full probe different nprobes return the same rows).
+    On a list index the selective filters plan the exact scan of the
+    matching rows (recall 1.0) and the mild one still probes."""
     import shutil
 
     from webscale_vector_search_spark.plans.build import delete_vectors
@@ -600,7 +598,9 @@ def test_plan_parity_spark_vs_serve(spark, request, corpus, queries, itype,
     shutil.copytree(request.getfixturevalue(f"{itype}_dir"), out)
     h = open_index(spark, out)
     q = _query_pair(queries)
-    allowed = [int(r["vec_id"]) for r in corpus.filter("vec_id % 5 = 0").collect()]
+    allowed = [int(r["vec_id"]) for r in corpus.filter("vec_id % 25 = 0").collect()]
+    label3 = [int(r["vec_id"]) for r in corpus.filter(WHERE).collect()]
+    dead = allowed[:5] + label3[:5]  # pending deletes the filters would keep
     cases = [
         ({}, {}),
         ({"where": WHERE}, {"where": lambda a: a["label"] == 3}),
@@ -610,25 +610,77 @@ def test_plan_parity_spark_vs_serve(spark, request, corpus, queries, itype,
             {"where": lambda a: a["label"] == 3, "allowed_ids": allowed},
         ),
         ({"recall_target": 0.95}, {"recall_target": 0.95}),
+        ({"where": "label != 3"}, {"where": lambda a: a["label"] != 3}),
     ]
     seen = _capture_plans(monkeypatch)
     plans = {}
     for pending in (False, True):
         if pending:
-            delete_vectors(spark, out, allowed[:40])
+            delete_vectors(spark, out, dead)
+        live = corpus.filter(~F.col("vec_id").isin(dead)) if pending else corpus
         for i, (spark_kw, local_kw) in enumerate(cases):
-            search_index(spark, h, queries, k=10, **spark_kw)
-            serve_local(h, q, k=10, **local_kw)
+            got = search_index(spark, h, queries, k=10, **spark_kw)
+            local = serve_local(h, q, k=10, **local_kw)
             assert len(seen) == 2 and seen[0] == seen[1], (pending, spark_kw, seen)
             plans[pending, i] = seen.pop()
             seen.clear()
+            _assert_serve_identical(got, local)
+            if plans[pending, i].route == "exact_filtered":
+                kept = live.filter(spark_kw.get("where", "true"))
+                if "allowed_ids" in spark_kw:
+                    kept = kept.filter(F.col("vec_id").isin(allowed))
+                # the exact scan of the kept rows: recall 1.0, to the bit
+                assert _rows(got) == _rows(knn_pandas(kept, queries, k=10))
     if itype == "hnsw":
         # pending deletes widen the unfiltered beam on both paths
         assert not plans[False, 0].widen and plans[True, 0].widen
         assert plans[True, 0].k_search == 2 * plans[False, 0].k_search
     else:
-        # the filtered budget is planned, not the unfiltered default
-        assert plans[False, 1].nprobe > plans[False, 0].nprobe
+        for pending in (False, True):
+            assert [plans[pending, i].route for i in range(len(cases))] == [
+                "probe", "exact_filtered", "exact_filtered", "exact_filtered",
+                "probe", "probe",
+            ], pending
+
+
+@pytest.mark.parametrize("itype", ["ivf", "ivfpq"])
+def test_serve_exact_filtered_bit_identical(spark, request, corpus, queries,
+                                            filtered_oracle, itype, tmp_path,
+                                            monkeypatch):
+    """A selective where and a selective allowlist on a list index take
+    the exact route on both paths, with and without pending tombstones:
+    serve_local gathers the matching rows from its cached lists and must
+    equal the Spark path's scan of them to the bit, at recall 1.0."""
+    import shutil
+
+    from webscale_vector_search_spark.plans.build import delete_vectors
+    from webscale_vector_search_spark.plans.serve_local import serve_local
+    from webscale_vector_search_spark.sources.index_io import open_index
+
+    out = str(tmp_path / "idx")
+    shutil.copytree(request.getfixturevalue(f"{itype}_dir"), out)
+    h = open_index(spark, out)
+    q = _query_pair(queries)
+    allowed = [int(r["vec_id"]) for r in corpus.filter("vec_id % 40 = 1").collect()]
+    allowed_oracle = knn_pandas(corpus.filter(F.col("vec_id").isin(allowed)), queries, k=10)
+    seen = _capture_plans(monkeypatch)
+    cases = [
+        ({"where": WHERE}, {"where": lambda a: a["label"] == 3}, filtered_oracle),
+        ({"allowed_ids": allowed}, {"allowed_ids": allowed}, allowed_oracle),
+    ]
+    for spark_kw, local_kw, oracle in cases:
+        want = search_index(spark, h, queries, k=10, **spark_kw)
+        _assert_serve_identical(want, serve_local(h, q, k=10, **local_kw))
+        assert recall_at_k(want, oracle, k=10) == 1.0
+    # pending deletes of rows the filters keep: both paths drop them
+    dead = [int(r["neighbor_id"]) for r in filtered_oracle.filter("rank = 1").collect()]
+    delete_vectors(spark, out, dead + allowed[:5])
+    for spark_kw, local_kw, _ in cases:
+        want = search_index(spark, h, queries, k=10, **spark_kw)
+        _assert_serve_identical(want, serve_local(h, q, k=10, **local_kw))
+        got_ids = {r["neighbor_id"] for r in want.collect()}
+        assert not got_ids & set(dead + allowed[:5])
+    assert {p.route for p in seen} == {"exact_filtered"} and len(seen) == 8
 
 
 def test_hnsw_fallback_plan_parity(spark, hnsw_rare_dir, queries, monkeypatch):
@@ -657,19 +709,43 @@ def _search_jobs(spark, group: str, **search_kw) -> int:
 
 
 @pytest.mark.parametrize("itype, budget", [("ivf", 3), ("ivfpq", 6)])
-def test_filtered_search_job_budget(spark, request, queries, itype, budget):
+def test_filtered_search_job_budget(spark, request, queries, itype, budget,
+                                    monkeypatch):
     """A filtered search (pandas kernel) runs no more Spark jobs than an
-    unfiltered one, on a fresh handle and again on the warm one: the plan
-    walks the query batch the probe selector collects, and a SQL predicate
-    is evaluated on the driver-local stats rows (attr_stats.where_mask),
-    which Spark answers without a job. The same filtered searches ran 8
-    then 4 jobs (IVF) and 11 then 7 (IVFPQ) when the plan collected the
-    batch a second time and aggregated the stats tables in Spark jobs."""
+    unfiltered one, on a fresh handle and again on the warm one: a SQL
+    predicate is evaluated on the driver-local stats rows
+    (attr_stats.where_mask), which Spark answers without a job, and the
+    selective label = 3 plans the exact scan of its matching rows, one
+    pass over the lists. The same filtered searches ran 8 then 4 jobs (IVF)
+    and 11 then 7 (IVFPQ) when the plan collected the batch a second time
+    and aggregated the stats tables in Spark jobs."""
     from webscale_vector_search_spark.sources.index_io import open_index
 
     h = open_index(spark, request.getfixturevalue(f"{itype}_dir"))
+    seen = _capture_plans(monkeypatch)
     kw = dict(index_dir=h, queries=queries, k=10)
     for filt in (None, WHERE):
         for call in ("fresh", "warm"):
             n = _search_jobs(spark, f"budget-{itype}-{filt}-{call}", where=filt, **kw)
             assert n <= budget, f"{itype} where={filt!r} {call}: {n} Spark jobs"
+    assert [p.route for p in seen] == ["probe"] * 2 + ["exact_filtered"] * 2
+
+
+def test_plain_sequence_allowlist_sized_without_a_job(spark, ivf_dir, corpus,
+                                                       queries):
+    """A plain-sequence allowlist is already on the driver, so search_index
+    sizes it with np.unique: three identical calls each run the jobs of
+    the same allowlist passed as a DataFrame on a warm handle, whose size
+    is cached. Sizing the sequence as a fresh DataFrame ran 6, 6, 6 jobs
+    where the DataFrame ran 6, 4, 4."""
+    from webscale_vector_search_spark.sources.index_io import open_index
+
+    allowed = [int(r["vec_id"]) for r in corpus.filter("vec_id % 50 = 0").collect()]
+    allowed_df = spark.createDataFrame([(x,) for x in allowed], "vec_id BIGINT")
+    h = open_index(spark, ivf_dir)
+    kw = dict(index_dir=h, queries=queries, k=10)
+    as_df = [_search_jobs(spark, f"allow-df-{i}", allowed_ids=allowed_df, **kw)
+             for i in range(3)]
+    as_seq = [_search_jobs(spark, f"allow-seq-{i}", allowed_ids=allowed, **kw)
+              for i in range(3)]
+    assert as_seq == [as_df[-1]] * 3, (as_df, as_seq)

@@ -2,12 +2,13 @@
 
 SURVEY §4 O8: the reference tells users to hand-tune nprobe/efSearch per
 use case (README.md:143-150; knob rule vector_search_cluster.py:548-552).
-build_index profiles the index's own recall curve on a seeded in-corpus
+build_index profiles the index's own recall curve on a seeded held-out
 sample (sources/recall_curve.py) and search_index/serve_local pick the
-knob from it: nprobe from the cell-rank curve at depth ceil(k/s), ef from
-the measured ef ladder. Under test: sidecar round-trip, monotonicity,
-target attainment against exact ground truth, Spark/serve plan parity,
-the ensure_* backfill, and the closed-form fallback when no curve exists.
+knob from it: nprobe from the cell-rank curve (at depth k, or by the
+expected-geometry read under a filter), ef from the measured ef ladder.
+Under test: sidecar round-trip, monotonicity, target attainment against
+exact ground truth, Spark/serve plan parity, the ensure_* backfill, and
+the ceil(base/s) fallback when no curve exists.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from webscale_vector_search_spark.operators.ivf import recall_at_k
 from webscale_vector_search_spark.operators.knn import knn_pandas
 from webscale_vector_search_spark.plans.build import build_index, search_index
 from webscale_vector_search_spark.plans.serve_local import serve_local
-from webscale_vector_search_spark.sources.attr_stats import plan_nprobe
+from webscale_vector_search_spark.sources.attr_stats import plan_nprobe, selectivity
 from webscale_vector_search_spark.sources.index_io import open_index
 from webscale_vector_search_spark.sources.recall_curve import (
     CURVE_DIRNAME,
@@ -89,36 +90,47 @@ def test_curve_sidecar_roundtrip(spark, ivf_dir):
     h = open_index(spark, ivf_dir)
     pdf = load_curve_pdf(h)
     assert pdf is not None
-    assert set(pdf.columns) == {
-        "query_id", "nn_rank", "cell_rank", "cell_id", "scope", "new_cell"
-    }
+    assert set(pdf.columns) == {"query_id", "nn_rank", "cell_rank", "cell_id", "scope"}
     assert set(pdf["scope"].unique()) == {"all", "xcell"}
     assert int(pdf[pdf["scope"] == "all"]["nn_rank"].max()) == min(1000, N)
     assert int(pdf["cell_rank"].min()) >= 1
     assert int(pdf["cell_rank"].max()) <= NLIST
-    # the cross-cell profile: top-k out-of-own-cell neighbors span >= 1
-    # distinct cell per query, counted by the new_cell flags
-    from webscale_vector_search_spark.sources.recall_curve import (
-        xcell_need_cells,
-    )
-
-    ncx = xcell_need_cells(h, 10)
-    assert ncx is not None and 1 <= ncx <= NLIST
     # second load hits the handle cache (same object)
     assert load_curve_pdf(h) is pdf
 
 
+def test_curve_cell_rank_matches_probe_order(spark, ivf_dir):
+    """The curve's cell_rank of each sampled neighbor is the rank the probe
+    selector gives that neighbor's cell: DriverProbes at nprobe=cell_rank
+    probes the cell for that query, at one fewer it does not."""
+    from webscale_vector_search_spark.operators.ivf import DriverProbes
+    from webscale_vector_search_spark.sources.recall_curve import (
+        _sample_queries,
+        load_profile_meta,
+    )
+
+    h = open_index(spark, ivf_dir)
+    meta = load_profile_meta(ivf_dir)
+    q_ids, Q = _sample_queries(h.vectors, meta["nq"], seed=meta["seed"])
+    cents = h.centroid_arrays()
+    first_probed = {}  # (query row, cell) -> smallest nprobe probing it
+    for p in range(len(cents[0]), 0, -1):
+        for cid, qsel in DriverProbes(q_ids, Q, cents, p).probe_lists.items():
+            for qi in qsel:
+                first_probed[int(qi), cid] = p
+    qpos = {int(q): i for i, q in enumerate(q_ids)}
+    curve = load_curve_pdf(h)[["query_id", "cell_id", "cell_rank"]]
+    assert len(curve)
+    for qid, cell, rank in curve.itertuples(index=False):
+        assert first_probed[qpos[int(qid)], int(cell)] == rank
+
+
 def test_curve_pick_monotone(spark, ivf_dir):
-    """More recall -> never fewer probes; tighter filters (deeper
-    effective depth) -> never fewer probes."""
+    """More recall -> never fewer probes."""
     h = open_index(spark, ivf_dir)
     picks = [nprobe_from_curve(h, t, 10) for t in (0.5, 0.9, 0.95, 0.99, 1.0)]
     assert all(p is not None for p in picks)
     assert picks == sorted(picks)
-    by_s = [nprobe_from_curve(h, 0.99, 10, s=s) for s in (1.0, 0.5, 0.1, 0.05)]
-    assert by_s == sorted(by_s)
-    # depth past the profiled KMAX: unanswerable -> closed-form fallback
-    assert nprobe_from_curve(h, 0.99, 10, s=1e-6) is None
 
 
 def test_recall_target_attains_target(spark, ivf_dir, queries, oracle):
@@ -151,8 +163,8 @@ def test_recall_target_spark_serve_parity(spark, ivf_dir, queries):
 
 
 def test_filtered_recall_target(spark, ivf_dir, corpus, queries):
-    """Under a filter the curve reads at depth ceil(k/s): the picked
-    budget must still meet the target against the FILTERED oracle."""
+    """Under a filter the planned route must still meet the target
+    against the FILTERED oracle."""
     h = open_index(spark, ivf_dir)
     f_oracle = knn_pandas(
         corpus.filter("label = 2").select("vec_id", "embedding"), queries, k=10
@@ -160,15 +172,16 @@ def test_filtered_recall_target(spark, ivf_dir, corpus, queries):
     res = search_index(
         spark, h, queries, k=10, where="label = 2", recall_target=0.99
     )
-    # attainment is statistical (a 64-query build-time profile + the
-    # in-expectation containment bound): allow one-neighbor slack
+    # attainment is statistical (a 64-query build-time profile): allow
+    # one-neighbor slack
     assert recall_at_k(res, f_oracle, k=10) >= 0.99 - 0.0126
 
 
 def test_backfill_and_fallback(spark, corpus, tmp_path_factory):
-    """recall_curve=False builds no curve (the closed-form planner takes
-    over); ensure_recall_curve backfills it and the curve path takes over
-    — visible as a different (smaller) auto budget."""
+    """recall_curve=False builds no curve (the filtered probe plan falls
+    back to ceil(base/s)); ensure_recall_curve backfills it and the
+    expected-geometry read takes over — visible as a different (smaller)
+    plan."""
     out = str(tmp_path_factory.mktemp("rt_bf") / "idx")
     build_index(
         spark, corpus, out,
@@ -180,13 +193,13 @@ def test_backfill_and_fallback(spark, corpus, tmp_path_factory):
     assert not os.path.isdir(os.path.join(out, CURVE_DIRNAME))
     h = open_index(spark, out)
     base = 4
-    no_curve = plan_nprobe(h, base, 10, where="label = 2", spark=spark)
+    s = selectivity(h, where="label = 2", spark=spark)
+    no_curve = plan_nprobe(h, base, 10, s, where="label = 2", spark=spark)
+    assert no_curve == min(NLIST, int(np.ceil(base / s)))
     assert ensure_recall_curve(spark, out)
     h2 = open_index(spark, out)
-    with_curve = plan_nprobe(h2, base, 10, where="label = 2", spark=spark)
-    # the measured budget is never larger than the closed-form one here
-    # (the closed-form was calibrated 1-2.5x above need)
-    assert with_curve <= no_curve
+    with_curve = plan_nprobe(h2, base, 10, s, where="label = 2", spark=spark)
+    assert with_curve < no_curve
     # explicit recall_target without a curve: keeps the base default
     assert plan_nprobe(h, base, 10, recall_target=0.99, spark=spark) == base
 
@@ -240,9 +253,9 @@ def test_hnsw_recall_target_parity(spark, hnsw_dir, queries):
 
 
 def test_replay_plans_correlated_deeper(spark, tmp_path_factory):
-    """The pair-weighted profile replay separates a cluster-CORRELATED
+    """The expected-geometry read separates a cluster-CORRELATED
     predicate (matches confined to few cells, far from most queries) from
-    a DISPERSED one of similar selectivity (matches in every cell): the
+    a DISPERSED one of the same selectivity (matches in every cell): the
     correlated plan probes deeper, and both auto searches stay exact on
     this small corpus."""
     import pandas as pd
@@ -274,10 +287,11 @@ def test_replay_plans_correlated_deeper(spark, tmp_path_factory):
         attr_cols=["label", "label2"],
     )
     qrows = corpus.orderBy("vec_id").limit(8).collect()
-    Q = np.stack([r["embedding"] for r in qrows]).astype(np.float64)
     base = default_nprobe(ncl)
-    p_corr = plan_nprobe(h, base, 10, where="label = 1", spark=spark, Q=Q)
-    p_disp = plan_nprobe(h, base, 10, where="label2 = 1", spark=spark, Q=Q)
+    p_corr, p_disp = (
+        plan_nprobe(h, base, 10, selectivity(h, where=w, spark=spark), where=w, spark=spark)
+        for w in ("label = 1", "label2 = 1")
+    )
     assert p_corr > p_disp
     queries = spark.createDataFrame(
         [(r["vec_id"], r["embedding"]) for r in qrows],
@@ -397,8 +411,8 @@ def test_filtered_recall_target_no_curve_keeps_base_floor(
     spark, corpus, tmp_path_factory
 ):
     """An explicit recall_target on an index with attr stats but NO measured
-    curve must never probe LESS than the no-target plan: the adaptive walk
-    alone is a discovery floor, not a measured guarantee."""
+    curve must never probe LESS than the no-target plan or the default:
+    without a curve there is no measured pick to trust below ceil(base/s)."""
     out = str(tmp_path_factory.mktemp("rt_floor") / "idx")
     build_index(
         spark, corpus, out,
@@ -408,13 +422,12 @@ def test_filtered_recall_target_no_curve_keeps_base_floor(
         attr_cols=["label"],
     )
     h = open_index(spark, out)
-    rows = corpus.orderBy("vec_id").limit(8).collect()
-    Q = np.stack([np.asarray(r["embedding"]) for r in rows]).astype("float64")
     base = 16
+    s = selectivity(h, where="label = 2", spark=spark)
     with_target = plan_nprobe(
-        h, base, 10, where="label = 2", spark=spark, recall_target=0.99, Q=Q
+        h, base, 10, s, where="label = 2", spark=spark, recall_target=0.99
     )
-    without = plan_nprobe(h, base, 10, where="label = 2", spark=spark, Q=Q)
+    without = plan_nprobe(h, base, 10, s, where="label = 2", spark=spark)
     assert with_target >= base
     assert with_target >= without
 
@@ -553,68 +566,17 @@ def test_hnsw_curveless_keeps_legacy_default(spark, corpus, tmp_path_factory,
     assert seen["ef"] == 64
 
 
-def test_profile_replay_member_order_walk_unit():
-    """Pure-unit pins for the member-order supply walk (no Spark): the
-    walk must cover BOTH bars — REPLAY_SUPPLY*k reachable rows (thin
-    supply walks deeper) AND the min(k, n_matching) member-prefix (r13:
-    the cells holding the filtered top-k are a <=k prefix of the
-    member-nearest order, so a single fat cell meeting the rows bar must
-    NOT stop a k>1 walk — the one-cell stop under-served 0.978 against a
-    0.99 target at the 100M label arm). A filter matching no profiled
-    cell returns None (fall back to the closed-form planner)."""
-    from types import SimpleNamespace
-
-    import pandas as pd
-
-    from webscale_vector_search_spark.sources.recall_curve import (
-        REPLAY_SUPPLY,
-        profile_replay_nprobe,
-    )
-
-    # one profiled query; matching cells in member-nearest order 10, 20, 30
-    # sit at center ranks 5, 9, 50 (burstiness: member order != center order)
-    prof = pd.DataFrame(
-        {
-            "query_id": [1, 1, 1],
-            "cell_id": [10, 20, 30],
-            "member_rank": [1, 2, 3],
-            "center_rank": [5, 9, 50],
-        }
-    )
-    h = SimpleNamespace(index_dir="fake", _cell_profile_pdf=prof)
-    k = 2
-    fat = REPLAY_SUPPLY * k
-    # k=2 with fat supply: rows bar met at cell 10, prefix bar needs 2
-    # cells -> the deeper center rank of the member-prefix pair
-    assert profile_replay_nprobe(h, 0.99, k, {10: fat, 20: fat, 30: fat}) == 9
-    # k=1: the prefix is one cell — fat supply stops at the first
-    # member-nearest matching cell (the r12 behavior, correct for k=1)
-    assert profile_replay_nprobe(h, 0.99, 1, {10: fat, 20: fat, 30: fat}) == 5
-    # thin supply at k=2: the rows bar (2*REPLAY_SUPPLY rows at 1/cell)
-    # outwalks the 2-cell prefix -> all three cells
-    assert profile_replay_nprobe(h, 0.99, k, {10: 1, 20: 1, 30: 1}) == 50
-    # legacy bare iterable: unbounded supply, prefix bar still walks k cells
-    assert profile_replay_nprobe(h, 0.99, 1, [10, 20, 30]) == 5
-    assert profile_replay_nprobe(h, 0.99, k, [10, 20, 30]) == 9
-    # filter matches only the bursty far cell: its center rank is the need
-    assert profile_replay_nprobe(h, 0.99, k, {30: fat}) == 50
-    # no matching cell in the profile -> None (closed-form fallback)
-    assert profile_replay_nprobe(h, 0.99, k, {999: fat}) is None
-    assert profile_replay_nprobe(h, 0.99, k, {}) is None
-
-
 def test_expected_replay_covers_parity_correlated_spread(
     spark, tmp_path_factory
 ):
-    """Integration pin for the r13 100M planner regression, in miniature:
-    a parity-correlated filter (label = cluster % 2 — half the cells hold
-    ZERO matches, so a non-matching-cluster query's filtered top-k lives
-    in OTHER clusters) over FAT cells (each cell's matched supply alone
-    meets the REPLAY_SUPPLY*k rows bar). The r12 supply walk stopped at
-    the first member-nearest matching cell and under-served; the
-    expected-geometry read must be active and the auto plan must cover
-    the multi-cell spread (exact on this corpus), while a re-simulation
-    of the old one-cell pick measurably under-serves."""
+    """A parity-correlated filter (label = cluster % 2 — half the cells
+    hold ZERO matches, so a non-matching-cluster query's filtered top-k
+    lives in OTHER clusters) over FAT cells (each matching cell holds
+    dozens of matches). A plan that stops at each query's first
+    member-nearest matching cell under-serves; the expected-geometry read
+    must be active, and the auto plan (a probe: half the rows match) must
+    cover the multi-cell spread (exact on this corpus), while a
+    re-simulation of the one-cell pick measurably under-serves."""
     import math
 
     import pandas as pd
@@ -661,17 +623,16 @@ def test_expected_replay_covers_parity_correlated_spread(
         attr_cols=["label"], centroids_df=cents,
     )
     mc = matched_per_cell(h, where="label = 1", spark=spark)
-    # fat supply: the typical matching cell alone satisfies the old rows
-    # bar (a couple of boundary rows land in wrong-parity cells — which
-    # only adds thin cells, not the failure mode under test)
+    # fat supply: the typical matching cell holds dozens of matches (a
+    # couple of boundary rows land in wrong-parity cells — which only adds
+    # thin cells, not the failure mode under test)
     assert float(np.median(list(mc.values()))) >= 40
     geo = expected_replay_nprobe(h, 0.99, 10, mc, cell_total_rows(h))
     assert geo is not None  # the primary read answers on this index
     qrows = corpus.filter("label = 0").orderBy("vec_id").limit(8).collect()
-    Q = np.stack([r["embedding"] for r in qrows]).astype(np.float64)
-    auto = plan_nprobe(
-        h, default_nprobe(ncl), 10, where="label = 1", spark=spark, Q=Q
-    )
+    s = selectivity(h, where="label = 1", spark=spark)
+    auto = plan_nprobe(h, default_nprobe(ncl), 10, s, where="label = 1", spark=spark)
+    assert auto == geo and s * ncl > auto  # the probe route executes it
     queries = spark.createDataFrame(
         [(r["vec_id"], r["embedding"]) for r in qrows],
         "query_id BIGINT, qvec ARRAY<FLOAT>",
@@ -681,7 +642,7 @@ def test_expected_replay_covers_parity_correlated_spread(
     )
     got = search_index(spark, h, queries, k=10, where="label = 1")
     assert recall_at_k(got, oracle, k=10) == 1.0
-    # the r12 one-cell stop, re-simulated from the same profile: first
+    # the one-cell stop, re-simulated from the same profile: first
     # member-nearest matching cell per query, 0.99-quantile, x1.25 margin
     prof = load_cell_profile_pdf(h)
     sub = prof[prof["cell_id"].isin(set(mc))].sort_values("member_rank")
@@ -696,13 +657,13 @@ def test_expected_replay_covers_parity_correlated_spread(
 
 
 def test_expected_replay_nprobe_unit():
-    """Pure-unit pins for the r13 expected-geometry filtered read (no
-    Spark): a dispersed filter reads the containment depth from the
-    measured neighbor rows; a filter that zeroes the query's own cell
-    switches to the xcell scope; unobservable mass (profile exhausted
-    before k expected matches) lands on the member-prefix cells; and
-    missing inputs (no totals, counts-less mcells, no cell_id column)
-    return None for the supply-walk fallback."""
+    """Pure-unit pins for the expected-geometry filtered read (no Spark):
+    a dispersed filter reads the containment depth from the measured
+    neighbor rows; a filter that zeroes the query's own cell switches to
+    the xcell scope; unobservable mass (profile exhausted before k
+    expected matches) lands on the member-prefix cells; and missing
+    inputs (no totals, no matching cell, no cell_id column) return None
+    for the ceil(base/s) fallback."""
     from types import SimpleNamespace
 
     import pandas as pd
@@ -723,7 +684,6 @@ def test_expected_replay_nprobe_unit():
                 "cell_rank": 1 if r <= 30 else 3,
                 "cell_id": 10 if r <= 30 else 20,
                 "scope": "all",
-                "new_cell": r in (1, 31),
             }
         )
     curve = pd.DataFrame(rows)
@@ -736,7 +696,7 @@ def test_expected_replay_nprobe_unit():
         }
     )
     h = SimpleNamespace(
-        index_dir="fake", _recall_curve_pdf=curve, _cell_profile_pdf=prof
+        index_dir="fake", _sidecars={"recall_curve": curve, "cell_profile": prof}
     )
     totals = {10: 100, 20: 100}
     # fat dispersed match in the own cell: expected k reached within the
@@ -752,12 +712,10 @@ def test_expected_replay_nprobe_unit():
     assert expected_replay_nprobe(h, 0.99, k, {10: 1, 20: 1}, totals) == 3
     # unanswerable inputs -> None (fallback path)
     assert expected_replay_nprobe(h, 0.99, k, {10: 100}, None) is None
-    assert expected_replay_nprobe(h, 0.99, k, [10, 20], totals) is None
     assert expected_replay_nprobe(h, 0.99, k, {}, totals) is None
     h_nocell = SimpleNamespace(
         index_dir="fake",
-        _recall_curve_pdf=curve.drop(columns=["cell_id"]),
-        _cell_profile_pdf=prof,
+        _sidecars={"recall_curve": curve.drop(columns=["cell_id"]), "cell_profile": prof},
     )
     assert expected_replay_nprobe(h_nocell, 0.99, k, {10: 100}, totals) is None
 
@@ -776,7 +734,7 @@ def test_ef_from_curve_strict_read_unit():
     curve = pd.DataFrame(
         {"ef": [16, 32, 64], "recall": [0.90, 0.990, 0.996], "k": [10] * 3}
     )
-    h = SimpleNamespace(index_dir="fake", _recall_curve_pdf=curve)
+    h = SimpleNamespace(index_dir="fake", _sidecars={"recall_curve": curve})
     # strict bar for 0.99 is 0.992: the exactly-at-target ef=32 rung is
     # one resample from underneath it -> pick 64
     assert ef_from_curve(h, 0.99, 10) == 64

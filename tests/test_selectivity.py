@@ -1,21 +1,18 @@
-"""Selectivity-aware filtered search (VERDICT r9 ask #3 + ADVICE low).
+"""Selectivity-aware filtered search.
 
-The r9 recall trap: a filter of selectivity s thins every probed list to
-~s of its candidates, so fixed-nprobe filtered IVF measured recall 0.32 at
-s=0.1. r10 closes it planner-side: build_index(attr_cols=...) writes an
-attr_stats/ per-combo count table plus (IVF/IVFPQ) an attr_cell_stats/
-per-(cell, combo) table; search with nprobe=None sizes the probe budget
-from them — max(2x floor, candidate-volume C*k/(s*avg_cell),
-cell-discovery D/f) per the calibration in sources/attr_stats.py — with
-explicit knobs as overrides (filter_oversample likewise for graph
-post-filtering, clamped 4..32). Maintenance ops fold count deltas in;
-the per-cell table is a lower bound between compactions (conservative).
+A filter of selectivity s thins every probed list to ~s of its
+candidates, so fixed-nprobe filtered IVF loses recall. The planner closes
+it: build_index(attr_cols=...) writes an attr_stats/ per-combo count table
+plus (IVF/IVFPQ) an attr_cell_stats/ per-(cell, combo) table, and search
+with nprobe=None routes by cost — the exact scan of the matching rows
+when they are no more than a probe would scan, else a probe sized from
+the recall curve — with explicit knobs as overrides (filter_oversample
+likewise for graph post-filtering, clamped 4..32). Maintenance ops fold
+count deltas in; the per-cell table is a lower bound between compactions.
 
 Also under test: the cluster-CORRELATED filter case (all matches in few
-cells — per-combo counts alone can't see it, the D/f term exists for it),
-the tombstone x filter margin composition (k_search = 2*k*oversample when
-both apply), and the Spark/serve_local plan parity of the auto path
-(both read the same stats rows).
+cells), tombstone-adjusted selectivity, and the Spark/serve_local plan
+parity of the auto path (both read the same stats rows).
 """
 
 from __future__ import annotations
@@ -42,7 +39,6 @@ from webscale_vector_search_spark.sources.attr_stats import (
     CELL_STATS_DIRNAME,
     STATS_DIRNAME,
     cell_coverage,
-    filtered_nprobe,
     filtered_oversample,
     load_cell_stats_pdf,
     load_stats_pdf,
@@ -91,26 +87,6 @@ def filtered_oracle(corpus, queries):
 
 
 def test_formulas():
-    # degraded inputs: attr predicate without per-cell stats keeps the
-    # pessimistic ceil(base/s) budget (the pre-calibration rule)
-    assert filtered_nprobe(4, 1000, 0.1) == 40
-    assert filtered_nprobe(4, 16, 0.1) == 16  # capped at nlist
-    assert filtered_nprobe(4, 1000, None) == 4  # unknown -> default
-    assert filtered_nprobe(4, 1000, 0.0) == 4  # nothing matches -> don't scan
-    assert filtered_nprobe(4, 1000, 1.0) == 4
-    # calibrated budget (per-cell stats present): max of 2x floor,
-    # candidate volume 64*k*nlist/(s*n), cell discovery 4/f
-    kw = dict(k=10, total=1_000_000, cell_frac=1.0)
-    assert filtered_nprobe(64, 1000, 0.5, **kw) == 128  # floor wins
-    assert filtered_nprobe(64, 1000, 0.1, **kw) == 128  # floor wins
-    # candidate volume wins at tiny s: 64*10*1000/(0.001*1e6) = 640
-    assert filtered_nprobe(64, 1000, 0.001, **kw) == 640
-    # cell discovery wins for a correlated filter: f=1/100 -> 4/f = 400
-    assert filtered_nprobe(64, 1000, 0.1, k=10, total=1_000_000,
-                           cell_frac=0.01) == 400
-    # allowlists stay pessimistic even alongside per-cell stats
-    assert filtered_nprobe(64, 1000, 0.01, k=10, total=1_000_000,
-                           cell_frac=1.0, s_allow=0.1) == 640
     assert filtered_oversample(0.1) == 10
     assert filtered_oversample(0.001) == 32  # clamp high
     assert filtered_oversample(0.9) == 4  # clamp low
@@ -149,8 +125,8 @@ def test_auto_nprobe_restores_filtered_recall(
     spark, ivf_dir, queries, filtered_oracle
 ):
     """Monotone recovery: auto (no manual knob) >= the fixed default, and
-    at this corpus size the candidate-volume term reaches full probe ->
-    exact equality with the pre-filtered brute force."""
+    a 10% filter on 16 lists holds fewer rows than the default probe
+    scans, so the auto plan is the exact scan of the matching rows."""
     h = open_index(spark, ivf_dir)
     base_np = default_nprobe(NLIST)
     fixed = search_index(spark, h, queries, k=10, nprobe=base_np, where=WHERE)
@@ -158,7 +134,7 @@ def test_auto_nprobe_restores_filtered_recall(
     r_fixed = recall_at_k(fixed, filtered_oracle, k=10)
     r_auto = recall_at_k(auto, filtered_oracle, k=10)
     assert r_auto >= r_fixed
-    assert r_auto == 1.0  # scaled nprobe hits nlist here -> exact
+    assert r_auto == 1.0
 
 
 def test_auto_plan_parity_spark_vs_serve(spark, ivf_dir, queries):
@@ -187,11 +163,14 @@ def test_auto_plan_parity_spark_vs_serve(spark, ivf_dir, queries):
 
 def test_correlated_filter_cell_discovery(spark, tmp_path_factory):
     """All matches in FEW cells: per-combo counts see s, not the
-    correlation; the D/f cell-discovery term widens the budget. 16
-    natural clusters, nlist=16, label = cluster % 4 -> each label lives
-    in ~4 of 16 cells (f ~ 0.25). The auto plan must (a) pick the D/f
-    budget over the uniform one and (b) restore exact recall."""
+    correlation; the per-cell table does. 16 natural clusters, nlist=16,
+    label = cluster % 4 -> each label lives in ~4 of 16 cells (f ~ 0.25).
+    The filtered probe plan must widen past the default for it, which
+    prices the exact scan of the matching rows below the probe; the auto
+    search then restores exact recall."""
     import pandas as pd
+
+    from webscale_vector_search_spark.plans.planner import SearchPlan, plan_search
 
     rng = np.random.default_rng(7)
     ncl, dim, n = 16, 16, 8000
@@ -217,9 +196,13 @@ def test_correlated_filter_cell_discovery(spark, tmp_path_factory):
     f = cell_coverage(h, "label = 1", spark=spark)
     assert f is not None and f <= 0.5  # correlation detected (~4-8/16)
     base = default_nprobe(16)
-    planned = plan_nprobe(h, base, 10, where="label = 1", spark=spark)
-    # D/f >= 8 must beat the 2x floor the uniform-filter plan would pick
-    assert planned >= max(2 * base, int(4 / f))
+    s = selectivity(h, where="label = 1", spark=spark)
+    assert s * 16 > base  # the default alone would probe, not scan
+    planned = plan_nprobe(h, base, 10, s, where="label = 1", spark=spark)
+    assert planned >= s * 16
+    assert plan_search(h, 10, where="label = 1", spark=spark) == SearchPlan(
+        "exact_filtered"
+    )
 
     queries = spark.createDataFrame(
         pdf.iloc[:20][["vec_id", "embedding"]].rename(
@@ -314,42 +297,6 @@ def test_unbounded_attr_domain_skips_stats(spark, corpus, tmp_path_factory,
     assert got.count() <= 3  # fixed-default fallback still answers
 
 
-def test_nprobe_budget_properties():
-    """Planner-formula invariants, swept over the input space: the budget
-    is bounded [base, nlist], monotone non-increasing in selectivity and
-    in cell coverage (rarer/more-correlated filters never get FEWER
-    probes), and degrades to the pessimistic ceil(base/s) without
-    per-cell statistics."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=300, deadline=None)
-    @given(
-        base=st.integers(1, 256),
-        nlist=st.integers(1, 100_000),
-        s=st.floats(1e-6, 1.0, exclude_max=False),
-        f=st.one_of(st.none(), st.floats(1e-6, 1.0)),
-        k=st.integers(1, 100),
-        total=st.integers(1, 10**9),
-    )
-    def check(base, nlist, s, f, k, total):
-        np1 = filtered_nprobe(base, nlist, s, k=k, total=total, cell_frac=f)
-        # bounded: never below the default (unless nlist itself is — the
-        # cap at nlist IS the full probe), never above every list
-        assert min(base, nlist) <= np1 <= max(base, nlist)
-        # monotone: a rarer filter never gets fewer probes
-        np_rarer = filtered_nprobe(base, nlist, s / 2, k=k, total=total,
-                                   cell_frac=f)
-        assert np_rarer >= np1
-        # monotone: a more cell-correlated filter never gets fewer probes
-        if f is not None:
-            np_corr = filtered_nprobe(base, nlist, s, k=k, total=total,
-                                      cell_frac=f / 2)
-            assert np_corr >= np1
-
-    check()
-
-
 def _clustered(spark, seed=7, ncl=16, dim=16, n=8000):
     import pandas as pd
 
@@ -369,11 +316,12 @@ def _clustered(spark, seed=7, ncl=16, dim=16, n=8000):
 
 
 def test_allowlist_coverage_budgets(spark, tmp_path_factory):
-    """r10 kept ALL allowlists on the pessimistic ceil(base/s) budget
-    because attribute statistics can't see allowlist clustering; the exact
-    is-in coverage lookup (attr_stats.allowlist_cell_coverage) now tells a
-    CORRELATED allowlist (one cluster's ids, few cells) from a DISPERSED
-    one of equal size — different budgets, both recall-exact."""
+    """The exact is-in coverage lookup (attr_stats.allowlist_cell_coverage)
+    tells a CORRELATED allowlist (one cluster's ids, few cells) from a
+    DISPERSED one of equal size; both are 1/16 of the rows, fewer than the
+    default probe scans, so both auto searches scan exactly the allowed
+    rows and stay recall-exact."""
+    from webscale_vector_search_spark.plans.planner import SearchPlan, plan_search
     from webscale_vector_search_spark.sources.attr_stats import (
         allowlist_cell_coverage,
     )
@@ -392,11 +340,9 @@ def test_allowlist_coverage_budgets(spark, tmp_path_factory):
     f_corr = allowlist_cell_coverage(h, corr)
     f_disp = allowlist_cell_coverage(h, disp)
     assert f_corr is not None and f_disp is not None and f_corr < f_disp
-    base = default_nprobe(16)
-    b_corr = plan_nprobe(h, base, 10, allowed_count=len(corr), allowed_arr=corr)
-    b_disp = plan_nprobe(h, base, 10, allowed_count=len(disp), allowed_arr=disp)
-    assert b_corr > b_disp  # concentration costs probes, dispersion doesn't
-    # both auto plans are recall-exact against the allowed-subset oracle
+    for arr in (corr, disp):
+        plan = plan_search(h, 10, allowed=lambda arr=arr: (len(arr), arr))
+        assert plan == SearchPlan("exact_filtered")
     qrows = corpus.orderBy("vec_id").limit(6).collect()
     queries = spark.createDataFrame(
         [(r["vec_id"], r["embedding"]) for r in qrows],
@@ -410,7 +356,7 @@ def test_allowlist_coverage_budgets(spark, tmp_path_factory):
         )
         got = search_index(spark, h, queries, k=10, allowed_ids=allow_df)
         assert recall_at_k(got, oracle, k=10) >= 0.99
-    # parity: serve_local reads the same coverage -> same budget
+    # parity: serve_local plans the same route -> the same rows
     from webscale_vector_search_spark.plans.serve_local import serve_local
 
     q = (
@@ -433,11 +379,11 @@ def test_allowlist_coverage_budgets(spark, tmp_path_factory):
 
 
 def test_tombstone_correlated_selectivity(spark, tmp_path_factory):
-    """ADVICE r10: the stats tables are maintained by PHYSICAL removal
-    only, so pending tombstones still sit in the counts — delete a tenant
-    then query that tenant and the unadjusted s overestimates (budget
-    undershoots). selectivity() now subtracts the measured tombstone
-    overlap (bounded is-in lookup, cached per fingerprint)."""
+    """The stats tables are maintained by PHYSICAL removal only, so
+    pending tombstones still sit in the counts — delete a tenant then
+    query that tenant and the unadjusted s overestimates. selectivity()
+    subtracts the measured tombstone overlap (bounded is-in lookup, cached
+    per fingerprint)."""
     corpus = _clustered(spark).cache()
     out = str(tmp_path_factory.mktemp("sel_tomb") / "idx")
     build_index(
@@ -467,7 +413,7 @@ def test_tombstone_correlated_selectivity(spark, tmp_path_factory):
 
 def test_stats_merge_reenforces_caps(spark, corpus, tmp_path_factory,
                                      monkeypatch):
-    """ADVICE r10: a delta carrying NEW combos can push a once-trivial
+    """A delta carrying NEW combos can push a once-trivial
     stats table past the broadcast-trivial cap — the merge re-checks and
     drops the table (search degrades to fixed defaults, never wrong)."""
     from webscale_vector_search_spark.sources import attr_stats

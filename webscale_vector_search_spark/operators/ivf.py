@@ -386,6 +386,15 @@ def recall_at_k(approx: DataFrame, exact: DataFrame, k: int = 10) -> float:
     return hit / total if total else 0.0
 
 
+def probe_order(Q: np.ndarray, C: np.ndarray):
+    """(qc2, order): qc2[q, l] = ||Q[q] - C[l]||^2 and each query's centroid
+    slots in probe order — a stable argsort of the unrounded qc2, so ties
+    keep slot order. The one ordering the probe selector and the recall
+    curve's cell ranks share."""
+    qc2 = (Q * Q).sum(1)[:, None] - 2.0 * (Q @ C.T) + (C * C).sum(1)[None, :]
+    return qc2, np.argsort(qc2, axis=1, kind="stable")
+
+
 class DriverProbes:
     """Driver-side probe selection shared by the numpy search kernels
     (ivf_search_pandas, pq.adc_search, and serve_local's driver-resident
@@ -399,14 +408,10 @@ class DriverProbes:
         self.q_ids, self.Q = q_ids, Q
         self.c_ids, self.C = centroid_arrays(centroids)
         nq, nlist = len(self.q_ids), len(self.c_ids)
-        # qc2[q, l] = ||Q[q] - C[l]||^2 — probe ranking here, and the
-        # coarse term of the residual ADC decomposition in pq.adc_search
-        self.qc2 = (
-            (self.Q * self.Q).sum(1)[:, None]
-            - 2.0 * (self.Q @ self.C.T)
-            + (self.C * self.C).sum(1)[None, :]
-        )
-        order = np.argsort(self.qc2, axis=1, kind="stable")[:, : min(nprobe, nlist)]
+        # qc2 is also the coarse term of the residual ADC decomposition in
+        # pq.adc_search
+        self.qc2, order = probe_order(self.Q, self.C)
+        order = order[:, : min(nprobe, nlist)]
         # CSR-style probe lists: centroid_id -> ascending query-row indices.
         # Total size O(nq * nprobe) — a dense (nq x max_centroid_id) bool
         # mask rides every task closure and bloats at nlist 10^5-10^6 x

@@ -986,10 +986,6 @@ def _postfilter_topk(res: DataFrame, attr_src: DataFrame | None, where,
     )
 
 
-# query rows the SQL IVF kernel's filtered plan walks (search_index)
-PLAN_MAX_QUERIES = 4096
-
-
 def search_index(
     spark: SparkSession,
     index_dir: str | index_io.IndexHandle,
@@ -1043,12 +1039,14 @@ def search_index(
     - FLAT/IVF/IVFPQ evaluate the predicate IN the (probed) scan — exact
       filtered semantics within the probed lists; the predicate reaches the
       parquet scan's PushedFilters, so filtering costs row-group pruning +
-      column decode, never a join or a post-pass. Recall under a filter of
-      selectivity s: the probed lists hold ~s of their usual candidates —
-      with `nprobe` left at None, the engine sizes the probe budget from
-      the attr_stats sidecars (written at build for attr_cols indexes):
-      max(2x default, candidate-volume, cell-discovery), calibrated in
-      sources/attr_stats.py; an explicit nprobe is always an override.
+      column decode, never a join or a post-pass. With `nprobe` left at
+      None, IVF/IVFPQ route by cost from the attr_stats sidecars (written
+      at build for attr_cols indexes): when the filter's estimated
+      matching rows s*N are no more than the rows a probe would scan,
+      max(default, p)*N/nlist, the search is the exact scan of the
+      matching rows (recall 1.0); otherwise it probes p lists, p read off
+      the recall curve for this filter (attr_stats.plan_nprobe). An
+      explicit nprobe is always an override.
     - HNSW traverses blind (a beam has no scan), so the graph is searched
       for k*filter_oversample candidates (ef widened to match) and the
       survivors re-ranked — standard post-filter ANN. filter_oversample
@@ -1060,16 +1058,16 @@ def search_index(
     `recall_target` is the MEASURED form of the reference's hand-tuning
     guidance (README.md:143-150): pick the knob from the index's stored
     recall curve (sources/recall_curve.py, profiled at build) instead of
-    reasoning in probe/beam units — nprobe for IVF/IVFPQ (read at depth
-    ceil(k/s) under a filter), ef_search for graph HNSW. An explicit
-    `nprobe` still overrides everything; `recall_target` overrides the
-    `ef_search` default for graphs. With NO explicit ef_search and no
-    recall_target, a graph index that carries a measured ef curve defaults
-    its beam to the DEFAULT_TARGET (0.99) pick from that curve (capped at
-    the ladder ceiling when no measured rung reaches it); indexes without
-    a curve (FLAT, or built with recall_curve=False and never backfilled
-    via ensure_recall_curve) keep the closed-form defaults (ef=64, the
-    reference's constant).
+    reasoning in probe/beam units — nprobe for IVF/IVFPQ (under a filter,
+    the filtered probe plan above aims at it), ef_search for graph HNSW.
+    An explicit `nprobe` still overrides everything; `recall_target`
+    overrides the `ef_search` default for graphs. With NO explicit
+    ef_search and no recall_target, a graph index that carries a measured
+    ef curve defaults its beam to the DEFAULT_TARGET (0.99) pick from that
+    curve (capped at the ladder ceiling when no measured rung reaches it);
+    indexes without a curve (FLAT, or built with recall_curve=False and
+    never backfilled via ensure_recall_curve) keep the closed-form
+    defaults (ef=64, the reference's constant).
     """
     from webscale_vector_search_spark.operators.knn import knn, knn_pandas
 
@@ -1081,24 +1079,28 @@ def search_index(
     else:
         handle = index_io.open_index(spark, index_dir)
     itype = handle.meta["index_type"]
+    allowed_arr = None
     if allowed_ids is not None and not isinstance(allowed_ids, DataFrame):
         # accept the same plain-sequence form serve_local takes, so a
         # search_routed call is valid on both sides of the batch-size split
+        import numpy as np
         import pyarrow as pa
 
-        allowed_ids = spark.createDataFrame(
-            pa.table({"vec_id": pa.array([int(x) for x in allowed_ids], pa.int64())})
-        )
+        allowed_arr = np.unique(np.fromiter((int(x) for x in allowed_ids), dtype=np.int64))
+        allowed_ids = spark.createDataFrame(pa.table({"vec_id": pa.array(allowed_arr)}))
     filtered = where is not None or allowed_ids is not None
     tomb = handle.tombstones  # pending logical deletes (delete_vectors)
 
     def _allowed_info():
-        """(distinct count, sorted id array | None) for the allowlist: one
-        bounded collect, cached per allowlist DataFrame object on the
-        handle so a serving loop that re-passes the same allowlist pays it
-        once. Past ALLOW_COVERAGE_MAX_IDS the array is None and a second,
-        count-only job sizes the list; the list is broadcast into the scan
-        anyway, so collecting it is the same driver-memory class."""
+        """(distinct count, sorted id array | None) for the allowlist. A
+        plain sequence is already on the driver; a DataFrame costs one
+        bounded collect, cached per DataFrame object on the handle so a
+        serving loop that re-passes the same allowlist pays it once. Past
+        ALLOW_COVERAGE_MAX_IDS the array is None and a second, count-only
+        job sizes the list; the list is broadcast into the scan anyway, so
+        collecting it is the same driver-memory class."""
+        if allowed_arr is not None:
+            return len(allowed_arr), allowed_arr
         cache = handle.__dict__.setdefault("_allowed_count_cache", {})
         hit = cache.get(allowed_ids)
         if hit is None:
@@ -1151,32 +1153,15 @@ def search_index(
         # exact scan (right answers, exact cost — explicit, not probed)
         return _exact_filtered_scan(knn)
 
-    # the probe kernels run on the collected batch; the SQL IVF kernel
-    # exists for batches too large to collect, so its filtered plan walks
-    # the 4096 smallest query_ids (the adaptive budget is a max over
-    # queries, and serve-sized batches fit under the cap whole)
-    batch = None
-    if itype == "IVFPQ" or (itype == "IVF" and kernel == "pandas"):
-        batch = ivf_ops.query_arrays(queries)
-
-    def _plan_queries():
-        import numpy as np
-
-        if batch is not None:
-            q_ids, Q = batch
-            return Q[np.argsort(q_ids, kind="stable")[:PLAN_MAX_QUERIES]]
-        # ordered before the cut (TakeOrderedAndProject, no full sort): a
-        # bare limit() returns whichever partitions answer first
-        first = queries.select("query_id", "qvec").orderBy("query_id")
-        return ivf_ops.query_arrays(first.limit(PLAN_MAX_QUERIES))[1]
-
     plan = planner.plan_search(
         handle, k, nprobe=nprobe, ef_search=ef_search,
         filter_oversample=filter_oversample, recall_target=recall_target,
         where=where, allowed=_allowed_info if allowed_ids is not None else None,
-        tombstoned=tomb is not None, spark=spark, queries=_plan_queries,
+        tombstoned=tomb is not None, spark=spark,
     )
-    if plan.route == "scan":
+    if plan.route == "scan" or (plan.route == "exact_filtered" and itype != "HNSW"):
+        # list indexes carry their attrs in the rows: the filter is the
+        # scan's predicate
         fn = knn_pandas if kernel == "pandas" else knn
         return fn(
             _live(_apply_filter(handle.vectors, where, allowed_ids), tomb),
@@ -1202,14 +1187,17 @@ def search_index(
         attr_src = handle.attrs if handle.attrs is not None else handle.vectors
         return _postfilter_topk(res, attr_src, where, allowed_ids, k, tombstones=tomb)
 
-    if itype == "IVF":
+    if itype == "IVF" and kernel != "pandas":
         vecs = _live(_apply_filter(handle.vectors, where, allowed_ids), tomb)
-        if kernel == "pandas":
-            return ivf_ops.ivf_search_pandas(
-                vecs, handle.centroid_arrays(), batch, k=k, nprobe=plan.nprobe
-            )
         return ivf_ops.ivf_search(
             vecs, handle.centroids, queries, k=k, nprobe=plan.nprobe
+        )
+    # the probe kernels select lists on the driver, over the collected batch
+    batch = ivf_ops.query_arrays(queries)
+    if itype == "IVF":
+        vecs = _live(_apply_filter(handle.vectors, where, allowed_ids), tomb)
+        return ivf_ops.ivf_search_pandas(
+            vecs, handle.centroid_arrays(), batch, k=k, nprobe=plan.nprobe
         )
 
     # IVFPQ: per-query probe-masked ADC over statically pruned code lists

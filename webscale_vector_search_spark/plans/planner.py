@@ -11,6 +11,15 @@ path.
 The policy it applies:
 
 - FLAT scans everything (``scan``).
+- IVF/IVFPQ probe ``nprobe`` inverted lists (``probe``): the caller's
+  value, else the reference's default rule ``base``. A filter left to the
+  engine (no explicit nprobe or filter_oversample) is routed by cost: when
+  its estimated matching rows s*N are no more than the rows a probe would
+  scan, max(base, p)*N/nlist, the search scans exactly the matching rows
+  (``exact_filtered``, recall 1.0). ``p``, the filtered probe plan
+  (attr_stats.plan_nprobe), is sized only when ``base`` alone loses, so a
+  selective filter plans from the stats table alone. A ``recall_target``
+  without a filter reads nprobe off the recall curve.
 - HNSW traverses the stored graphs (``graph``). A filter or pending
   tombstones post-filter the beam's candidates, so the beam is searched
   for ``k_search`` candidates with ef widened to at least 2 * k_search
@@ -20,17 +29,13 @@ The policy it applies:
   instead (``exact_filtered``; attr_stats.graph_filter_fallback). ef comes
   from the caller, else the recall curve at ``recall_target``, else the
   curve's default pick (recall_curve.default_ef).
-- IVF/IVFPQ probe ``nprobe`` inverted lists (``probe``): the caller's
-  value, else the reference's default rule, sized by the attr_stats
-  sidecars and the recall curve under a filter or a ``recall_target``
-  (attr_stats.plan_nprobe).
 
-The planner inputs whose cost differs by path arrive as zero-argument
-functions, called only where the policy reads them: the Spark path sizes
-an id-allowlist with a Spark job and collects its query batch, the driver
-path already holds both as arrays. An unfiltered search therefore reads
-no sidecar beyond the recall curve a graph's default ef needs, and that
-one is cached on the handle: a warm call sorts the <= 6-rung ef ladder.
+The allowlist arrives as a zero-argument function, called only where the
+policy reads it: the Spark path sizes an allowlist DataFrame with a Spark
+job, the driver path already holds the ids. An unfiltered search
+therefore reads no sidecar beyond the recall curve a graph's default ef
+needs, and that one is cached on the handle: a warm call sorts the <= 6-rung
+ef ladder.
 """
 
 from __future__ import annotations
@@ -69,7 +74,6 @@ def plan_search(
     allowed=None,
     tombstoned: bool = False,
     spark=None,
-    queries=None,
 ) -> SearchPlan:
     """Plan one search on `handle` (module docstring for the policy).
 
@@ -78,10 +82,7 @@ def plan_search(
     vectorized callable on the driver path. `allowed` is None without an
     id-allowlist, else a zero-argument function returning (distinct count,
     sorted int64 id array or None when the list is too large to collect).
-    `tombstoned` says pending deletes exist. `queries` is a zero-argument
-    function returning the float64 query matrix the filtered probe budget
-    walks; it is called only for a filtered IVF/IVFPQ search with no
-    explicit nprobe."""
+    `tombstoned` says pending deletes exist."""
     itype = handle.meta["index_type"]
     if itype == "FLAT":
         return SearchPlan("scan")
@@ -91,16 +92,30 @@ def plan_search(
         return allowed() if allowed is not None else (None, None)
 
     if itype in ("IVF", "IVFPQ"):
-        if nprobe is None:
-            nprobe = default_nprobe(handle.meta["nlist"])
-            if filtered or recall_target is not None:
-                n_allowed, allowed_arr = allowlist()
-                nprobe = attr_stats.plan_nprobe(
-                    handle, nprobe, k, where=where, allowed_count=n_allowed,
-                    spark=spark, recall_target=recall_target,
-                    allowed_arr=allowed_arr, Q=queries() if filtered else None,
-                )
-        return SearchPlan("probe", nprobe=nprobe)
+        if nprobe is not None:
+            return SearchPlan("probe", nprobe=nprobe)
+        nlist = handle.meta["nlist"]
+        base = default_nprobe(nlist)
+        if not filtered and recall_target is None:
+            return SearchPlan("probe", nprobe=base)
+        n_allowed, allowed_arr = allowlist()
+        s = (
+            attr_stats.selectivity(handle, where=where, allowed_count=n_allowed, spark=spark)
+            if filtered
+            else None
+        )
+        # the cost rule, in lists: s*N matching rows against the
+        # max(base, p)*N/nlist rows the probe would scan
+        by_cost = filtered and filter_oversample is None and s is not None
+        if by_cost and s * nlist <= base:
+            return SearchPlan("exact_filtered")
+        p = attr_stats.plan_nprobe(
+            handle, base, k, s, where=where, allowed_arr=allowed_arr,
+            spark=spark, recall_target=recall_target,
+        )
+        if by_cost and s * nlist <= max(base, p):
+            return SearchPlan("exact_filtered")
+        return SearchPlan("probe", nprobe=p)
     if itype != "HNSW":
         raise ValueError(f"unknown index_type {itype!r}")
     if filtered and filter_oversample is None:

@@ -169,14 +169,15 @@ def _dataset(path: str):
 
 
 def _list_columns(tbl, n: int, attr_names: tuple = ()) -> dict:
-    """Decode (vec_id, embedding[, codes][, attrs]) Arrow columns to numpy
+    """Decode (vec_id[, embedding][, codes][, attrs]) Arrow columns to numpy
     via the same flatten-the-values-buffer route as knn.list_matrix. Attr
     columns are stored under "a:<name>" keys (scalar columns, zero-copy
     where the dtype allows) so filtered serving can mask without re-reading
     the parquet."""
     out = {"ids": tbl.column("vec_id").to_numpy().astype(np.int64, copy=False)}
-    emb = tbl.column("embedding").combine_chunks()
-    out["V"] = emb.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
+    if "embedding" in tbl.schema.names:
+        emb = tbl.column("embedding").combine_chunks()
+        out["V"] = emb.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
     if "codes" in tbl.schema.names:
         codes = tbl.column("codes").combine_chunks()
         out["codes"] = (
@@ -242,6 +243,19 @@ def _list_v64(handle: IndexHandle, entry: dict):
     return v64, entry["vsq"]
 
 
+def _read_list(handle: IndexHandle, cid: int, attr_names: tuple, with_vectors=True):
+    """One inverted list's stored columns as an Arrow table (attr columns
+    the list lacks are skipped); None when the list is empty (its partition
+    directory was never materialized)."""
+    path = os.path.join(handle.vectors_dir, f"centroid_id={cid}")
+    if not os.path.isdir(path):
+        return None
+    ds = _dataset(path)
+    names = ds.schema.names
+    vectors = ["embedding"] + (["codes"] if "codes" in names else []) if with_vectors else []
+    return ds.to_table(columns=["vec_id", *vectors, *(a for a in attr_names if a in names)])
+
+
 def _list_data(handle: IndexHandle, cid: int, cache_budget_mb: int) -> dict | None:
     """One inverted list's arrays, LRU-cached on the handle. None when the
     list is empty (its partition directory was never materialized)."""
@@ -251,17 +265,10 @@ def _list_data(handle: IndexHandle, cid: int, cache_budget_mb: int) -> dict | No
     if hit is not None:
         cache.move_to_end(key)
         return hit
-    path = os.path.join(handle.vectors_dir, f"centroid_id={key}")
-    if not os.path.isdir(path):
+    attr_names = _attr_names(handle)
+    tbl = _read_list(handle, key, attr_names)
+    if tbl is None:
         return None
-    ds = _dataset(path)
-    attr_names = tuple(a for a in _attr_names(handle) if a in ds.schema.names)
-    cols = (
-        ["vec_id", "embedding"]
-        + (["codes"] if "codes" in ds.schema.names else [])
-        + list(attr_names)
-    )
-    tbl = ds.to_table(columns=cols)
     entry = _list_columns(tbl, tbl.num_rows, attr_names)
     used = handle.__dict__.get("_serve_lists_bytes", 0) + _nbytes(entry)
     budget = cache_budget_mb * (1 << 20)
@@ -425,16 +432,11 @@ def _mask_parts(parts: list[dict], handle, where, allowed_sorted,
     return out
 
 
-def _flat_parts(handle, q_ids, Q, k, chunk_rows: int = 131072,
-                where=None, allowed_sorted=None, tomb_sorted=None) -> list[dict]:
+def _exact_parts(q_ids, Q, k, ids, V64, vsq, chunk_rows: int = 131072) -> list[dict]:
+    """knn_pandas' scan body over driver-resident rows: one chunked GEMM
+    and one batch_topk_rows per chunk, with its float64 arithmetic."""
     from webscale_vector_search_spark.operators.knn import batch_topk_rows
 
-    data = _flat_v64(handle)
-    ids, V64, vsq = data["ids"], data["V64"], data["vsq"]
-    if where is not None or allowed_sorted is not None or tomb_sorted is not None:
-        sub = _flat_subset(handle, data, where, allowed_sorted, tomb_sorted)
-        if sub is not None:
-            ids, V64, vsq = sub
     q_sq = (Q * Q).sum(1)
     parts = []
     for s in range(0, len(ids), chunk_rows):
@@ -443,6 +445,69 @@ def _flat_parts(handle, q_ids, Q, k, chunk_rows: int = 131072,
         np.maximum(dist, 0.0, out=dist)
         parts.append(batch_topk_rows(dist, ids[s : s + chunk_rows], q_ids, k))
     return parts
+
+
+def _flat_parts(handle, q_ids, Q, k, where=None, allowed_sorted=None,
+                tomb_sorted=None) -> list[dict]:
+    data = _flat_v64(handle)
+    ids, V64, vsq = data["ids"], data["V64"], data["vsq"]
+    if where is not None or allowed_sorted is not None or tomb_sorted is not None:
+        sub = _flat_subset(handle, data, where, allowed_sorted, tomb_sorted)
+        if sub is not None:
+            ids, V64, vsq = sub
+    return _exact_parts(q_ids, Q, k, ids, V64, vsq)
+
+
+def _row_table(handle: IndexHandle) -> dict:
+    """Every stored row's (vec_id, list, position in the list, attrs) of a
+    list index, with no embeddings: loaded once per handle, list by list
+    through the same read as _list_data, so a row's position indexes its
+    cached list entry."""
+    cached = handle.__dict__.get("_serve_rows")
+    if cached is None:
+        names = _attr_names(handle)
+        cols: dict = {}
+        for cid in handle.centroid_arrays()[0]:
+            tbl = _read_list(handle, int(cid), names, with_vectors=False)
+            if tbl is None:
+                continue
+            entry = _list_columns(tbl, tbl.num_rows, names)
+            entry["cell"] = np.full(tbl.num_rows, cid, dtype=np.int64)
+            entry["pos"] = np.arange(tbl.num_rows)
+            for key, col in entry.items():
+                cols.setdefault(key, []).append(col)
+        cached = handle._serve_rows = {
+            key: np.concatenate(parts) for key, parts in cols.items()
+        }
+    return cached
+
+
+def _matching_parts(handle, q_ids, Q, k, cache_budget_mb, where=None,
+                    allowed_sorted=None, tomb_sorted=None) -> list[dict]:
+    """The exact filtered scan of a list index: the filter is evaluated
+    over _row_table, and only the matching rows' vectors are gathered from
+    the cached lists — never a whole-corpus block (the planner routes here
+    only when the matching rows are fewer than a probe would scan)."""
+    table = _row_table(handle)
+    if not table:
+        return []
+    mask = _entry_mask(table, where, allowed_sorted, tomb_sorted)
+    rows = np.arange(len(table["ids"])) if mask is None else np.flatnonzero(mask)
+    if not len(rows):
+        return []
+    # the table is laid out list by list, so the matches group by list
+    cells, pos = table["cell"][rows], table["pos"][rows]
+    starts = np.flatnonzero(np.diff(cells, prepend=-1))
+    V64, vsq = [], []
+    for cid, a, b in zip(
+        cells[starts].tolist(), starts.tolist(), [*starts[1:].tolist(), len(rows)]
+    ):
+        Vc, v_sq = _list_v64(handle, _list_data(handle, cid, cache_budget_mb))
+        V64.append(Vc[pos[a:b]])
+        vsq.append(v_sq[pos[a:b]])
+    return _exact_parts(
+        q_ids, Q, k, table["ids"][rows], np.concatenate(V64), np.concatenate(vsq)
+    )
 
 
 def _ivf_parts(handle, q_ids, Q, k, probes: DriverProbes, cache_budget_mb,
@@ -738,14 +803,17 @@ def serve_local(
     lists / graph bundles); steady-state cost is kernel compute only —
     measured ~1000x under the Spark path's job floor for 1-query IVF/HNSW.
     ``cache_budget_mb`` bounds the inverted-list LRU (FLAT's corpus block
-    and HNSW's mmap'd bundles are whole-artifact by nature).
+    and HNSW's mmap'd bundles are whole-artifact by nature); a list
+    index's exact filtered scan gathers its matching rows from that LRU
+    and keeps only an id/list/attribute table of its own.
 
     Filtered serving has search_index's where/allowed_ids semantics
     (scan-side mask for FLAT/IVF/IVFPQ, post-filter with
-    `filter_oversample` for HNSW) and results — EXCEPT that `where` here
-    is a vectorized CALLABLE over {attr_name: ndarray} -> bool ndarray,
-    not a SQL string: the driver path deliberately carries no SQL parser,
-    the Spark path owns SQL. `allowed_ids` is any int sequence/array.
+    `filter_oversample` for HNSW, and the exact scan of the matching rows
+    where the planner prices it below the probe or the beam) and results
+    — EXCEPT that `where` here is a vectorized CALLABLE over
+    {attr_name: ndarray} -> bool ndarray, not a SQL string: the driver
+    path deliberately carries no SQL parser, the Spark path owns SQL. `allowed_ids` is any int sequence/array.
     Knobs left at None (nprobe, ef_search, filter_oversample, the graph's
     exact-scan fallback) are chosen by plans.planner.plan_search, the one
     planner search_index calls too; the callable evaluates against the
@@ -810,12 +878,20 @@ def serve_local(
         allowed=(lambda: (len(allowed_sorted), allowed_sorted))
         if allowed_sorted is not None
         else None,
-        tombstoned=handle.tombstones is not None, queries=lambda: Q,
+        tombstoned=handle.tombstones is not None,
     )
     if plan.route == "scan":
         return _finalize(
             _flat_parts(handle, q_ids, Q, k, where=where,
                         allowed_sorted=allowed_sorted, tomb_sorted=tomb_sorted),
+            k,
+            as_arrays,
+        )
+    if plan.route == "exact_filtered" and itype != "HNSW":
+        # the Spark path's scan of the rows the filter keeps
+        return _finalize(
+            _matching_parts(handle, q_ids, Q, k, cache_budget_mb, where=where,
+                            allowed_sorted=allowed_sorted, tomb_sorted=tomb_sorted),
             k,
             as_arrays,
         )

@@ -1,65 +1,34 @@
-"""Attribute-value statistics sidecar — the filtered-search planner input.
+"""Attribute-value statistics sidecars — the filtered-search planner input.
 
-Filtered ANN has a recall trap: a predicate of selectivity `s` thins every
-probed inverted list to ~s of its usual candidates, so a fixed nprobe
-measured 0.32 recall at s=0.1 where the unfiltered search measures ~1.0
-(BENCH_DETAIL r9 `ann_filtered`). The fix is planner-shaped, not
-kernel-shaped: estimate the filter's statistics and size the probe budget
-(the classic selectivity→cardinality step a SQL optimizer does from table
-statistics).
+A filter of selectivity `s` thins every probed inverted list to ~s of its
+usual candidates, so a fixed nprobe loses recall under a filter. The
+planner (plans.planner.plan_search) reads these sidecars to choose
+between two routes by cost, the way a SQL optimizer sizes a predicate from
+table statistics:
 
-The r10 probe-budget model (replacing the first-cut ~1/s scaling, which
-r10 calibration measured as 2.5-16x over the recall-0.99 need): the
-filtered top-k is contained in the unfiltered top-(k/s) in expectation, so
-the budget has three regimes, and the planner takes their max —
+- the exact scan of the matching rows, when their estimated count s*N is
+  no more than the rows a probe would scan, max(base, p)*N/nlist;
+- otherwise a probe of p lists, p from the recall curve's expected-
+  geometry read over the filter's per-cell match fractions
+  (plan_nprobe; recall_curve.expected_replay_nprobe).
 
-- a proximity floor, 2x the unfiltered default: moderate filters push the
-  true neighbors only a little farther down the cell-proximity ranking;
-- a candidate-volume term C*k/(s*avg_cell) = C*k*nlist/(s*n): probe enough
-  cells that ~C*k matching candidates are expected (C calibrated at 64);
-- a cell-discovery term D/f where f is the fraction of cells containing
-  ANY match (D calibrated at 4): a cluster-CORRELATED filter (all matches
-  in few cells — e.g. a tenant whose documents embed together) defeats
-  per-combo counts, which is exactly why the per-(cell, combo) table
-  `attr_cell_stats/` exists. f is exact for attr predicates.
-
-Calibration (BENCH_DETAIL r10 `ann_filtered*`, 1M/nlist=1000 and
-10M/nlist=3162, s in [0.001, 0.5], uniform and cluster-correlated
-filters): the max-of-three budget sits 1.0-2.5x above the measured
-recall-0.99 probe count at every point; the old ~1/s rule sat 2.5-16x
-above (640 probes at s=0.1 where 128 suffice).
-
-Id-ALLOWLISTS (`allowed_ids`) get EXACT cell coverage since r11
-(`allowlist_cell_coverage`): the list is driver-sized by contract (it is
-broadcast into the scan), so one bounded is-in lookup against the stored
-rows yields the same D/f discovery input attr predicates get — a
-correlated allowlist (one content cluster's ids) plans more probes or
-falls back, a dispersed one stops paying the old pessimistic ceil(base/s)
-scaling, which remains only for lists past ALLOW_COVERAGE_MAX_IDS.
-
-r11 also layers the MEASURED recall curve on top (sources/recall_curve.py,
-written at build): when present, plan_nprobe reads it at effective depth
-ceil(k/s) instead of the candidate-volume constant — the constant's tier
-insensitivity overshot 3.2x at the 10M tier — and search_index/serve_local
-accept an explicit `recall_target`. The closed-form below remains the
-no-curve fallback and the k/s-beyond-profile fallback.
+Graph indexes use the same numbers to decide when the post-filtered beam
+cannot serve a filter (graph_filter_fallback).
 
 At build time, `write_attr_stats` records the exact per-combination row
 counts of the declared attr_cols — bounded at MAX_COMBOS combinations
 (beyond that the table is skipped and search falls back to the fixed
 defaults; attribute filters over near-unique columns should use
-`allowed_ids`, whose cardinality is known without statistics). The table
-is tiny (≤ MAX_COMBOS rows), lives beside the index, and is maintained as
-deltas by append/upsert/compaction — approximate between maintenance
-operations is fine: it feeds a probe-budget heuristic, not correctness.
+`allowed_ids`, whose cardinality is known without statistics) — and
+`write_attr_cell_stats` the per-(cell, combination) counts. The tables are
+tiny, live beside the index, and are maintained as deltas by
+append/upsert/compaction — approximate between maintenance operations is
+fine: they feed a cost estimate, not correctness.
 
-Both search paths plan through one function, plans.planner.plan_search,
-which reads these numbers; a filter is evaluated against the stats rows in
-one place, where_mask, whether it arrives as the Spark path's SQL string
-(run by Spark on the tiny table) or serve_local's vectorized callable (run
-by numpy on the same rows). The auto-scaled nprobe / oversample is
-therefore identical on both paths — the bit-identity contract between
-them extends to their planning.
+A filter is evaluated against the stats rows in one place, where_mask,
+whether it arrives as the Spark path's SQL string (run by Spark on the
+tiny table) or serve_local's vectorized callable (run by numpy on the same
+rows), so both paths estimate alike and plan alike.
 
 Reference parity note: FAISS's IDSelector has no planner — the reference
 (vector_search_cluster.py) exposes no filtered search at all; this is
@@ -89,15 +58,12 @@ GRAPH_COVERAGE_MIN = 0.5
 # driver-trivial planner input (the cap is rows, i.e. cells x combos
 # PRESENT, not the cross product)
 CELL_STATS_MAX_ROWS = 1_000_000
-# calibrated probe-budget constants (module docstring; docs/SCALE.md):
-# candidate-volume multiplier, proximity floor, cell-discovery numerator
-C_CANDIDATES, NPROBE_FLOOR_MULT, CELL_DISCOVERY = 64, 2, 4
 # auto filter_oversample clamp for graph post-filtering: below 4 the
 # oversample buys nothing, above 32 the widened beam's cost approaches a
 # probed-scan's — heavy filters should run on IVF (docs/SCALE.md)
 OVERSAMPLE_FLOOR, OVERSAMPLE_CAP = 4, 32
-# allowlist coverage cap: past this many ids the exact is-in lookup stops
-# being plan-time-trivial and the planner keeps the pessimistic budget
+# allowlist cell-lookup cap: past this many ids the exact is-in lookup
+# stops being plan-time-trivial and the per-cell counts are left unknown
 # (such lists are also past any sane broadcast size for the scan itself)
 ALLOW_COVERAGE_MAX_IDS = 1_000_000
 # per-handle plan caches are keyed by predicate object / allowlist
@@ -176,12 +142,12 @@ def write_attr_stats(base: DataFrame, attr_cols: list, out_dir: str) -> bool:
 def write_attr_cell_stats(
     spark: SparkSession, vectors_dir: str, attr_cols: list, out_dir: str
 ) -> bool:
-    """The per-(centroid_id, combo) count table — the cell-discovery
-    planner input (module docstring: the D/f term). One column-pruned
-    aggregation over the written index rows (centroid_id is the partition
-    column, attrs ride the rows — a 2-3 int-column scan). Skipped past
-    CELL_STATS_MAX_ROWS present rows; the planner then falls back to the
-    pessimistic ceil(base/s) budget for attr predicates."""
+    """The per-(centroid_id, combo) count table — the per-cell match
+    counts of the filtered probe plan. One column-pruned aggregation over
+    the written index rows (centroid_id is the partition column, attrs
+    ride the rows — a 2-3 int-column scan). Skipped past
+    CELL_STATS_MAX_ROWS present rows; the probe plan then falls back to
+    ceil(base/s) for attr predicates."""
     from webscale_vector_search_spark.sources.index_io import write_capped
 
     counts = (
@@ -207,9 +173,9 @@ def write_graph_cell_stats(
     inverted lists, so a SMALL seeded k-means fits stats-only pseudo-cells
     (sampled fit, one map-only assign pass) and the per-(pseudo-cell,
     combo) counts land in the same attr_cell_stats/ table. This is what
-    lets the planner SEE spatial concentration for graphs — the r10 bench
-    measured beam recall ~= f for a concentrated filter, so without this
-    signal a correlated filter silently collapses graph recall. The tiny
+    lets the planner SEE spatial concentration for graphs — beam recall
+    measured ~= f for a concentrated filter, so without this signal a
+    correlated filter silently collapses graph recall. The tiny
     centroid set persists beside the table (stats_centroids/) so
     maintenance can assign removed rows to pseudo-cells without refitting."""
     from webscale_vector_search_spark.operators.ivf import (
@@ -238,9 +204,8 @@ def write_graph_cell_stats(
 
 
 def ensure_attr_cell_stats(spark: SparkSession, index_dir: str) -> bool:
-    """Backfill the per-cell table for an attr_cols IVF/IVFPQ index built
-    before it existed (pre-r10 artifact), or refresh it after maintenance.
-    Returns True when a table exists afterwards."""
+    """Rewrite the per-cell table of an attr_cols index after maintenance
+    dropped it (compaction). Returns True when a table exists afterwards."""
     from webscale_vector_search_spark.sources import index_io
 
     meta = index_io.read_metadata(index_dir)
@@ -303,8 +268,7 @@ def merge_cell_delta(spark: SparkSession, index_dir: str, delta: DataFrame) -> N
     """Fold a (centroid_id, attr_cols..., count) delta into the per-cell
     table — subtract-only in practice (physical removal sites know the
     removed rows' cells; appends don't thread assignment back here and
-    leave the table a LOWER bound instead, see the build.py append note:
-    understating f only RAISES the D/f budget — errors are conservative).
+    leave the table a LOWER bound instead, see the build.py append note).
     compact_index recomputes the table exactly."""
     path = os.path.join(index_dir, CELL_STATS_DIRNAME)
     if not os.path.isdir(path):
@@ -338,63 +302,31 @@ def merge_attr_delta(spark: SparkSession, index_dir: str, delta: DataFrame) -> N
     _swap_stats_dir(path, merged, MAX_COMBOS)
 
 
-def ensure_attr_stats(spark: SparkSession, index_dir: str) -> bool:
-    """Backfill the stats table for an attr_cols index built before the
-    planner existed: recompute from the stored rows (row-carried attrs,
-    or the attrs sidecar for HNSW indexes). No-op
-    when stats already exist or the index has no attributes. Returns True
-    when a stats table exists afterwards."""
-    from webscale_vector_search_spark.sources import index_io
+def load_sidecar(handle, dirname: str):
+    """The parquet table in `dirname` beside the index as pandas, cached on
+    the handle (a full reopen — maybe_refresh after append/upsert/
+    compaction — drops the cache with the rest of the handle state). None
+    when the table is absent."""
+    if handle.index_dir is None:
+        return None
+    cache = handle.__dict__.setdefault("_sidecars", {})
+    if dirname not in cache:
+        path = os.path.join(handle.index_dir, dirname)
+        pdf = None
+        if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
+            import pyarrow.dataset as pads
 
-    path = os.path.join(index_dir, STATS_DIRNAME)
-    if os.path.isdir(path):
-        return True
-    meta = index_io.read_metadata(index_dir)
-    attr_cols = meta.get("attr_cols")
-    if not attr_cols:
-        return False
-    if meta["index_type"] == "HNSW":
-        src = spark.read.parquet(index_io.attrs_path(index_dir, meta))
-    else:
-        src = spark.read.parquet(index_io.vectors_path(index_dir, meta))
-    return write_attr_stats(src.select(*attr_cols), attr_cols, index_dir)
+            pdf = pads.dataset(path, format="parquet").to_table().to_pandas()
+        cache[dirname] = pdf
+    return cache[dirname]
 
 
 def load_stats_pdf(handle):
-    """The stats table as pandas, cached on the handle (a full reopen —
-    maybe_refresh after append/upsert/compaction — drops the cache with
-    the rest of the handle state). None when the index has no stats."""
-    if handle.index_dir is None:
-        return None
-    cached = handle.__dict__.get("_attr_stats_pdf", False)
-    if cached is not False:
-        return cached
-    path = os.path.join(handle.index_dir, STATS_DIRNAME)
-    pdf = None
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        import pyarrow.dataset as pads
-
-        pdf = pads.dataset(path, format="parquet").to_table().to_pandas()
-    handle._attr_stats_pdf = pdf
-    return pdf
+    return load_sidecar(handle, STATS_DIRNAME)
 
 
 def load_cell_stats_pdf(handle):
-    """The per-(cell, combo) table as pandas, cached on the handle (same
-    lifecycle as load_stats_pdf). None when absent."""
-    if handle.index_dir is None:
-        return None
-    cached = handle.__dict__.get("_attr_cell_stats_pdf", False)
-    if cached is not False:
-        return cached
-    path = os.path.join(handle.index_dir, CELL_STATS_DIRNAME)
-    pdf = None
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        import pyarrow.dataset as pads
-
-        pdf = pads.dataset(path, format="parquet").to_table().to_pandas()
-    handle._attr_cell_stats_pdf = pdf
-    return pdf
+    return load_sidecar(handle, CELL_STATS_DIRNAME)
 
 
 def lookup_stored_rows(root_dir: str, ids, columns: list):
@@ -423,12 +355,11 @@ def lookup_stored_rows(root_dir: str, ids, columns: list):
 
 def cell_coverage(handle, where, spark=None):
     """Exact fraction of cells containing >= 1 row matching the attr
-    predicate `where` — the f in the planner's D/f cell-discovery term
-    (inverted lists for IVF/IVFPQ, stats-quantizer pseudo-cells for
-    graphs). The denominator is the number of NON-EMPTY cells in the
-    table itself, so no index-type-specific nlist plumbing is needed.
-    None when no per-cell table exists or the predicate isn't answerable
-    from it (callers then use the pessimistic budget).
+    predicate `where` — the concentration signal of the graph fallback
+    (stats-quantizer pseudo-cells for graphs, inverted lists otherwise).
+    The denominator is the number of NON-EMPTY cells in the table itself,
+    so no index-type-specific nlist plumbing is needed. None when no
+    per-cell table exists or the predicate isn't answerable from it.
 
     Both predicate forms evaluate against the SAME rows (where_mask), and
     the per-cell matches are shared with matched_per_cell, so the Spark
@@ -537,20 +468,16 @@ def _allowlist_lookup(handle, allowed_arr):
 
 def allowlist_cell_coverage(handle, allowed_arr) -> "float | None":
     """Exact cell coverage f of an id-allowlist: the fraction of non-empty
-    cells holding >= 1 allowed id. r10 kept allowlists on the pessimistic
-    ceil(base/s) budget because ATTRIBUTE statistics can't see allowlist
-    clustering; the allowlist itself, though, is driver-sized by contract
-    (search broadcasts it into the scan), so ONE bounded is-in lookup
-    against the stored rows yields the exact f the D/f cell-discovery term
-    wants. A correlated allowlist (one content cluster's ids) now plans
-    more probes or falls back to the exact scan; a dispersed one stops
-    paying the pessimistic budget. Cached per allowlist fingerprint on the
+    cells holding >= 1 allowed id. The allowlist is driver-sized by
+    contract (search broadcasts it into the scan), so ONE bounded is-in
+    lookup against the stored rows yields the f attribute predicates get
+    from the per-cell table. Cached per allowlist fingerprint on the
     handle; None when the list exceeds ALLOW_COVERAGE_MAX_IDS, the layout
-    has no cells (FLAT / legacy), or the lookup fails — callers then keep
-    the pessimistic path. For graph indexes the allowed rows' embeddings
-    assign through the STORED stats quantizer (same pseudo-cells as
-    write_graph_cell_stats), driver-side."""
+    has no cells, or the lookup fails. For graph indexes the allowed rows'
+    embeddings assign through the STORED stats quantizer (same pseudo-cells
+    as write_graph_cell_stats), driver-side."""
     return _allowlist_lookup(handle, allowed_arr)[0]
+
 
 def _tombstone_matched(handle, where, spark=None) -> "tuple | None":
     """(t_matched, t_live): pending-tombstoned STORED rows matching `where`
@@ -558,7 +485,7 @@ def _tombstone_matched(handle, where, spark=None) -> "tuple | None":
     physical removal only, so between a delete_vectors and its compaction
     they still count tombstoned rows — when the pending deletes correlate
     with the predicate (delete a tenant, then query that tenant) the
-    unadjusted estimate overstates s and the probe budget undershoots.
+    unadjusted estimate overstates s.
     One bounded is-in lookup (the pending set is driver-sized by the
     compaction contract), cached per (mutation fingerprint, predicate) on
     the handle. None when unanswerable (no attrs source / lookup failed) —
@@ -602,8 +529,7 @@ def selectivity(handle, where=None, allowed_count=None, spark=None):
     or serve_local's vectorized callable (evaluated by numpy on the same
     rows). `allowed_count` is the distinct id-allowlist size; composed
     with `where` under the independence assumption s = s_where * s_allow
-    (a deliberate planner approximation — it only sizes the probe
-    budget)."""
+    (a deliberate planner approximation — it only prices the routes)."""
     s = None
     if where is not None:
         pdf = load_stats_pdf(handle)
@@ -625,7 +551,7 @@ def selectivity(handle, where=None, allowed_count=None, spark=None):
             # pending logical deletes still sit in the stats counts (the
             # tables are maintained by PHYSICAL removal only); when they
             # correlate with the predicate the unadjusted s overestimates
-            # and the budget undershoots — subtract the measured overlap
+            # — subtract the measured overlap
             tm = _tombstone_matched(handle, where, spark=spark)
             if tm is not None:
                 matched = max(0, matched - tm[0])
@@ -639,53 +565,16 @@ def selectivity(handle, where=None, allowed_count=None, spark=None):
     return s
 
 
-def filtered_nprobe(
-    base: int,
-    nlist: int,
-    s,
-    *,
-    k: int = 10,
-    total: int | None = None,
-    cell_frac=None,
-    s_allow=None,
-) -> int:
-    """The calibrated probe budget (module docstring): max of the
-    proximity floor, the candidate-volume term, and the cell-discovery
-    term, capped at probing every list. Inputs degrade independently —
-    without per-cell stats (cell_frac None) an attr predicate keeps the
-    pessimistic ceil(base/s) budget; an id-allowlist contributes
-    ceil(base/s_allow) always (its cell coverage is unknowable from attr
-    statistics). s<=0 (stats say nothing matches) keeps the base — the
-    result is empty at any nprobe, don't scan the world to prove it."""
-    import math
-
-    if s is not None and s <= 0:
-        return base
-    terms = [base]
-    if s is not None and s < 1:
-        terms.append(NPROBE_FLOOR_MULT * base)
-        if cell_frac is not None and total:
-            terms.append(math.ceil(C_CANDIDATES * k * nlist / (s * total)))
-            terms.append(math.ceil(CELL_DISCOVERY / cell_frac))
-        elif s_allow is None or s < s_allow:
-            # attr predicate without per-cell stats: pessimistic budget
-            terms.append(math.ceil(base / s))
-    if s_allow is not None and 0 < s_allow < 1:
-        terms.append(math.ceil(base / s_allow))
-    return min(nlist, max(terms))
-
-
 def matched_per_cell(handle, where=None, allowed_arr=None, spark=None) -> "dict | None":
     """Per-cell matched-row counts {centroid_id: n} for the search filter —
-    the query-adaptive planner input. Attr predicates aggregate the
+    the filtered probe plan's input. Attr predicates aggregate the
     per-(cell, combo) table (cached per predicate per handle); allowlists
     use their exact is-in lookup; both compose by elementwise min (an
-    upper bound on the per-cell intersection — conservative: fewer
-    expected matches means more probes). None when unanswerable. Pending
-    tombstones are NOT subtracted here (the per-id cell lookup would cost
-    a scan per plan); they only overstate per-cell matches, and the
-    fully-deleted-predicate case is already caught by the selectivity
-    adjustment upstream (s<=0 keeps the base budget)."""
+    upper bound on the per-cell intersection). None when unanswerable.
+    Pending tombstones are NOT subtracted here (the per-id cell lookup
+    would cost a scan per plan); they only overstate per-cell matches, and
+    the fully-deleted-predicate case is already caught by the selectivity
+    adjustment upstream (s<=0 routes to the exact scan)."""
     d_where = d_allow = None
     if where is not None:
         pdf = load_cell_stats_pdf(handle)
@@ -728,210 +617,40 @@ def cell_total_rows(handle) -> "dict | None":
     return totals
 
 
-def adaptive_filtered_nprobe(handle, Q, k: int, mcells: dict) -> "int | None":
-    """The query-adaptive probe budget (r11): for EACH query in the batch,
-    walk its actual centroid ordering (the same stable argsort the probe
-    selector runs) and find the first depth at which the probed cells
-    hold >= C_CANDIDATES*k expected matching rows AND >= CELL_DISCOVERY
-    distinct matching cells (or every matching cell, when fewer exist);
-    the plan is the max over the batch.
+def plan_nprobe(handle, base: int, k: int, s=None, where=None,
+                allowed_arr=None, spark=None, recall_target=None) -> int:
+    """The nprobe of an IVF/IVFPQ search on the probe route
+    (plans.planner.plan_search, the one caller on both paths, decides the
+    route first and passes the filter's selectivity `s`):
 
-    This is what the depth-based containment bound cannot see: a
-    cluster-correlated filter puts ALL matches in cells far from a
-    non-matching query's neighborhood (the bench's label=vec_id%10 over
-    clusters=vec_id%nlist is exactly this — a query's own cluster holds
-    ZERO matches for 9 of 10 labels), so the needed budget is a property
-    of the (query batch, cell layout) pair. Measured here per batch — no
-    tier constant, and it reproduces both measured needs the fixed
-    formulas missed (~128 at 1M/nlist=1000, ~40 at 10M/nlist=3162).
-    Cost: one query x centroid GEMM (the probe selector's own cost class)
-    + a cumsum, chunked to bound memory at wide nlist."""
-    import numpy as np
+    - no filter, or one the stats cannot estimate (`s` None or 0): the
+      recall curve's pick at `recall_target` when one is asked for and
+      measured (recall_curve.nprobe_from_curve), else `base`;
+    - a filter: the recall curve's expected-geometry read at
+      `recall_target` (default DEFAULT_TARGET) over the filter's per-cell
+      match fractions (recall_curve.expected_replay_nprobe); without a
+      measured curve, or per-cell counts the sidecars cannot answer,
+      ceil(base/s) — the lists holding as many matching rows as `base`
+      lists hold rows.
 
-    if not mcells:
-        return None
-    c_ids, C = handle.centroid_arrays()
-    nlist = len(c_ids)
-    m = np.zeros(nlist)
-    slot_of = {int(c): i for i, c in enumerate(c_ids)}
-    for cid, cnt in mcells.items():
-        slot = slot_of.get(int(cid))
-        if slot is not None:
-            m[slot] = cnt
-    total_m = float(m.sum())
-    if total_m <= 0:
-        return None
-    need_rows = min(C_CANDIDATES * k, total_m)
-    # the measured cross-cell spread of a top-k once the query's own cell
-    # is off-limits (recall_curve.xcell_need_cells) — density-dependent,
-    # which fixed constants kept missing; CELL_DISCOVERY remains the floor
-    # and the no-profile fallback
-    from webscale_vector_search_spark.sources.recall_curve import xcell_need_cells
-
-    ncx = xcell_need_cells(handle, k)
-    need = CELL_DISCOVERY if ncx is None else max(CELL_DISCOVERY, ncx)
-    need_cells = min(need, int((m > 0).sum()))
-    Q = np.asarray(Q, dtype=np.float64)
-    if Q.ndim == 1:
-        Q = Q[None, :]
-    csq = (C * C).sum(1)
-    worst = 1
-    for s0 in range(0, len(Q), 128):
-        Qc = Q[s0 : s0 + 128]
-        qc2 = (Qc * Qc).sum(1)[:, None] - 2.0 * (Qc @ C.T) + csq[None, :]
-        order = np.argsort(qc2, axis=1, kind="stable")
-        m_ord = m[order]
-        ok = (np.cumsum(m_ord, axis=1) >= need_rows) & (
-            np.cumsum(m_ord > 0, axis=1) >= need_cells
-        )
-        worst = max(worst, int(ok.argmax(axis=1).max()) + 1)
-    return worst
-
-
-def plan_nprobe(handle, base: int, k: int, where=None, allowed_count=None,
-                spark=None, recall_target=None, allowed_arr=None,
-                Q=None) -> int:
-    """The single auto-nprobe entry both search paths call (search_index
-    with a SQL `where`, serve_local with a vectorized callable): estimate
-    s and f from the handle's stats sidecars and size the probe budget.
-    Identical inputs -> identical plan — the Spark/serve_local bit-identity
-    contract covers the planner.
-
-    Budget source, in preference order:
-    1. QUERY-ADAPTIVE (r11, needs the collected batch `Q` + per-cell
-       matched counts): per-query first-depth covering C*k matching rows
-       and D matching cells, maxed over the batch
-       (adaptive_filtered_nprobe) — correlation- and tier-exact, because
-       it walks the actual cell layout with the actual queries. Composed
-       with the measured curve at depth k (local geometry once inside the
-       matching region) and, on the auto path, floored at the unfiltered
-       default (a mild filter should never probe LESS than unfiltered).
-    2. The MEASURED recall curve read at the containment depth ceil(k/s)
-       — valid for DISPERSED filters only; correlation is exactly where
-       containment fails, which is why source 1 outranks it.
-    3. The calibrated closed-form (filtered_nprobe) when neither is
-       answerable."""
+    Neither filtered plan is floored at `base` (a mild filter can probe
+    fewer lists than the unfiltered default); both are capped at nlist."""
     import math
 
-    s = selectivity(handle, where=where, allowed_count=allowed_count, spark=spark)
-    if s is None and recall_target is None:
-        return base
-    nlist = handle.meta["nlist"]
-    if s is not None and s <= 0:
-        return base  # stats say nothing matches: empty at any nprobe
     from webscale_vector_search_spark.sources.recall_curve import (
         DEFAULT_TARGET,
+        expected_replay_nprobe,
         nprobe_from_curve,
     )
 
+    nlist = handle.meta["nlist"]
+    if not s:
+        p = None if recall_target is None else nprobe_from_curve(handle, recall_target, k)
+        return base if p is None else min(nlist, p)
     tgt = recall_target if recall_target is not None else DEFAULT_TARGET
-    if Q is not None and (where is not None or allowed_arr is not None):
-        mc = matched_per_cell(
-            handle, where=where, allowed_arr=allowed_arr, spark=spark
-        )
-        ad = adaptive_filtered_nprobe(handle, Q, k, mc) if mc else None
-        if ad is not None:
-            from webscale_vector_search_spark.sources.recall_curve import (
-                RECALL_MARGIN,
-                expected_replay_nprobe,
-                profile_replay_nprobe,
-            )
-
-            # PRIMARY (r13): aggregate-recall estimate over the measured
-            # neighbor geometry with per-cell match fractions — tracks the
-            # hand sweep across both correlated and dispersed filters
-            # (validated at the 100M label arm where the supply walk's
-            # one-cell stop under-served 0.978 and the worst-case prefix
-            # bound over-planned 374; this read picks 62 serving 0.994 at
-            # 0.97x the hand-tuned need). Strict-quantile read: no extra
-            # multiplier.
-            p_geo = expected_replay_nprobe(
-                handle, tgt, k, mc, cell_total_rows(handle)
-            )
-            p_x = None
-            if p_geo is not None:
-                terms = [max(p_geo, ad)]  # ad: batch discovery floor
-            else:
-                # FALLBACK (match fractions unanswerable): member-order
-                # supply walk + adaptive walk. These are POINT ESTIMATES
-                # of a tail quantile — the replay from a 64-query profile
-                # sample, the adaptive walk from a supply bar that says
-                # "enough rows reachable", not "the true top-k is inside"
-                # — so they carry the same RECALL_MARGIN headroom every
-                # curve read already carries (measured at the 1M label
-                # arm in r13: un-margined walk 70 probes -> recall 0.9845,
-                # silently under the 0.99 target; 1.25x -> 88 probes ->
-                # 0.9925. Undershoot costs recall silently, overshoot
-                # costs bounded latency.)
-                p_x = profile_replay_nprobe(handle, tgt, k, mc)
-                walk = max([ad] + ([p_x] if p_x is not None else []))
-                terms = [math.ceil(RECALL_MARGIN * walk)]
-            p_k = nprobe_from_curve(handle, tgt, k)
-            if p_k is not None:
-                terms.append(p_k)
-            if allowed_arr is not None and allowlist_cells(handle, allowed_arr) is None:
-                # allowlist too large to measure: keep its pessimistic term
-                total = handle.meta.get("total_vectors") or 0
-                if total and allowed_count:
-                    s_allow = min(1.0, allowed_count / total)
-                    if 0 < s_allow < 1:
-                        terms.append(math.ceil(base / s_allow))
-            if p_geo is None and p_x is None:
-                # without either measured replay the walk is only a
-                # discovery floor — keep the unfiltered default under it
-                # (an explicit recall_target with no measured curve backing
-                # it must not probe LESS than the no-target plan; the
-                # documented contract is that no-curve indexes keep the
-                # closed-form defaults). WITH a replay both terms are
-                # measured against this filter, and flooring at the default
-                # was the last fixed constant standing between the auto
-                # budget and the hand-tuned need (measured 2.2x at 10M)
-                terms.append(base)
-            return min(nlist, max(terms))
-    cell_frac = (
-        cell_coverage(handle, where, spark=spark) if where is not None else None
-    )
-    f_allow = (
-        allowlist_cell_coverage(handle, allowed_arr)
-        if allowed_arr is not None
-        else None
-    )
-    if cell_frac is not None or f_allow is not None:
-        # joint coverage upper bound: D/min(f) = the larger discovery term
-        cell_frac = min(v for v in (cell_frac, f_allow) if v is not None)
-    p_curve = nprobe_from_curve(handle, tgt, k, s)
-    if p_curve is not None:
-        terms = [p_curve]
-        if cell_frac is not None:
-            terms.append(math.ceil(CELL_DISCOVERY / cell_frac))
-        if allowed_count is not None and f_allow is None:
-            # allowlist too large to measure coverage: keep the pessimistic
-            # scaling for the allowlist component (unknowable clustering)
-            total = handle.meta.get("total_vectors") or 0
-            if total:
-                s_allow = min(1.0, allowed_count / total)
-                if 0 < s_allow < 1:
-                    terms.append(math.ceil(base / s_allow))
-        if recall_target is None:
-            terms.append(base)
-        return min(nlist, max(terms))
-    if s is None:
-        return base  # explicit recall_target but no curve: measured-only knob
-    total = handle.meta.get("total_vectors") or None
-    s_allow = None
-    if allowed_count is not None and total and f_allow is None:
-        # with measured allowlist coverage the D/f term replaces the
-        # pessimistic ceil(base/s_allow) scaling; without it, keep it
-        s_allow = min(1.0, allowed_count / total)
-    return filtered_nprobe(
-        base,
-        nlist,
-        s,
-        k=k,
-        total=total,
-        cell_frac=cell_frac,
-        s_allow=s_allow,
-    )
+    mc = matched_per_cell(handle, where=where, allowed_arr=allowed_arr, spark=spark)
+    p = expected_replay_nprobe(handle, tgt, k, mc, cell_total_rows(handle)) if mc else None
+    return min(nlist, math.ceil(base / s) if p is None else p)
 
 
 def filtered_oversample(s) -> int:

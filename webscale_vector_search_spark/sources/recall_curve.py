@@ -4,7 +4,7 @@ The reference tells users to hand-tune nprobe / efSearch per use case
 (README.md:143-150; the knob rule at vector_search_cluster.py:548-552).
 `recall_target` replaces that guidance with a measured artifact: at build
 time the engine profiles ITS OWN index against exact ground truth on a
-seeded in-corpus query sample and stores the resulting curve beside the
+seeded held-out query sample and stores the resulting curve beside the
 index; ``search_index(recall_target=0.99)`` / ``serve_local(recall_target=
 0.99)`` then pick the knob FROM the curve instead of asking the user to
 reason in probe/beam units. SURVEY §4 O8.
@@ -13,30 +13,31 @@ Two curve kinds, one per index family:
 
 - IVF/IVFPQ (``cell_rank`` curve): the probed search scans its cells
   exactly, so recall at nprobe=p equals the fraction of true neighbors
-  whose cells rank <= p in the query's centroid-distance ordering. ONE
+  whose cells rank <= p in the query's probe order (ivf.probe_order). ONE
   exact kNN (top-KMAX for NQ sample queries) plus the stored assignments
   therefore yields recall(m, p) for EVERY (depth m <= KMAX, budget p)
   pair — no repeated searches. Stored raw as (query_id, nn_rank,
-  cell_rank) rows (<= NQ*KMAX rows, a tiny parquet). Filtered search
-  composes via the containment bound: a selectivity-s filter leaves the
-  filtered top-k inside the unfiltered top-(k/s) in expectation, so the
-  filtered budget reads the same curve at depth m = ceil(k/s) — the
-  measured replacement for r10's fixed candidate-volume constant C=64,
-  whose tier-insensitivity cost a 3.2x probe overshoot at the 10M tier.
-  For IVFPQ the curve prices the cell-coverage component; ADC ranking
-  error is recovered separately by the exact-refine stage (measured
-  refined recall 1.0 at the bench tiers).
+  cell_rank, cell_id, scope) rows (<= 2*NQ*KMAX rows, a tiny parquet);
+  scope `xcell` repeats the profile with each query's own cell excluded,
+  and the cell_profile/ sidecar holds each query's nearest member per
+  cell. An unfiltered recall_target reads the curve at depth k
+  (nprobe_from_curve). A filter is planned by the rule in
+  plans/planner.py: a selective one scans its matching rows exactly, and
+  a mild one probes the lists the expected-geometry read picks
+  (expected_replay_nprobe). For IVFPQ the curve prices the cell-coverage
+  component; ADC ranking error is recovered separately by the
+  exact-refine stage.
 
 - HNSW (``ef`` curve): beam recall has no closed form, so it is measured
   directly — serve the sample at an ef ladder against the same exact
   ground truth, store (ef, recall, k) rows, early-stopping once recall
   saturates.
 
-The curve is a build-time statistical profile (seeded, NQ in-corpus
-queries, tombstones ignored): maintenance shifts it only as far as it
-shifts the corpus distribution, which the compaction contract bounds —
-the same approximate-between-maintenance stance as attr_stats. The
-curve-picked budget carries a RECALL_MARGIN headroom for sample noise.
+The curve is a build-time statistical profile (seeded, NQ queries,
+tombstones ignored): maintenance shifts it only as far as it shifts the
+corpus distribution, which the compaction contract bounds — the same
+approximate-between-maintenance stance as attr_stats. Curve picks carry a
+RECALL_MARGIN headroom for sample noise.
 
 Reference parity: the reference has no recall instrumentation at all —
 its README hands the user a table of suggested knobs. This is §2.9
@@ -50,14 +51,15 @@ import os
 
 import numpy as np
 
+from webscale_vector_search_spark.sources.attr_stats import _cache_put, load_sidecar
+
 CURVE_DIRNAME = "recall_curve"
 CELL_PROFILE_DIRNAME = "cell_profile"
 # per-(query, cell) nearest-member profile bound: nq x ncells rows
 CELL_PROFILE_MAX_CELLS = 16384
 # profile size: NQ seeded queries, exact truth to depth KMAX. 64 queries x
 # 1000 ranks bounds the curve read at 64k rows (a <1 MB parquet) and the
-# build-time cost at one exact-kNN job; depths past KMAX (k/s beyond the
-# profiled containment bound) fall back to the closed-form planner.
+# build-time cost at one exact-kNN job.
 CURVE_NQ = 64
 CURVE_KMAX = 1000
 # beam ladder for the measured HNSW curve; early-stops at saturation
@@ -66,20 +68,9 @@ EF_LADDER = (8, 16, 32, 64, 128, 256)
 # queries estimate the tail quantile coarsely, and undershooting silently
 # costs recall while overshooting costs bounded latency
 RECALL_MARGIN = 1.25
-# the auto filtered path plans to this recall when the caller declares no
-# target — matches the calibration band the closed-form planner targets
+# the filtered probe plan and a graph's default ef aim at this recall when
+# the caller declares no target
 DEFAULT_TARGET = 0.99
-# replay supply bar: walk member-nearest matching cells until REPLAY_SUPPLY
-# x k matched rows are reachable. The member-rank profile already orders
-# cells by TRUE proximity, so this multiple only guards the within-cell
-# rank spread (a cell's nearest member ranks it, but its k-th matching row
-# can trail the next cell's nearest) — NOT the neighborhood-discovery gap
-# the adaptive walk's center-order C_CANDIDATES=64 bar exists for; reusing
-# that bar here measured dispersed filters PLANNING DEEPER than correlated
-# ones (26 member-nearest cells walked for supply the first two already
-# ranked correctly). 4x matches the within-cell spread the profiled tiers
-# show and keeps the correlated>dispersed ordering property.
-REPLAY_SUPPLY = 4
 # _ground_truth merges per-batch top-m partials into its running frontier
 # once they cover this many scanned rows: a partitioned index yields one
 # small batch per list file, and a merge per batch was most of the scan
@@ -129,14 +120,14 @@ def _ground_truth(
     distinct cells) a query must look once its own cell is off-limits,
     which is exactly the position a cluster-correlated filter puts most
     queries in — AND the per-(query, cell) NEAREST-MEMBER distance table
-    (running min, nq x ncells — tiny), the replay planner's input: which
-    cells actually hold each query's closest rows, versus the
-    center-distance order the probe selector walks. Returns
+    (running min, nq x ncells — tiny): which cells actually hold each
+    query's closest rows, versus the center-distance order the probe
+    selector walks. Returns
     (gt_all, gt_xcell|None, member_min|None) where member_min is
     {cell_id: ndarray (nq,) of min distances}.
 
     `exclude_ids` drops those stored rows from the scan entirely — the
-    HELD-OUT profiling form (r13): passing the sample's own ids makes the
+    HELD-OUT profiling form: passing the sample's own ids makes the
     truth (and everything derived: member_min, the xcell profile) describe
     the corpus a FRESH query faces, removing the each-query-is-its-own-
     nearest-neighbor bias that flattered graph indexes on clustered data
@@ -310,8 +301,8 @@ def set_profile_stale(index_dir: str, stale: bool) -> None:
     No-op when nothing would change (avoids gratuitous sidecar rewrites,
     each of which forces open handles through a full reopen); best-effort
     on an unreadable/unwritable sidecar — flagging must never fail a
-    compaction that already committed — but the failure is LOGGED
-    (VERDICT r12 #6: a permissions regression must be findable)."""
+    compaction that already committed — but the failure is LOGGED, so a
+    permissions regression is findable."""
     import logging
 
     from webscale_vector_search_spark.sources import index_io
@@ -353,7 +344,7 @@ def set_profile_stale(index_dir: str, stale: bool) -> None:
 # count flag the curve stale: the recall curve (unlike the delta-
 # maintained stats tables) is NOT delta-maintainable — it describes the
 # profiled vectors version, and a large silent mutation would leave the
-# planner believing a corpus that no longer exists (VERDICT r12 ask #2).
+# planner believing a corpus that no longer exists.
 # 10%: well inside the compaction contract's bounded-drift argument, and
 # coarse enough that streaming micro-appends never thrash the sidecar.
 PROFILE_GROWTH_FRACTION = 0.10
@@ -491,16 +482,12 @@ def measure_recall_curve(
                 cells_pdf["centroid_id"].to_numpy().tolist(),
             )
         )
-        # the query's centroid ordering — EXACTLY the probe selection's
-        # math (stable argsort over unrounded sq-L2, cf. ivf.DriverProbes),
-        # so curve ranks and probed sets agree
+        # the probe selector's own ordering, so curve ranks and probed
+        # sets agree
+        from webscale_vector_search_spark.operators.ivf import probe_order
+
         c_ids, C = handle.centroid_arrays()
-        qc2 = (
-            (Q * Q).sum(1)[:, None]
-            - 2.0 * (Q @ C.T)
-            + (C * C).sum(1)[None, :]
-        )
-        order = np.argsort(qc2, axis=1, kind="stable")
+        _, order = probe_order(Q, C)
         rank_of_slot = np.empty_like(order)
         nlist = len(c_ids)
         np.put_along_axis(
@@ -509,15 +496,10 @@ def measure_recall_curve(
         qpos = {int(q): i for i, q in enumerate(q_ids)}
         slot_of = {int(c): i for i, c in enumerate(c_ids)}
         cols = {
-            n: []
-            for n in (
-                "query_id", "nn_rank", "cell_rank", "cell_id", "scope",
-                "new_cell",
-            )
+            n: [] for n in ("query_id", "nn_rank", "cell_rank", "cell_id", "scope")
         }
 
         def emit(gt_arrs, scope):
-            seen: dict = {}
             for qid, rank, nid, dist in zip(
                 gt_arrs["query_id"], gt_arrs["rank"], gt_arrs["neighbor_id"],
                 gt_arrs["distance"],
@@ -529,14 +511,11 @@ def measure_recall_curve(
                 if slot is None:  # not in the centroid table (shouldn't happen)
                     continue
                 qk = int(qid)
-                new = cell not in seen.setdefault(qk, set())
-                seen[qk].add(cell)
                 cols["query_id"].append(qk)
                 cols["nn_rank"].append(int(rank))
                 cols["cell_rank"].append(int(rank_of_slot[qpos[qk], slot]) + 1)
                 cols["cell_id"].append(cell)
                 cols["scope"].append(scope)
-                cols["new_cell"].append(new)
 
         emit(gt, "all")
         if gt_x is not None:
@@ -548,17 +527,16 @@ def measure_recall_curve(
                 "cell_rank": pa.array(cols["cell_rank"], type=pa.int32()),
                 "cell_id": pa.array(cols["cell_id"], type=pa.int64()),
                 "scope": pa.array(cols["scope"], type=pa.string()),
-                "new_cell": pa.array(cols["new_cell"], type=pa.bool_()),
             }
         )
         _write_curve(out_dir, table)
-        # the per-(query, cell) nearest-member profile — the replay
-        # planner's input (cell_profile/ sidecar): member_rank is the
+        # the per-(query, cell) nearest-member profile (cell_profile/
+        # sidecar), the filtered plan's member prefix: member_rank is the
         # cell's rank by its closest row's distance to the query (ties by
         # cell id), center_rank the probe selector's ordering; their
         # disagreement IS the burstiness a center-rank-only planner
         # cannot see. Skipped past a bounded nlist (the table is nq x
-        # ncells; the planner then falls back to the closed form).
+        # ncells; the filtered plan then spreads no unobserved mass).
         if member_min and len(member_min) <= CELL_PROFILE_MAX_CELLS:
             cells_arr = np.array(sorted(member_min), dtype=np.int64)
             D = np.stack([member_min[int(c)] for c in cells_arr])  # (nc, nq)
@@ -590,19 +568,16 @@ def measure_recall_curve(
         else:
             # profile not measurable at this layout (nlist past the cap):
             # a sidecar left over from an earlier, smaller layout would
-            # keep feeding the replay planner stale geometry — drop it
+            # keep feeding the planner stale geometry — drop it
             import shutil
 
             shutil.rmtree(
                 os.path.join(out_dir, CELL_PROFILE_DIRNAME), ignore_errors=True
             )
         _write_profile_meta(out_dir, req_knobs)
-        # drop every cached derivative of the old curve on the handle —
-        # including the pair weights derived FROM the cell profile
-        handle.__dict__.pop("_cell_profile_pdf", None)
-        handle.__dict__.pop("_recall_curve_pdf", None)
-        handle.__dict__.pop("_profile_meta", None)
-        handle.__dict__.pop("_xw_cache", None)
+        # drop every cached derivative of the old curve on the handle
+        for name in ("_sidecars", "_profile_meta", "_georeplay_cache"):
+            handle.__dict__.pop(name, None)
         set_profile_stale(out_dir, False)  # a fresh profile is never stale
         return True
 
@@ -646,9 +621,8 @@ def measure_recall_curve(
         )
         _write_curve(out_dir, table)
         _write_profile_meta(out_dir, req_knobs)
-        handle.__dict__.pop("_recall_curve_pdf", None)
+        handle.__dict__.pop("_sidecars", None)
         handle.__dict__.pop("_profile_meta", None)
-        handle.__dict__.pop("_xw_cache", None)
         set_profile_stale(out_dir, False)  # a fresh profile is never stale
         return True
     return False
@@ -658,8 +632,8 @@ def reprofile_kwargs(stored: "dict | None") -> dict:
     """The measure_recall_curve kwargs that reproduce a stored profile's
     configuration: drops bookkeeping keys (n_vectors, the effective
     holdout) and maps the recorded `holdout_requested` back onto the
-    `holdout` parameter. Legacy profiles (pre-r13, no holdout record)
-    yield no holdout key — the re-profile takes the module default
+    `holdout` parameter. Profiles without a holdout record yield no
+    holdout key — the re-profile takes the module default
     (held-out), upgrading them at their next remediation point."""
     stored = stored or {}
     out = {n: stored[n] for n in ("nq", "kmax", "k", "seed") if n in stored}
@@ -733,49 +707,17 @@ def ensure_recall_curve(spark, index_dir: str, **kwargs) -> bool:
 
 
 def load_curve_pdf(handle):
-    """The curve sidecar as pandas, cached on the handle (dropped with the
-    rest of the handle state on a full reopen). None when absent."""
-    if handle.index_dir is None:
-        return None
-    cached = handle.__dict__.get("_recall_curve_pdf", False)
-    if cached is not False:
-        return cached
-    path = os.path.join(handle.index_dir, CURVE_DIRNAME)
-    pdf = None
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        import pyarrow.dataset as pads
-
-        pdf = pads.dataset(path, format="parquet").to_table().to_pandas()
-    handle._recall_curve_pdf = pdf
-    return pdf
+    return load_sidecar(handle, CURVE_DIRNAME)
 
 
-def nprobe_from_curve(handle, target: float, k: int, s=None) -> "int | None":
-    """Smallest probe budget whose MEASURED cell coverage of the effective
-    neighbor depth meets `target`, with RECALL_MARGIN headroom. The depth
-    is k unfiltered, ceil(k/s) under a selectivity-s filter (containment
-    bound — module docstring). None when no cell_rank curve exists or the
-    depth exceeds the profiled KMAX (callers fall back to the closed-form
-    planner)."""
+def nprobe_from_curve(handle, target: float, k: int) -> "int | None":
+    """Smallest probe count whose MEASURED cell coverage of the top-k meets
+    `target`, with RECALL_MARGIN headroom — the unfiltered recall_target
+    read. None when no cell_rank curve exists (callers keep the default)."""
     pdf = load_curve_pdf(handle)
     if pdf is None or "cell_rank" not in pdf.columns:
         return None
-    if "scope" in pdf.columns:
-        pdf = pdf[pdf["scope"] == "all"]
-    if s is not None and s <= 0:
-        return None
-    filtered = s is not None and s < 1
-    m = math.ceil(k / s) if filtered else k
-    kmax = int(pdf["nn_rank"].max())
-    if m > kmax:
-        return None
-    if filtered:
-        # the containment bound (filtered top-k within unfiltered
-        # top-(k/s)) holds in expectation, not per query — read the curve
-        # at a stricter quantile so its own slack doesn't stack on the
-        # bound's
-        target = 1.0 - (1.0 - target) / 2.0
-    cr = pdf.loc[pdf["nn_rank"] <= m, "cell_rank"].to_numpy()
+    cr = pdf.loc[(pdf["scope"] == "all") & (pdf["nn_rank"] <= k), "cell_rank"].to_numpy()
     if cr.size == 0:
         return None
     cr = np.sort(cr)
@@ -784,108 +726,14 @@ def nprobe_from_curve(handle, target: float, k: int, s=None) -> "int | None":
 
 
 def load_cell_profile_pdf(handle):
-    """The per-(query, cell) nearest-member profile as pandas, cached on
-    the handle. None when absent (pre-r11 artifact / nlist past the
-    profile cap)."""
-    if handle.index_dir is None:
-        return None
-    cached = handle.__dict__.get("_cell_profile_pdf", False)
-    if cached is not False:
-        return cached
-    path = os.path.join(handle.index_dir, CELL_PROFILE_DIRNAME)
-    pdf = None
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        import pyarrow.dataset as pads
-
-        pdf = pads.dataset(path, format="parquet").to_table().to_pandas()
-    handle._cell_profile_pdf = pdf
-    return pdf
-
-
-def profile_replay_nprobe(handle, target: float, k: int, mcells) -> "int | None":
-    """Filtered probe depth by REPLAYING the actual matching-cell set over
-    the measured per-(query, cell) nearest-member profile: for each
-    profiled query, walk its matching cells in MEMBER-nearest order (the
-    order the filtered top-k actually fills from) until the walked prefix
-    COVERS the filtered top-k, and the query's need is the deepest CENTER
-    rank among the walked cells — the probe selector walks center order,
-    and member-vs-center disagreement (cluster burstiness) is exactly what
-    depth-based containment reads miss. The budget is the target-quantile
-    of per-query needs.
-
-    Coverage criterion (r13): a matching cell holds a filtered top-k row
-    IFF its nearest matching member lies within the k-th matched distance
-    — so the top-k-holding cells are exactly a PREFIX of the member-
-    nearest order, of length at most k (each prefix cell's nearest member
-    is itself a top-k row). Walking min(k, n_matching) cells therefore
-    covers the filtered top-k by construction. The r12 form stopped at a
-    ROWS bar alone (REPLAY_SUPPLY*k reachable rows), which a single fat
-    cell satisfies — measured at the 100M label arm after the held-out
-    re-profile activated this replay there: the one-cell walk planned 30
-    probes serving 0.978 against the 0.99 target, where the prefix walk
-    must reach every cell whose nearest member outranks a within-cell
-    k-th row (hand-tuned need: 64). The rows bar is KEPT as the thin-
-    supply term (cells with few matched rows force a deeper walk to make
-    k matches reachable at all); the prefix bar is the fat-supply term
-    the rows bar structurally cannot see.
-
-    The r11 form distributed the UNFILTERED top-k's cross-cell pair
-    weights over the matching cells instead — but that spread arises from
-    own-cell competition, not thin supply, so it over-spreads whenever
-    per-cell matched supply is fat (measured 1.78x the hand-tuned need at
-    10M, VERDICT r11 #5).
-
-    `mcells`: {cell_id: matched_count} (attr_stats.matched_per_cell); a
-    bare cell-id iterable (legacy) treats each cell's supply as
-    unbounded (the rows bar is met immediately; the prefix bar still
-    walks min(k, n_matching) cells). None when no profile exists —
-    callers fall back to the closed-form planner."""
-    pdf = load_cell_profile_pdf(handle)
-    if pdf is None:
-        return None
-    counts = (
-        {int(c): float(v) for c, v in mcells.items()}
-        if hasattr(mcells, "items")
-        else {int(c): None for c in mcells}
-    )
-    if not counts:
-        return None
-    sub = pdf[pdf["cell_id"].isin(set(counts))].sort_values("member_rank")
-    if not len(sub):
-        return None
-    total_m = sum(v for v in counts.values() if v is not None)
-    need_rows = REPLAY_SUPPLY * k
-    if any(v is not None for v in counts.values()):
-        need_rows = min(need_rows, total_m)  # thin filters: all there is
-    needs = []
-    for q, g in sub.groupby("query_id"):
-        ranks = g["center_rank"].to_numpy()
-        need_cells = min(k, len(ranks))  # the member-prefix coverage bar
-        acc, depth = 0.0, 1
-        for walked, (cid, r) in enumerate(
-            zip(g["cell_id"].to_numpy(), ranks), start=1
-        ):
-            depth = max(depth, int(r))
-            c = counts.get(int(cid))
-            acc += need_rows if c is None else c
-            if acc >= need_rows and walked >= need_cells:
-                break
-        needs.append(depth)
-    if not needs:
-        return None
-    needs = np.sort(np.asarray(needs))
-    idx = min(len(needs) - 1, max(0, math.ceil(target * len(needs)) - 1))
-    return int(needs[idx])
+    return load_sidecar(handle, CELL_PROFILE_DIRNAME)
 
 
 def expected_replay_nprobe(
     handle, target: float, k: int, mcells, cell_totals
 ) -> "int | None":
-    """Filtered probe budget from an AGGREGATE-recall estimate over the
-    measured neighbor geometry — the r13 primary filtered read, replacing
-    the member-order supply walk's point estimate (kept as the fallback,
-    profile_replay_nprobe) whenever per-cell match FRACTIONS are
-    computable.
+    """The filtered probe plan: the smallest nprobe whose estimated
+    recall over the measured neighbor geometry meets `target`.
 
     Model, per profiled query: walk its measured true neighbors (the
     curve's (nn_rank, cell_id, cell_rank) rows — scope `all` when the
@@ -895,44 +743,23 @@ def expected_replay_nprobe(
     chance that row passes the filter) times the Poisson survival
     P(fewer than k matches seen before it) — the expected number of
     FILTERED top-k rows that neighbor contributes. Mass the profiled
-    truth cannot observe (hard queries: the profile's KMAX neighbors
-    exhaust before k expected matches — exactly the queries whose
-    matching cells are far) is assigned one-row-per-cell across the
-    query's member-nearest matching-cell prefix (profile_replay_nprobe's
-    coverage theorem: the top-k-holding cells are a <=k prefix of that
-    order). Aggregate recall at budget p = mean over queries of the
-    per-query mass fraction within center rank <= p; the pick is the
-    smallest p meeting the strict quantile 1-(1-target)/RECALL_MARGIN —
-    the module's uniform sample-noise headroom, read on the quantile
-    side exactly as ef_from_curve reads the ef ladder; no additional
-    multiplier (the estimator is calibrated against measured geometry,
-    not a point guess).
+    truth cannot observe (the profile's KMAX neighbors exhaust before k
+    expected matches — the queries whose matching cells are far) is
+    assigned one-row-per-cell across the query's first k matching cells
+    in member-nearest order (cell_profile/): a matching cell holds a
+    filtered top-k row only if its nearest matching member does, so the
+    top-k-holding cells are a <= k prefix of that order. Recall at
+    nprobe p = mean over queries of the per-query mass fraction within
+    center rank <= p; the pick is the smallest p meeting the strict
+    quantile 1-(1-target)/RECALL_MARGIN, the same sample-noise headroom
+    ef_from_curve reads the ef ladder with.
 
-    Validated against the 100M label-arm hand sweep (BENCH_DETAIL
-    `filtered_hand_sweep`): est/measured recall 0.94/0.93 at nprobe 16,
-    0.983/0.978 at 32, 0.993/0.994 at 64; the pick (62) serves 0.994 at
-    0.97x the hand-tuned need — where the r12-era supply walk's one-cell
-    stop planned 30 and served 0.978 (the regression this function
-    fixes), and the worst-case prefix bound alone would plan 374. At the
-    1M/10M label arms: 146 (1.14x the hand 128, recall >=0.999) and 60
-    (recall 0.999; the power-of-2 hand rung 32 reads 0.9900 EXACTLY — a
-    knife-edge the estimator's one hard profiled query, holding ~1.6% of
-    the mass at prefix rank 60, refuses to plan to).
-
-    None when unanswerable (no curve with cell ids, no per-cell totals,
-    counts-less mcells) — callers fall back to the supply-walk +
-    RECALL_MARGIN path."""
+    `mcells` is {cell_id: matched rows} (attr_stats.matched_per_cell),
+    `cell_totals` {cell_id: rows}. None when unanswerable (no curve with
+    cell ids, no per-cell totals, no matching cell) — the caller then
+    falls back to ceil(base/s)."""
     pdf = load_curve_pdf(handle)
-    if (
-        pdf is None
-        or "cell_rank" not in pdf.columns
-        or "cell_id" not in pdf.columns
-        or "scope" not in pdf.columns
-        or not hasattr(mcells, "items")
-        or not mcells
-        or not cell_totals
-        or any(v is None for v in mcells.values())
-    ):
+    if pdf is None or "cell_id" not in pdf.columns or not mcells or not cell_totals:
         return None
     key = (
         "georeplay",
@@ -1001,7 +828,7 @@ def expected_replay_nprobe(
             per_q.append((np.asarray(rk), np.asarray(wt)))
     per_q = [(rk, w) for rk, w in per_q if w.sum() > 0]
     if not per_q:
-        _cache_small(cache, key, None)
+        _cache_put(cache, key, None)
         return None
     strict = 1.0 - (1.0 - target) / RECALL_MARGIN
     # mean-of-per-query-fractions == pooled sum of per-query-normalized
@@ -1016,37 +843,8 @@ def expected_replay_nprobe(
         pick = int(ranks[order][met[0]])
     else:
         pick = int(ranks[order][-1])
-    _cache_small(cache, key, pick)
+    _cache_put(cache, key, pick)
     return pick
-
-
-def _cache_small(cache: dict, key, val, cap: int = 64) -> None:
-    if len(cache) >= cap:
-        cache.pop(next(iter(cache)))
-    cache[key] = val
-
-
-def xcell_need_cells(handle, k: int) -> "int | None":
-    """How many DISTINCT cells the top-k OUT-OF-OWN-CELL neighbors span,
-    maxed over the profiled sample — the measured `need_cells` for the
-    query-adaptive filtered planner. This is the density-dependent
-    quantity fixed constants kept missing: sparse clusters spread the
-    cross-cell top-k over many cells (measured-need ~128 probes at the 1M
-    bench tier), dense ones concentrate it (need ~40 at 10M with MORE
-    cells) — both fall out of the same profile. None when the curve
-    predates the xcell scope or k exceeds the profiled depth."""
-    pdf = load_curve_pdf(handle)
-    if pdf is None or "scope" not in pdf.columns:
-        return None
-    xall = pdf[pdf["scope"] == "xcell"]
-    if not len(xall):
-        return None
-    if k > int(xall["nn_rank"].max()):
-        return None  # beyond the profiled cross-cell depth
-    counts = xall[xall["nn_rank"] <= k].groupby("query_id")["new_cell"].sum()
-    if not len(counts):
-        return None
-    return int(counts.max())
 
 
 def ef_from_curve(handle, target: float, k: int) -> "int | None":
